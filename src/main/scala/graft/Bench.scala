@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec",...} (full per-query map in
@@ -25,6 +27,18 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
   * unused projections — dishonest timing).
   */
 object Bench {
+
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b.append('"').toString
+  }
 
   /** Queries that run SERIALLY, before the pool, each with the whole
     * local cluster to itself — the way a real cluster schedules its big
@@ -108,6 +122,8 @@ object Bench {
     // concurrently recomputes the most expensive intermediate once per
     // consumer (the r5 stampede). The builder's time carries the build
     // cost; dependents read the cache.
+    // the latest failure of each query, across every pass
+    val errors = new ConcurrentHashMap[String, Throwable]()
     def runPass(dir: String, serial: Boolean = false): (Double, Map[String, Double]) = {
       val times = new ConcurrentHashMap[String, Double]()
       def runOne(n: String): Unit = {
@@ -116,7 +132,11 @@ object Bench {
           SparkEntry.queries(n)(spark, dir)
             .write.format("noop").mode("overwrite").save()
           times.put(n, (System.nanoTime() - s0) / 1e9)
-        } catch { case _: Throwable => times.put(n, -1.0) }
+        } catch {
+          case NonFatal(e) =>
+            times.put(n, -1.0)
+            errors.put(n, e)
+        }
       }
       val t0 = System.nanoTime()
       // Shared-cache builders run to completion BEFORE their dependents
@@ -254,7 +274,15 @@ object Bench {
         .map(k => "\"" + k + "\":" + st.getOrElse(k, -1.0)).mkString("{", ",", "}")
       s""","serial_wall":${math.round(sw * 100) / 100.0},"serial_queries":$sq"""
     }.getOrElse("")
-    val detail = s"""{"metric":"total","value":$wall,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+    // a query that failed in every measured pass keeps its -1.0 timing
+    // above; its last exception sits next to it, keyed by query
+    val errorsJson = sortedNames
+      .filter(n => times.getOrDefault(n, -1.0) < 0 && errors.containsKey(n)).map { n =>
+        val e = errors.get(n)
+        s"""${jsonString(n)}:{"class":${jsonString(e.getClass.getName)},""" +
+          s""""message":${jsonString(String.valueOf(e.getMessage))}}"""
+      }.mkString("{", ",", "}")
+    val detail = s"""{"metric":"total","value":$wall,"unit":"sec","queries":$qs,"errors":$errorsJson,"sf":"$sfDir",""" +
       s""""threads":$threads,"passes":${results.size},"pass_walls":$passWalls,"sum_queries":$sumQ$serialJson,""" +
       s""""note":"value = min suite wall over ${results.size} passes at ${threads}-way concurrency, after one unmeasured full-suite warm-up pass${warmDir.map(d => s" at $d").getOrElse("")} (min is stall-robust on this intermittently-frozen host); per-query = min across passes; sum_queries = per-query sum (upper bound on serial cost); serial_queries = per-query min over $serialPasses contention-free sequential pass(es) (separates host noise from plan cost)"}"""
     // Per-query detail goes to a sidecar file AND an early stdout line;

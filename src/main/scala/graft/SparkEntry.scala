@@ -223,6 +223,7 @@ object SparkEntry {
     w2vCache.clear() // driver-side models, nothing persisted
     unigramCache.clear()
     hnsw8Cache.clear() // blocks released via Materialize.releaseAll above
+    graft.search.Hnsw.releaseResident() // graphs rehydrated by stored-index searches
     plannerIndexCache.values().forEach(p => graft.plans.AnnIndexRewrite.unregister(p))
     plannerIndexCache.clear()
     plannerCosineIndexCache.values().forEach(p => graft.plans.AnnIndexRewrite.unregister(p))
@@ -315,7 +316,7 @@ object SparkEntry {
       graft.plans.AnnIndexRewrite.register(s"$dir/embeddings.parquet",
         graft.plans.AnnIndexRewrite.IndexSpec(s.read.parquet(tmp), cent,
           nprobe = 8, efSearch = 4096, overfetch = 2,
-          indexPath = Some(tmp), // fresh exprIds per splice
+          indexPath = Some(tmp), // names the index in the probe memo keys
           // nprobe = all 8 cells, efSearch >> any cell: the probe's
           // candidates are the true global top-K', which the FILTERED
           // rewrites' exactness argument requires (declared, not
@@ -5085,8 +5086,8 @@ object SparkEntry {
 
     // The STORED-index twin of ann_hnsw_ivf_routed: every cell graph is
     // built ONCE (Hnsw.buildRoutedIndex — the build-once/search-many
-    // split that keeps graph construction out of query latency; on a
-    // cell-partitioned parquet table the probe prunes the scan to
+    // split that keeps graph construction out of query latency; the
+    // rehydrated cell graphs stay resident and a probe walks only its
     // nprobe cells), then searched. Per-cell builds use the same
     // ascending-id insertion as the query-time path, so the stored walk
     // hash-matches the SAME closed-form IVF-probe oracle — storage

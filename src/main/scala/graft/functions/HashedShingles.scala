@@ -116,20 +116,14 @@ case class HashedShinglePositionsExpr(child: Expression, n: Int)
 }
 
 object HashedShingles {
-  /** Register graft_shingles(text, n) / graft_shingle_pos(text, n) and
-    * return Column builders.
+  /** Idempotently register graft_shingles(text, n) /
+    * graft_shingle_pos(text, n); the Column builders are below.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => HashedShinglesExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_pos",
-      exprs => HashedShinglePositionsExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
+    SessionFunctions.ensure(spark, "graft_shingles")(exprs =>
+      HashedShinglesExpr(exprs(0), exprs(1).eval(null).asInstanceOf[Number].intValue()))
+    SessionFunctions.ensure(spark, "graft_shingle_pos")(exprs =>
+      HashedShinglePositionsExpr(exprs(0), exprs(1).eval(null).asInstanceOf[Number].intValue()))
   }
 
   def apply(text: Column, n: Int): Column =

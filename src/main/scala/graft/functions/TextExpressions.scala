@@ -30,14 +30,14 @@ object TextExpressions {
     h
   }
 
+  /** Idempotently register graft_simhash64 / graft_lang_id /
+    * graft_word_ngrams in the session's function registry.
+    */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64Expr(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lang_id", exprs => LangIdExpr(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_ngrams", exprs => WordNgramsExpr(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()), "scala_udf")
+    SessionFunctions.ensure(spark, "graft_simhash64")(exprs => SimHash64Expr(exprs(0)))
+    SessionFunctions.ensure(spark, "graft_lang_id")(exprs => LangIdExpr(exprs(0)))
+    SessionFunctions.ensure(spark, "graft_word_ngrams")(exprs =>
+      WordNgramsExpr(exprs(0), exprs(1).eval(null).asInstanceOf[Number].intValue()))
   }
 
   def simHash64(c: Column): Column = call_function("graft_simhash64", c)

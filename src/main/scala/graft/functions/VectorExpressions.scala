@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -210,20 +211,32 @@ case class DoubleVecDot(left: Expression, right: Expression) extends FloatVecBin
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
+/** Registers a native expression under `name` in `spark`'s function
+  * registry only when that session does not have it yet — the shared
+  * step of every `ensureRegistered` here. Replacing an existing entry
+  * would log a SimpleFunctionRegistry WARN on every call.
+  */
+private[functions] object SessionFunctions {
+  def ensure(spark: SparkSession, name: String)(build: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
+  }
+}
+
 /** Session registration + Column API for the codegen'd expressions. */
 object VectorExpressions {
-  /** Idempotently register graft_l2sq / graft_dot / graft_l2sq_d in the
-    * session's function registry (also makes them SQL-callable).
+  /** Idempotently register graft_l2sq / graft_dot / graft_l2sq_d /
+    * graft_dot_d in the session's function registry (also makes them
+    * SQL-callable).
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq", exprs => FloatVecL2Sq(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq_d", exprs => DoubleVecL2Sq(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_d", exprs => DoubleVecDot(exprs(0), exprs(1)), "scala_udf")
+    SessionFunctions.ensure(spark, "graft_l2sq")(exprs => FloatVecL2Sq(exprs(0), exprs(1)))
+    SessionFunctions.ensure(spark, "graft_dot")(exprs => FloatVecDot(exprs(0), exprs(1)))
+    SessionFunctions.ensure(spark, "graft_l2sq_d")(exprs => DoubleVecL2Sq(exprs(0), exprs(1)))
+    SessionFunctions.ensure(spark, "graft_dot_d")(exprs => DoubleVecDot(exprs(0), exprs(1)))
   }
 
   def l2Sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)

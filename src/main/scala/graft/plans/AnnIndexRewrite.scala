@@ -30,14 +30,15 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   *
   * Rewrite shape: the scan side is semi-joined with the stored-index
   * probe's candidate ids ([[graft.search.Hnsw.searchRoutedIndex]] —
-  * route, prune to nprobe cells, walk, merge), and the ORIGINAL
-  * Sort+Limit re-rank the k·overfetch candidates exactly:
+  * route on the driver, walk the nprobe cells' resident graphs, merge),
+  * and the ORIGINAL Sort+Limit re-rank the k·overfetch candidates
+  * exactly:
   *
   * {{{ Limit k → Sort(dist ASC) → Project → (Scan ⋉ indexProbe(qv)) }}}
   *
   * - At 100 TB the Sort's input shrinks from n rows to k·overfetch
-  *   rows; the probe itself reads only the probed cells of the
-  *   cell-partitioned index table (partition pruning).
+  *   rows; the probe reads no index file once the registered index's
+  *   cell graphs are resident, and walks only the probed cells.
   * - Results are IDENTICAL to the exact plan whenever the probe's
   *   candidate set contains the true top-k (guaranteed at exhaustive
   *   nprobe/efSearch, the registration used by the oracle-checked
@@ -134,7 +135,10 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * raw vectors, or "cosine" over L2-normalized copies (see the
     * class doc). `exhaustiveProbe` declares that nprobe covers every
     * cell and efSearch exceeds every cell size — the precondition for
-    * the filtered rewrites' exactness argument.
+    * the filtered rewrites' exactness argument. Every probe walks
+    * `index` itself (its cell graphs stay resident, see
+    * [[graft.search.Hnsw.searchRoutedIndex]]); `indexPath` only names
+    * the index in the probe memo keys.
     */
   final case class IndexSpec(
       index: DataFrame,
@@ -152,7 +156,15 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       // default overfetch headroom)
       filteredOverfetch: Int = 16,
       metric: String = "l2",
-      exhaustiveProbe: Boolean = false)
+      exhaustiveProbe: Boolean = false) {
+
+    /** The centroids on the driver, collected at the first probe and
+      * kept for the registration's lifetime: routing is a driver-side
+      * ranking of parameter-bounded centroids, not a job per probe.
+      */
+    private[plans] lazy val centroidRows: Array[(Int, Array[Float])] =
+      graft.search.Hnsw.collectCentroids(centroids)
+  }
 
   /** Fitted indexes keyed by (normalized source path, metric). One
     * table may carry both an L2 and a cosine index. Registration is
@@ -171,7 +183,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
   def register(sourcePath: String, spec: IndexSpec): Unit = {
     require(Metrics.contains(spec.metric), s"unknown metric '${spec.metric}'")
     val key = regKey(sourcePath, spec.metric)
-    registry.put(key, spec)
+    registry.put(key, spec).foreach(release)
     // Freeze the source's file listing AT registration: the index is a
     // snapshot of the table's content, and the exactness contract
     // (candidates ⊇ true top-k at exhaustive knobs) only holds while
@@ -187,7 +199,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
   def unregister(sourcePath: String): Unit = {
     Metrics.foreach { m =>
       val key = regKey(sourcePath, m)
-      registry.remove(key)
+      registry.remove(key).foreach(release)
       sourceSigs.remove(key)
       staleChecks.remove(key)
     }
@@ -195,9 +207,16 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
   }
 
   def clear(): Unit = {
-    registry.clear(); sourceSigs.clear(); staleChecks.clear()
+    registry.keys.foreach(k => registry.remove(k).foreach(release))
+    sourceSigs.clear(); staleChecks.clear()
     invalidateProbeCaches()
   }
+
+  /** Unpersist the resident cell graphs a dropped registration's probes
+    * built.
+    */
+  private def release(spec: IndexSpec): Unit =
+    graft.search.Hnsw.releaseResident(spec.index)
 
   /** Clear the plan-time memoization (staleness verdicts + probe
     * decisions) WITHOUT touching any registration — the retry-once path
@@ -291,7 +310,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
         staleChecks.put(key, (now, fresh))
         verdict match {
           case Some(false) =>
-            registry.remove(key)
+            registry.remove(key).foreach(release)
             sourceSigs.remove(key)
             invalidateProbeCaches()
             droppedStale.incrementAndGet()
@@ -416,7 +435,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
             // would fail at execution. Self-heal by dropping it — the
             // query falls back to the exact plan (the rule's contract).
             if (spec.index.sparkSession.sparkContext.isStopped) {
-              registry.remove(key); None
+              registry.remove(key).foreach(release); None
             } else if (cur.isEmpty) {
               if (warnedNoSession.compareAndSet(false, true)) {
                 logWarning("graft ANN rewrite: no current session to check " +
@@ -579,14 +598,25 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     }
   }
 
+  /** The registered index's candidate probe for `queries`: routed on
+    * the driver against the registration's centroids, walked over the
+    * index's resident cell graphs. A fresh RDD-backed plan on every
+    * call, so splicing two probes into one query cannot collide.
+    */
+  private def probe(spec: IndexSpec, queries: Array[(Long, Array[Float])],
+      k: Int): DataFrame =
+    graft.search.Hnsw.searchRouted(spec.index.sparkSession, queries, spec.index,
+      spec.centroidRows, k, spec.nprobe, m = 16, efConstruction = 100,
+      efSearch = spec.efSearch, qidCol = "qid", idCol = spec.idCol, embCol = spec.embCol)
+
   /** Rewrite one `Sort(dist ASC) → Project → Scan` subtree (already
     * known to sit under a Limit k) into
     * `Sort(dist ASC) → Project → (Scan ⋉ probe)`, or None if the shape
     * / registration / sort key doesn't qualify.
     */
-  private def rewriteSort(srt: Sort, k: Int, guard: IndexSpec => Boolean,
+  private def rewriteSort(srt: Sort, k: Int,
       cur: Option[SparkSession]): Option[Sort] =
-    try rewriteSortUnsafe(srt, k, guard, cur)
+    try rewriteSortUnsafe(srt, k, cur)
     catch {
       // The planner contract: a failed ACCELERATION attempt (corrupt
       // index files, a mid-flight dropped registration, an unexpected
@@ -652,12 +682,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   // cannot collide)
                   s"qv=${qv.mkString(",")}|cond=${flt.condition.sql}"
                 val decision = memoProbe(cacheKey)({
-                  import spark.implicits._
-                  val idx = spec.indexPath.map(spark.read.parquet(_)).getOrElse(spec.index)
-                  val candIds = graft.search.Hnsw.searchRoutedIndex(
-                    spark, Seq((0L, qv)).toDF("qid", "qemb"), idx, spec.centroids,
-                    k = kp, nprobe = spec.nprobe, efSearch = spec.efSearch,
-                    idCol = spec.idCol, embCol = spec.embCol)
+                  val candIds = probe(spec, Array((0L, qv)), kp)
                     .select(spec.idCol).collect().map(_.get(0)).toIndexedSeq
                   val candIn = In(leftId,
                     candIds.map(v => Literal.create(v, leftId.dataType)))
@@ -693,7 +718,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewriteSortUnsafe(srt: Sort, k: Int, guard: IndexSpec => Boolean,
+  private def rewriteSortUnsafe(srt: Sort, k: Int,
       cur: Option[SparkSession]): Option[Sort] = srt match {
     case Sort(SortOrder(key, Ascending, _, _) +: _, true,
         p @ Project(projList, flt @ Filter(_, _)), _) =>
@@ -701,27 +726,13 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     case Sort(SortOrder(key, Ascending, _, _) +: _, true,
         p @ Project(projList, leaf), _) =>
       queryVectorOf(key, projList).flatMap { case (qv, embAttr, metric) =>
-        specOf(leaf, metric, cur).filter(guard).flatMap { spec =>
+        specOf(leaf, metric, cur).flatMap { spec =>
           leaf.output.find(_.name == spec.idCol) match {
             case Some(leftId)
                 if leaf.outputSet.contains(embAttr) && embAttr.name == spec.embCol =>
-              val spark = spec.index.sparkSession
-              import spark.implicits._
-              // exprId hygiene for MULTIPLE patterns in one query: a
-              // path-backed spec splices a FRESH read per rewrite (fresh
-              // relation attrs every time); a DataFrame-backed spec can
-              // only be spliced once per plan — if its attrs are already
-              // in the tree, this match keeps the exact plan (never
-              // wrong, only unaccelerated).
-              val idx = spec.indexPath.map(spark.read.parquet(_)).getOrElse(spec.index)
-              val probe = graft.search.Hnsw.searchRoutedIndex(
-                spark, Seq((0L, qv)).toDF("qid", "qemb"),
-                idx, spec.centroids,
-                k = math.max(k, 1) * math.max(spec.overfetch, 1),
-                nprobe = spec.nprobe, efSearch = spec.efSearch,
-                idCol = spec.idCol, embCol = spec.embCol)
-                .select(spec.idCol)
-              val right = EliminateSubqueryAliases(probe.queryExecution.analyzed)
+              val cands = probe(spec, Array((0L, qv)),
+                math.max(k, 1) * math.max(spec.overfetch, 1)).select(spec.idCol)
+              val right = EliminateSubqueryAliases(cands.queryExecution.analyzed)
               val join = Join(leaf, right, LeftSemi,
                 Some(EqualTo(leftId, right.output.head)), JoinHint.NONE)
               fired.incrementAndGet()
@@ -1012,12 +1023,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                       } else {
                         val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
                           (if (filtered) math.max(spec.filteredOverfetch, 1) else 1)
-                        val idx = spec.indexPath.map(spark.read.parquet(_))
-                          .getOrElse(spec.index)
-                        val probe = graft.search.Hnsw.searchRoutedIndex(
-                          spark, qdfProbe, idx, spec.centroids,
-                          k = kp, nprobe = spec.nprobe, efSearch = spec.efSearch,
-                          idCol = spec.idCol, embCol = spec.embCol)
+                        val cands = probe(spec, graft.search.Hnsw.collectQueries(qdfProbe), kp)
                         // Collected once for BOTH branches: the per-query
                         // guards below must run over the FULL query-side qid
                         // set, not just qids present in the probe output — a
@@ -1028,7 +1034,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                         // silently re-rank over neighbors that aren't its own.
                         val allQids = qdf.select("qid")
                           .collect().map(_.get(0)).toSet
-                        val pairs = probe
+                        val pairs = cands
                           .select(org.apache.spark.sql.functions.col("qid"),
                             org.apache.spark.sql.functions.col(spec.idCol))
                           .collect().map(row => (row.get(0), row.get(1)))
@@ -1098,16 +1104,6 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** A DataFrame-backed spec's index attrs, for the spliced-once guard
-    * (a path-backed spec reads fresh attrs per splice and needs none).
-    */
-  private def dfSpecAttrs(): org.apache.spark.sql.catalyst.expressions.AttributeSet = {
-    val specs = registry.values.filter(_.indexPath.isEmpty)
-    specs.foldLeft(org.apache.spark.sql.catalyst.expressions.AttributeSet.empty) {
-      (acc, sp) => acc ++ sp.index.queryExecution.analyzed.outputSet
-    }
-  }
-
   /** The bare object remains a usable Rule (specs apply it directly;
     * `spark.experimental.extraOptimizations` users too) — it falls back
     * to the THREAD-LOCAL active session for the ownership check. The
@@ -1120,19 +1116,10 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
 
   def applyWith(plan: LogicalPlan, cur: Option[SparkSession]): LogicalPlan = {
     if (!enabled || registry.isEmpty) return plan
-    // exprId hygiene: a DataFrame-backed spec holds ONE analyzed index
-    // subtree, so splicing it twice into one plan would duplicate its
-    // exprIds (attribute-binding corruption). If its attrs are already
-    // anywhere in this plan, further matches keep the exact path.
-    // Path-backed specs are immune — each splice reads fresh.
-    var dfSpliced = plan.collectLeaves()
-      .exists(l => l.outputSet.intersect(dfSpecAttrs()).nonEmpty)
-    def guardDf(spec: IndexSpec): Boolean =
-      spec.indexPath.isDefined || { val ok = !dfSpliced; if (ok) dfSpliced = true; ok }
     plan.transformDown {
       // the analyzed shape: Limit directly over the Sort
       case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, srt: Sort)) =>
-        rewriteSort(srt, k, guardDf, cur)
+        rewriteSort(srt, k, cur)
           .map(ns => gl.copy(child = ll.copy(child = ns)))
           .getOrElse(gl)
       // after projection pushdown the optimizer moves row-preserving
@@ -1142,7 +1129,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       case gl @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, mid @ Project(midList, srt: Sort)))
           if midList.forall(_.deterministic) =>
-        rewriteSort(srt, k, guardDf, cur)
+        rewriteSort(srt, k, cur)
           .map(ns => gl.copy(child = ll.copy(child = mid.copy(child = ns))))
           .getOrElse(gl)
       // the BATCH shape: rank-filtered row_number window over a

@@ -73,8 +73,9 @@ class AnnRewriteSpec extends GraftSpec {
       val after = AnnIndexRewrite(before)
       val joins = after.collect { case j: Join if j.joinType == LeftSemi => j }
       assert(joins.size === 1, "exactly one probe semi-join spliced")
-      assert(after.toString.contains("MapPartitions"),
-        "the probe side carries the per-cell graph walk")
+      val probeSide = joins.head.right
+      assert(probeSide.collectLeaves().map(_.nodeName) === Seq("ExternalRDD"),
+        "the probe side is the walk over the resident cell graphs, reading no index file")
     } finally AnnIndexRewrite.clear()
   }
 
@@ -686,6 +687,39 @@ class AnnRewriteSpec extends GraftSpec {
         "path-backed spec must accelerate BOTH patterns (fresh reads per splice)")
       val got2 = df2.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
       assert(got2.toSeq === expected.toSeq)
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      AnnIndexRewrite.clear()
+    }
+  }
+
+  test("unregister, clear and clearCaches each release the resident routed graphs") {
+    // a probe makes the registered index's cell graphs resident (one
+    // persisted RDD); dropping the registration must unpersist it. Ids,
+    // not counts: the ContextCleaner may unpersist garbage from earlier
+    // tests at any moment, but never adds a persisted RDD.
+    VectorExpressions.ensureRegistered(spark)
+    AnnIndexRewrite.clear()
+    SparkEntry.clearCaches()
+    val cent = IvfIndex.seedCentroids(emb, 4)
+    val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val releases = Seq[(String, () => Unit)](
+      "unregister" -> (() => AnnIndexRewrite.unregister(srcPath)),
+      "clear" -> (() => AnnIndexRewrite.clear()),
+      "clearCaches" -> (() => SparkEntry.clearCaches()))
+    spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
+    try releases.foreach { case (name, release) =>
+      val before = persisted
+      AnnIndexRewrite.register(srcPath,
+        AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096))
+      val df = pattern(qv0)
+      assert(semiJoins(df).size === 1)
+      df.collect()
+      assert((persisted -- before).size === 1, s"$name: the probe made the cell graphs resident")
+      release()
+      assert((persisted -- before).isEmpty, s"$name must release the resident graphs")
+      AnnIndexRewrite.clear()
     } finally {
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()

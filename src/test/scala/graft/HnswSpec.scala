@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, FileSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.eval.RecallAtK
+import graft.functions.{VectorExpressions, VectorFunctions}
 import graft.model.Tables
 import graft.search.{Hnsw, IvfIndex, KnnExact}
 
@@ -254,14 +259,22 @@ class HnswSpec extends GraftSpec {
       val persisted = Hnsw.searchRoutedIndex(spark, queries, stored, cent,
         k = 10, nprobe = 2)
       assert(persisted.exceptAll(oneShot).isEmpty && oneShot.exceptAll(persisted).isEmpty)
-      // the probe must PRUNE the partitioned scan: the executed plan's
-      // scan reads only the probed cells' partition dirs
+      // the probe must PRUNE to the probed cells: the walk reads no index
+      // file (the cell graphs are resident) and runs only on partitions
+      // holding a probed cell
       val pruned = Hnsw.searchRoutedIndex(spark, queries, stored, cent,
         k = 10, nprobe = 1)
-      val scan = pruned.queryExecution.executedPlan.collectLeaves()
-        .map(_.toString).mkString("\n")
-      assert(scan.contains("PartitionFilters") || scan.contains("cell IN") ||
-        scan.contains("isin"), s"probed-cell filter must reach the scan:\n$scan")
+      val leaves = (pruned.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }).collectLeaves()
+      assert(!leaves.exists(_.isInstanceOf[FileSourceScanExec]),
+        s"a resident probe scans no index file:\n${leaves.mkString("\n")}")
+      val probedCells = Hnsw.route(Hnsw.collectQueries(queries),
+        Hnsw.collectCentroids(cent), nprobe = 1).size
+      val walked = leaves.collect { case e: ExternalRDDScanExec[_] => e.rdd.getNumPartitions }
+      assert(probedCells < 8 && walked === Seq(probedCells),
+        s"the walk must run on the $probedCells probed cells' partitions only, ran on $walked")
     } finally {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -287,5 +300,169 @@ class HnswSpec extends GraftSpec {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
+  }
+
+  // ---- resident serving -------------------------------------------------
+
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir)
+    finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
+  /** (qid, vec_id, rk, raw dist bits), sorted: equality is bit-level. */
+  private def rowsOf(df: DataFrame): Seq[(Long, Long, Int, Long)] =
+    df.select("qid", "vec_id", "rk", "dist").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      .sorted
+
+  /** The rebuild-per-call search the resident path replaced, kept here as
+    * the reference: every call re-reads the whole index, rehydrates every
+    * graph from its adjacency rows, walks it (only the routed queries when
+    * `routes` is given, over-fetching by the tombstone count) and merges
+    * the per-query top-k by (dist, id).
+    */
+  private def rebuiltPerCall(index: DataFrame, keyCol: String,
+      qs: Array[(Long, Array[Float])], routes: Option[Map[Int, Seq[Long]]],
+      k: Int, efSearch: Int = 128, tomb: Set[Long] = Set.empty): Seq[(Long, Long, Int, Long)] = {
+    import spark.implicits._
+    val fetch = k + tomb.size
+    val byQid = qs.toMap
+    val cands = index.select(col(keyCol), col("vec_id"), col("embedding"), col("nbrs"))
+      .as[(Int, Long, Array[Float], Array[Array[Long]])].collect()
+      .groupBy(_._1).toSeq.flatMap { case (key, rows) =>
+        val g = Hnsw.graphFromAdjacency(rows.map(r => (r._2, r._3, r._4)), 16, 100)
+        val mine = routes.fold(qs.toSeq)(_.getOrElse(key, Nil).map(q => (q, byQid(q))))
+        mine.flatMap { case (qid, qv) =>
+          g.search(qv, fetch, math.max(efSearch, fetch))
+            .filterNot(r => tomb.contains(r._1)).map { case (id, d) => (qid, id, d) }
+        }
+      }
+    cands.groupBy(_._1).toSeq.flatMap { case (qid, cs) =>
+      cs.sortBy(c => (c._3, c._2))(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k).zipWithIndex.map { case ((_, id, d), i) =>
+          (qid, id, i + 1, java.lang.Double.doubleToRawLongBits(d))
+        }
+    }.sorted
+  }
+
+  /** The SQL routing the driver-side router replaced: a broadcast
+    * query × centroid cross join ranked by a (cdist, cid) window.
+    */
+  private def sqlRoutes(qs: DataFrame, cent: DataFrame, nprobe: Int): Map[Int, Seq[Long]] = {
+    import spark.implicits._
+    VectorExpressions.ensureRegistered(spark)
+    val w = Window.partitionBy(col("qid")).orderBy(col("cdist").asc, col("cid").asc)
+    broadcast(qs).crossJoin(broadcast(cent))
+      .withColumn("cdist", VectorFunctions.l2Fast(col("qemb"), col("cemb")))
+      .withColumn("crk", row_number().over(w))
+      .filter(col("crk") <= nprobe)
+      .select(col("qid"), col("cid")).as[(Long, Int)].collect()
+      .groupBy(_._2).map { case (c, ps) => c -> ps.map(_._1).sorted.toSeq }
+  }
+
+  private def driverRoutes(qs: DataFrame, cent: DataFrame, nprobe: Int): Map[Int, Seq[Long]] =
+    Hnsw.route(Hnsw.collectQueries(qs), Hnsw.collectCentroids(cent), nprobe)
+      .map { case (c, ids) => c -> ids.toSeq }
+
+  test("resident searches equal a rebuild-per-call reference bit for bit, call after call") {
+    val cent = IvfIndex.seedCentroids(emb, 8)
+    val qs = Hnsw.collectQueries(queries)
+    withTempDir("graft_hnsw_resident") { dir =>
+      Hnsw.buildIndex(spark, emb).write.parquet(s"$dir/seg")
+      Hnsw.buildRoutedIndex(spark, emb, cent).write.partitionBy("cell").parquet(s"$dir/cell")
+      val routes = sqlRoutes(queries, cent, 2)
+      val refSeg = rebuiltPerCall(spark.read.parquet(s"$dir/seg"), "seg", qs, None, 10)
+      // tombstone some of each query's true neighbors
+      val dead = refSeg.filter(r => r._3 >= 2 && r._3 <= 4).map(_._2).toSet
+      val refTomb = rebuiltPerCall(spark.read.parquet(s"$dir/seg"), "seg", qs, None, 10, tomb = dead)
+      val refCell = rebuiltPerCall(spark.read.parquet(s"$dir/cell"), "cell", qs, Some(routes), 10)
+      assert(refTomb !== refSeg, "the tombstones must displace results, or the check proves nothing")
+      val loaded = (1 to 3).map { _ =>
+        // a fresh read of unchanged files every call: same index version
+        assert(rowsOf(Hnsw.searchIndex(spark, queries, spark.read.parquet(s"$dir/seg"), 10)) === refSeg)
+        assert(rowsOf(Hnsw.searchIndexTombstoned(spark, queries,
+          spark.read.parquet(s"$dir/seg"), dead.toSeq, 10)) === refTomb)
+        assert(rowsOf(Hnsw.searchRoutedIndex(spark, queries,
+          spark.read.parquet(s"$dir/cell"), cent, 10, nprobe = 2)) === refCell)
+        Hnsw.graphsRehydrated.get()
+      }
+      assert(loaded(1) === loaded(0) && loaded(2) === loaded(0),
+        s"repeated searches must not rehydrate again: $loaded")
+      Hnsw.releaseResident(spark.read.parquet(s"$dir/seg"))
+      Hnsw.releaseResident(spark.read.parquet(s"$dir/cell"))
+    }
+  }
+
+  test("an index overwritten in place and re-read answers from the new graphs") {
+    val qs = Hnsw.collectQueries(queries)
+    withTempDir("graft_hnsw_overwrite") { tmp =>
+      val dir = s"$tmp/idx"
+      Hnsw.buildIndex(spark, emb.filter(col("vec_id") < 300)).write.parquet(dir)
+      val before = rowsOf(Hnsw.searchIndex(spark, queries, spark.read.parquet(dir), 10))
+      assert(before === rebuiltPerCall(spark.read.parquet(dir), "seg", qs, None, 10))
+      val old = spark.read.parquet(dir)
+      Hnsw.buildIndex(spark, emb.filter(col("vec_id") >= 3)).write.mode("overwrite").parquet(dir)
+      val after = rowsOf(Hnsw.searchIndex(spark, queries, spark.read.parquet(dir), 10))
+      assert(after === rebuiltPerCall(spark.read.parquet(dir), "seg", qs, None, 10))
+      assert(after !== before, "the rewritten index holds other vectors")
+      Hnsw.releaseResident(old)
+      Hnsw.releaseResident(spark.read.parquet(dir))
+    }
+  }
+
+  test("two concurrent first searches rehydrate each graph once and agree") {
+    withTempDir("graft_hnsw_concurrent") { tmp =>
+      val dir = s"$tmp/idx"
+      Hnsw.buildIndex(spark, emb).write.parquet(dir)
+      val before = Hnsw.graphsRehydrated.get()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val futures = (1 to 2).map { _ =>
+          pool.submit(() => {
+            start.await()
+            rowsOf(Hnsw.searchIndex(spark, queries, spark.read.parquet(dir), 10))
+          })
+        }
+        start.countDown()
+        val answers = futures.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+        assert(answers(0) === answers(1))
+        assert(answers(0) === rebuiltPerCall(spark.read.parquet(dir), "seg",
+          Hnsw.collectQueries(queries), None, 10))
+        assert(Hnsw.graphsRehydrated.get() - before === 8,
+          "each of the 8 segment graphs is rehydrated exactly once")
+      } finally pool.shutdown()
+      Hnsw.releaseResident(spark.read.parquet(dir))
+    }
+  }
+
+  test("driver routing equals the SQL crossJoin routing, ties included") {
+    import spark.implicits._
+    // the fixture: every query against seeded centroids, several nprobe
+    val cent = IvfIndex.seedCentroids(emb, 8)
+    (1 to 3).foreach { p =>
+      assert(driverRoutes(queries, cent, p) === sqlRoutes(queries, cent, p), s"nprobe=$p")
+    }
+    // equidistant centroids: query 0 sits at distance 1 from cids 5, 2
+    // and 9 (5 from cid 7); query 1 is nearest to 5, then 2, then ties
+    // cids 9 and 7 at distance 4 — the probe order falls to the cid
+    // tie-break
+    val tied = Seq((5, Array(1f, 0f)), (2, Array(0f, 1f)), (9, Array(-1f, 0f)),
+      (7, Array(3f, 4f))).toDF("cid", "cemb")
+    val tq = Seq((0L, Array(0f, 0f)), (1L, Array(3f, 0f))).toDF("qid", "qemb")
+    (1 to 4).foreach { p =>
+      assert(driverRoutes(tq, tied, p) === sqlRoutes(tq, tied, p), s"tied nprobe=$p")
+    }
+    val r2 = driverRoutes(tq, tied, 2)
+    assert(r2(2) === Seq(0L, 1L) && r2(5) === Seq(0L, 1L) && !r2.contains(9),
+      "query 0's three-way tie resolves to the smallest cids")
+    val r3 = driverRoutes(tq, tied, 3)
+    assert(r3(7) === Seq(1L) && r3(9) === Seq(0L),
+      "query 1's tie at distance 4 resolves to cid 7")
   }
 }

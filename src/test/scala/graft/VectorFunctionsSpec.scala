@@ -15,6 +15,29 @@ class VectorFunctionsSpec extends GraftSpec {
   private val a = typedLit(Array(1.0f, 2.0f, 3.0f))
   private val b = typedLit(Array(4.0f, 6.0f, 8.0f))
 
+  test("ensureRegistered is idempotent: a second call replaces no registered function") {
+    // re-registering on every call replaced each builder and logged a
+    // SimpleFunctionRegistry WARN per function per request
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    graft.functions.HashedShingles.ensureRegistered(spark)
+    graft.functions.TextExpressions.ensureRegistered(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("graft_l2sq", "graft_dot", "graft_l2sq_d", "graft_dot_d", "graft_shingles",
+      "graft_shingle_pos", "graft_simhash64", "graft_lang_id", "graft_word_ngrams")
+    // each registration stores a fresh ExpressionInfo, so identity shows
+    // whether an entry was replaced
+    def infos = names.map(n =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    val before = infos
+    assert(before.forall(_.isDefined))
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    graft.functions.HashedShingles.ensureRegistered(spark)
+    graft.functions.TextExpressions.ensureRegistered(spark)
+    infos.zip(before).zip(names).foreach { case ((after, was), n) =>
+      assert(after.get eq was.get, s"$n was re-registered")
+    }
+  }
+
   test("l2 distance matches hand computation") {
     // (3^2 + 4^2 + 5^2) = 50
     assert(math.abs(one(VectorFunctions.l2(a, b)) - math.sqrt(50.0)) < 1e-12)
