@@ -93,15 +93,20 @@ object Bench {
     // cap the RDD loggers at ERROR for this main.
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // Warm-up: touch every fixture (page cache + parquet footers) + one
-    // tiny job (JIT, codegen, shuffle machinery). Not timed.
+    // tiny job (JIT, codegen, shuffle machinery). Not timed; a fixture
+    // that fails to load is reported and left to fail its own queries.
+    def warm(t: String)(load: => Unit): Unit =
+      try load catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up of $t failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
+      warm(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
-    try graft.model.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    warm("events")(graft.model.Tables.events(spark, sfDir).count())
     spark.range(1000000L).selectExpr("sum(id)").collect()
     // Register the custom expressions once, before the pool races to.
     graft.functions.VectorExpressions.ensureRegistered(spark)
@@ -292,7 +297,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(detail)
     val slowest = sortedNames.sortBy(n => -times.getOrDefault(n, -1.0)).take(3)
       .map(k => "\"" + k + "\":" + math.round(times.getOrDefault(k, -1.0) * 100) / 100.0).mkString("{", ",", "}")

@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,7 +23,7 @@ object Verify {
     // WARNs unavoidably (see Bench) and the spam buries real warnings
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -110,7 +112,7 @@ object Verify {
           try {
             val p = new org.apache.hadoop.fs.Path(s"$outDir/$n")
             p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
         }
       }
     }

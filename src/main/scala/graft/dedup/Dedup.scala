@@ -1,5 +1,7 @@
 package graft.dedup
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +48,7 @@ object Dedup {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(blocking = false)
         case _ => ()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       df = transientCheckpoints.poll()
     }
   }

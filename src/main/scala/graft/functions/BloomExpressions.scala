@@ -63,8 +63,8 @@ case class BloomMightContainLong(left: Expression, right: Expression)
 object BloomExpressions {
 
   def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", exprs => BloomMightContainLong(exprs(0), exprs(1)), "scala_udf")
+    SessionFunctions.ensure(spark, "graft_bloom_contains")(exprs =>
+      BloomMightContainLong(exprs(0), exprs(1)))
 
   /** Probe column: `might_contain(key)` against serialized bloom bits. */
   def mightContain(key: Column, bloomBytes: Array[Byte]): Column =

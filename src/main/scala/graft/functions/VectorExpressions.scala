@@ -216,7 +216,7 @@ case class DoubleVecDot(left: Expression, right: Expression) extends FloatVecBin
   * step of every `ensureRegistered` here. Replacing an existing entry
   * would log a SimpleFunctionRegistry WARN on every call.
   */
-private[functions] object SessionFunctions {
+private[graft] object SessionFunctions {
   def ensure(spark: SparkSession, name: String)(build: Seq[Expression] => Expression): Unit = {
     val registry = spark.sessionState.functionRegistry
     registry.synchronized {

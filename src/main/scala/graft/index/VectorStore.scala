@@ -14,11 +14,15 @@ import graft.search.{KnnExact, LshIndex}
   *
   * Storage: one parquet directory per collection under a warehouse root
   * (local path or any Hadoop-FS URI — HDFS/S3A at scale), rows in the
-  * reference's record shape ([[Schemas.collection]]). `add` is a parquet
-  * append (the reference's batched collection.add, cc:260-263); `query`
-  * is the broadcast top-k join from [[KnnExact]], so the collection side
-  * never shuffles; listing/deleting are filesystem metadata ops, not
-  * Spark jobs.
+  * reference's record shape ([[Schemas.collection]]). Every write casts
+  * its rows to that schema, so every file matches it, and every read
+  * declares it: opening a collection reads no parquet footer and starts
+  * no Spark job (opening a ChromaDB collection costs nothing either).
+  * `add` is a parquet append (the reference's batched collection.add,
+  * cc:260-263); `query` is the broadcast top-k join from [[KnnExact]],
+  * so the collection side never shuffles. list, count and
+  * delete_collection are filesystem metadata operations, not Spark
+  * jobs; create writes one schema-only part file, once per collection.
   */
 class VectorStore(spark: SparkSession, warehouse: String) {
 
@@ -29,9 +33,6 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     new Path(root, name)
   }
 
-  /** Idempotent create: an empty parquet dataset with the collection
-    * schema (so `collection(name)` works immediately after).
-    */
   /** If a rewrite crashed between its two renames, the live dir is
     * missing and the backup holds the full pre-rewrite collection —
     * restore it. Called from every entry point that would otherwise
@@ -44,7 +45,12 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     if (fs.exists(bak) && !fs.exists(d)) fs.rename(bak, d)
   }
 
-  def getOrCreateCollection(name: String): DataFrame = {
+  /** Idempotent create: crash recovery, then an empty parquet dataset
+    * with the collection schema if the directory is absent. Builds no
+    * DataFrame over the collection — `add` and `upsert` only need it to
+    * exist.
+    */
+  private def ensureCollection(name: String): Unit = {
     recoverIfCrashed(name)
     val d = dir(name)
     if (!fs.exists(d)) {
@@ -52,29 +58,42 @@ class VectorStore(spark: SparkSession, warehouse: String) {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.collection)
         .write.mode(SaveMode.Overwrite).parquet(d.toString)
     }
+  }
+
+  /** get_or_create_collection(name): create if absent, then read. */
+  def getOrCreateCollection(name: String): DataFrame = {
+    ensureCollection(name)
     collection(name)
   }
 
-  /** The collection as a DataFrame (schema: [[Schemas.collection]]). */
-  def collection(name: String): DataFrame = spark.read.parquet(dir(name).toString)
+  /** The collection as a DataFrame. The read declares
+    * [[Schemas.collection]] instead of inferring it from a parquet
+    * footer, so resolving it starts no Spark job.
+    */
+  def collection(name: String): DataFrame =
+    spark.read.schema(Schemas.collection).parquet(dir(name).toString)
 
   /** Append records; extra columns are dropped, and a missing metadata
     * column is stored as null — mirrors add()'s per-batch semantics.
     */
   def add(name: String, records: DataFrame): Unit = {
-    getOrCreateCollection(name)
+    ensureCollection(name)
     normalized(records)
       .write.mode(SaveMode.Append).parquet(dir(name).toString)
   }
 
   /** Incoming records coerced to the collection schema: extra columns
     * dropped, missing metadata stored as null — add()'s per-batch
-    * semantics, shared with upsert's single-rewrite path.
+    * semantics, shared with upsert's single-rewrite path. Every column
+    * is cast to its declared type (metadata fields positionally, e.g. a
+    * LONG page_num to INT), so each written file matches the schema
+    * `collection` reads with.
     */
   private def normalized(records: DataFrame): DataFrame = {
+    val metaType = Schemas.collection("metadata").dataType
     val meta =
-      if (records.columns.contains("metadata")) col("metadata")
-      else lit(null).cast(Schemas.collection("metadata").dataType)
+      if (records.columns.contains("metadata")) col("metadata").cast(metaType)
+      else lit(null).cast(metaType)
     records
       .select(col("id").cast("string"), col("document").cast("string"),
         col("embedding").cast("array<float>"), meta.as("metadata"))
@@ -215,7 +234,7 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     * read can never observe the collection mid-rewrite.
     */
   def upsert(name: String, records: DataFrame): Unit = {
-    getOrCreateCollection(name)
+    ensureCollection(name)
     // The anti-join (drop replaced ids) AND the insert of the new
     // versions ride ONE rewrite, so the staging→live swap is the single
     // commit point: a crash at any rename leaves either the full old
@@ -229,19 +248,18 @@ class VectorStore(spark: SparkSession, warehouse: String) {
       // request (a duplicated id would otherwise leave two live rows
       // for one key, and which survives would be row-order luck).
       // ONE validation job (count + distinct-id count together) instead
-      // of two over the materialized batch (r21).
+      // of two over the materialized batch (r21). countDistinct skips
+      // nulls, so a null id fails the check too: past it the batch's
+      // ids are distinct and non-null, and its own id column is the
+      // anti-join key as is.
       val v = newRows.agg(
         org.apache.spark.sql.functions.count(lit(1)).as("n"),
         countDistinct(col("id")).as("nd")).head()
-      val (total, distinctIds) = (v.getLong(0), v.getLong(1))
-      val incoming = newRows.select(col("id")).distinct().localCheckpoint(true)
-      try {
-        require(distinctIds == total,
-          s"upsert batch for '$name' contains duplicate ids; " +
-            "deduplicate the batch before upserting")
-        rewrite(name)(
-          _.join(incoming, Seq("id"), "left_anti").unionByName(newRows))
-      } finally graft.textual.Bpe.unpersistCheckpoint(incoming)
+      require(v.getLong(0) == v.getLong(1),
+        s"upsert batch for '$name' contains duplicate ids or a null id; " +
+          "deduplicate the batch before upserting")
+      rewrite(name)(
+        _.join(newRows.select(col("id")), Seq("id"), "left_anti").unionByName(newRows))
     } finally graft.textual.Bpe.unpersistCheckpoint(newRows)
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** The ONE materialization point for "compute this intermediate once,
@@ -98,7 +100,7 @@ object Materialize {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () } // session may already be stopped
+    } catch { case NonFatal(_) => () } // session may already be stopped
   }
 
   private def drain(set: java.util.Set[DataFrame]): Unit = {
@@ -110,7 +112,7 @@ object Materialize {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(blocking = false)
         case _ => ()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
   }
 

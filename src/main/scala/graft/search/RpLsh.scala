@@ -9,6 +9,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
+import graft.functions.SessionFunctions
+
 /** Deterministic random-projection LSH for L2 — the engine-portable ANN
   * variant: projection signs are ±1 derived from SplitMix64 of the
   * (table, dim) index, so the entire index — buckets included — is a
@@ -47,20 +49,16 @@ object RpLsh {
     * graft_rp_sign_bands(vec, bands, bitsPerBand, dim).
     */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rplsh_buckets",
-      exprs => RpBucketsExpr(exprs(0),
+    SessionFunctions.ensure(spark, "graft_rplsh_buckets")(exprs =>
+      RpBucketsExpr(exprs(0),
         exprs(1).eval(null).asInstanceOf[Number].intValue(),
         exprs(2).eval(null).asInstanceOf[Number].intValue(),
-        exprs(3).eval(null).asInstanceOf[Number].doubleValue()),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rp_sign_bands",
-      exprs => SignBandsExpr(exprs(0),
+        exprs(3).eval(null).asInstanceOf[Number].doubleValue()))
+    SessionFunctions.ensure(spark, "graft_rp_sign_bands")(exprs =>
+      SignBandsExpr(exprs(0),
         exprs(1).eval(null).asInstanceOf[Number].intValue(),
         exprs(2).eval(null).asInstanceOf[Number].intValue(),
-        exprs(3).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
+        exprs(3).eval(null).asInstanceOf[Number].intValue()))
   }
 
   /** All `numTables` bucket ids of `vec` as one array column. */

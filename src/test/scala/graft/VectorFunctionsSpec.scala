@@ -21,9 +21,12 @@ class VectorFunctionsSpec extends GraftSpec {
     graft.functions.VectorExpressions.ensureRegistered(spark)
     graft.functions.HashedShingles.ensureRegistered(spark)
     graft.functions.TextExpressions.ensureRegistered(spark)
+    graft.functions.BloomExpressions.ensureRegistered(spark)
+    graft.search.RpLsh.ensureRegistered(spark)
     val registry = spark.sessionState.functionRegistry
     val names = Seq("graft_l2sq", "graft_dot", "graft_l2sq_d", "graft_dot_d", "graft_shingles",
-      "graft_shingle_pos", "graft_simhash64", "graft_lang_id", "graft_word_ngrams")
+      "graft_shingle_pos", "graft_simhash64", "graft_lang_id", "graft_word_ngrams",
+      "graft_bloom_contains", "graft_rplsh_buckets", "graft_rp_sign_bands")
     // each registration stores a fresh ExpressionInfo, so identity shows
     // whether an entry was replaced
     def infos = names.map(n =>
@@ -33,6 +36,8 @@ class VectorFunctionsSpec extends GraftSpec {
     graft.functions.VectorExpressions.ensureRegistered(spark)
     graft.functions.HashedShingles.ensureRegistered(spark)
     graft.functions.TextExpressions.ensureRegistered(spark)
+    graft.functions.BloomExpressions.ensureRegistered(spark)
+    graft.search.RpLsh.ensureRegistered(spark)
     infos.zip(before).zip(names).foreach { case ((after, was), n) =>
       assert(after.get eq was.get, s"$n was re-registered")
     }

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.index.VectorStore
 
@@ -15,6 +21,38 @@ class VectorStoreSpec extends GraftSpec {
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), graft.model.Schemas.collection)
   }
+
+  /** Spark jobs `body` starts, counted under a job group of its own by a
+    * listener read after the listener bus has drained.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"vstore-jobs-${java.util.UUID.randomUUID}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "VectorStoreSpec job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  /** (name, length, modification time) of every file under `dir`. */
+  private def files(dir: String): Set[(String, Long, Long)] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("client lifecycle: create / add / count / list / delete") {
     val wh = java.nio.file.Files.createTempDirectory("graft_store").toString
@@ -246,5 +284,96 @@ class VectorStoreSpec extends GraftSpec {
   test("invalid collection names are rejected") {
     val store = new VectorStore(spark, "/tmp/graft_wh_unused")
     intercept[IllegalArgumentException](store.count("../escape"))
+  }
+
+  test("collection declares the schema every stored file carries") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_store_schema").toString
+    val store = new VectorStore(spark, wh)
+    // mergeSchema reads every footer, so a file written with any other
+    // type would surface here (or fail the merge)
+    def inferred = spark.read.option("mergeSchema", "true").parquet(s"$wh/c").schema
+    store.getOrCreateCollection("c")
+    assert(store.collection("c").schema === inferred, "fresh collection")
+    store.add("c", records(0 until 10))
+    assert(store.collection("c").schema === inferred, "after add")
+    store.upsert("c", records(5 until 12).withColumn("document", lit("patched")))
+    assert(store.collection("c").schema === inferred, "after upsert")
+    assert(store.delete("c", Seq("p0")) === 1L)
+    assert(store.collection("c").schema === inferred, "after delete")
+    store.deleteCollection("c")
+  }
+
+  test("resolving a collection starts no Spark job") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_store_read").toString
+    val store = new VectorStore(spark, wh)
+    store.add("c", records(0 until 10))
+    assert(jobsOf(store.collection("c")) === 0)
+    assert(jobsOf(store.get("c", Seq("p1"))) === 0, "get builds its frame without a job")
+    store.deleteCollection("c")
+  }
+
+  test("add on an existing collection starts only its append write's jobs") {
+    val base = java.nio.file.Files.createTempDirectory("graft_store_addjobs")
+    val store = new VectorStore(spark, base.resolve("wh").toString)
+    store.add("c", records(0 until 10))
+    val batch = records(10 until 20)
+    val write = jobsOf(batch.write.parquet(base.resolve("bare").toString))
+    assert(write >= 1)
+    assert(jobsOf(store.add("c", batch)) === write)
+    assert(store.count("c") === 20)
+    store.deleteCollection("c")
+  }
+
+  test("add casts a LONG metadata.page_num to the declared INT, values equal") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_store_cast").toString
+    val store = new VectorStore(spark, wh)
+    val longMeta = StructType(Seq(
+      StructField("pdf_name", StringType), StructField("page_num", LongType),
+      StructField("total_pages", LongType)))
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("document", StringType),
+      StructField("embedding", ArrayType(FloatType)), StructField("metadata", longMeta)))
+    val rows = (0 until 5).map(i =>
+      Row(s"p$i", s"doc $i", Array(i.toFloat, 1.0f), Row(s"f$i.pdf", 1000L + i, 2000L)))
+    store.add("c", spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    val got = store.collection("c").select($"id", $"metadata.page_num", $"metadata.total_pages")
+    assert(got.schema("page_num").dataType === IntegerType)
+    assert(got.as[(String, Int, Int)].collect().sortBy(_._1).toSeq ===
+      (0 until 5).map(i => (s"p$i", 1000 + i, 2000)))
+    store.deleteCollection("c")
+  }
+
+  test("upsert leaves no persisted RDD beyond those present before it") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_store_rdds").toString
+    val store = new VectorStore(spark, wh)
+    store.add("c", records(0 until 10))
+    val before = persisted
+    store.upsert("c", records(5 until 15).withColumn("document", lit("new")))
+    assert(store.count("c") === 15)
+    // ids, not counts: the ContextCleaner may drop unrelated RDDs between
+    // the two snapshots
+    assert((persisted -- before).isEmpty, "upsert leaked a persisted RDD")
+    intercept[IllegalArgumentException](
+      store.upsert("c", records(1 to 1).union(records(1 to 1))))
+    assert((persisted -- before).isEmpty, "a rejected upsert leaked a persisted RDD")
+    store.deleteCollection("c")
+  }
+
+  test("upsert rejects a null or duplicate id; the collection's files stay unchanged") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_store_reject").toString
+    val store = new VectorStore(spark, wh)
+    store.add("c", records(0 until 5))
+    val before = files(s"$wh/c")
+    val nullId = records(1 to 1).withColumn("id", lit(null).cast("string"))
+      .union(records(7 to 7))
+    val dupId = records(2 to 2).withColumn("document", lit("a"))
+      .union(records(2 to 2).withColumn("document", lit("b")))
+    Seq("null id" -> nullId, "duplicate id" -> dupId).foreach { case (what, batch) =>
+      intercept[IllegalArgumentException](store.upsert("c", batch))
+      assert(files(s"$wh/c") === before, s"a batch with a $what rewrote the collection")
+      assert(store.count("c") === 5, what)
+    }
+    assert(store.get("c", Seq("p2")).select($"document").as[String].collect() === Array("doc 2"))
+    store.deleteCollection("c")
   }
 }
