@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -177,7 +179,7 @@ object SparkEntry {
     while (it.hasNext) {
       val e = it.next()
       try e.getValue.unpersist(blocking = false)
-      catch { case _: Throwable => () } // session may already be stopped
+      catch { case NonFatal(_) => () } // session may already be stopped
       it.remove()
     }
     // entries only — the posting blocks live in Dedup's checkpoint
@@ -187,7 +189,7 @@ object SparkEntry {
     while (itW.hasNext) {
       val e = itW.next()
       try e.getValue.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       itW.remove()
     }
     val it2 = searchIndexCache.entrySet().iterator()
@@ -195,7 +197,7 @@ object SparkEntry {
       val e = it2.next()
       e.getValue.persistedFrames.foreach { f =>
         try f.unpersist(blocking = false)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
       it2.remove()
     }
@@ -203,7 +205,7 @@ object SparkEntry {
     while (it3.hasNext) {
       val e = it3.next()
       try e.getValue._1.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       it3.remove()
     }
     // every materialized intermediate/result routes through the central
@@ -213,7 +215,7 @@ object SparkEntry {
     graft.model.Tables.clearSchemaCache()
     // checkpointed posting/signature intermediates inside the dedup
     // library (r21) ride the same teardown
-    try graft.dedup.Dedup.releaseCheckpoints() catch { case _: Throwable => () }
+    try graft.dedup.Dedup.releaseCheckpoints() catch { case NonFatal(_) => () }
     pqCodebookCache.clear() // driver-side Seqs, nothing persisted
     opqAllocCache.clear()
     opqCodebookCache.clear()
@@ -243,7 +245,7 @@ object SparkEntry {
     while (it4.hasNext) {
       val e = it4.next()
       try graft.textual.Bpe.unpersistCheckpoint(e.getValue._2)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       it4.remove()
     }
     sessionIds.clear()
@@ -7420,7 +7422,7 @@ object SparkEntry {
          |SELECT ph.phase, qid, vec_id, CAST(rk AS BIGINT) AS rk, round(dist, 4) AS dist
          |FROM r, ph WHERE rk <= 10 ORDER BY ph.phase, qid, rk""".stripMargin,
 
-    // Planner-rewrite replay: the rewritten (index-probe semi-join)
+    // Planner-rewrite replay: the rewritten (probe candidate-id IN)
     // plan must equal the exact top-10 — acceleration is a plan
     // property, not a result change.
     "ann_planner_rewrite" ->

@@ -3,9 +3,7 @@ package graft.plans
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -28,17 +26,20 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   * client code (exact scan vs collection.query); here it is a plan
   * property.
   *
-  * Rewrite shape: the scan side is semi-joined with the stored-index
-  * probe's candidate ids ([[graft.search.Hnsw.searchRoutedIndex]] —
-  * route on the driver, walk the nprobe cells' resident graphs, merge),
-  * and the ORIGINAL Sort+Limit re-rank the k·overfetch candidates
-  * exactly:
+  * Rewrite shape: the rule runs the stored-index probe at plan time
+  * ([[graft.search.Hnsw.searchRoutedIndex]] — route on the driver, walk
+  * the nprobe cells' resident graphs, merge on the driver: one Spark
+  * job), splices its k·overfetch candidate ids into the scan as a
+  * literal id-IN predicate, and the ORIGINAL Sort+Limit re-rank those
+  * candidates exactly:
   *
-  * {{{ Limit k → Sort(dist ASC) → Project → (Scan ⋉ indexProbe(qv)) }}}
+  * {{{ Limit k → Sort(dist ASC) → Project → Filter(id IN probe(qv)) → Scan }}}
   *
   * - At 100 TB the Sort's input shrinks from n rows to k·overfetch
-  *   rows; the probe reads no index file once the registered index's
-  *   cell graphs are resident, and walks only the probed cells.
+  *   rows, and the id-IN predicate is a pushable scan filter; the probe
+  *   reads no index file once the registered index's cell graphs are
+  *   resident, and walks only the probed cells. The query then runs as
+  *   one job of its own.
   * - Results are IDENTICAL to the exact plan whenever the probe's
   *   candidate set contains the true top-k (guaranteed at exhaustive
   *   nprobe/efSearch, the registration used by the oracle-checked
@@ -102,22 +103,22 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   * the accelerated plan reuses conceptually — both are O(candidates),
   * replacing an O(n) scan.
   *
-  * PLAN-TIME PURITY: the filtered and batch rewrites run real (bounded)
-  * Spark jobs inside the optimizer. Every `Dataset` re-plans, and
-  * `.explain()` re-plans again — so probe results AND declined
-  * decisions are memoized per (index, query vector / query-side plan,
-  * canonicalized filter, k). A repeat plan of the same shape splices
-  * the cached candidate ids (or declines from cache) without touching
-  * the cluster; the caches clear whenever the registry changes.
+  * PLAN-TIME PURITY: every rewrite runs real (bounded) Spark jobs
+  * inside the optimizer. Every `Dataset` re-plans, and `.explain()`
+  * re-plans again — so probe results AND declined decisions are
+  * memoized per (index, query vector / query-side plan, canonicalized
+  * filter, k). A repeat plan of the same shape splices the cached
+  * candidate ids (or declines from cache) without touching the
+  * cluster; the caches clear whenever the registry changes.
   *
-  * The unfiltered match is deliberately strict — the Project must sit
-  * DIRECTLY on the scan — and the strictness doubles as the idempotence
-  * guard: after the rewrite the Project's child is a Join, so the
-  * pattern can never re-fire on its own output. The filtered match
-  * guards idempotence structurally instead: a candidate-id IN/INSET
-  * conjunct on the id column marks an already-rewritten Filter (a
-  * user's own literal id-IN predicate also matches the marker — such
-  * queries keep the exact plan, never a double probe).
+  * Every shape guards idempotence structurally: a candidate-id IN/INSET
+  * conjunct on the id column marks an already-rewritten Filter. The
+  * unfiltered match needs the Project DIRECTLY on the scan, so its own
+  * output (Project → Filter(id IN …) → Scan) can only re-enter as the
+  * filtered shape, which the marker declines. A user's own literal
+  * id-IN predicate also matches the marker — such queries keep the
+  * exact plan, never a double probe. A probe with no candidates splices
+  * nothing: the exact plan answers.
   *
   * Known limitation, by design: a `cache()`d source table is
   * substituted with an InMemoryRelation before optimization, which
@@ -600,19 +601,23 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
 
   /** The registered index's candidate probe for `queries`: routed on
     * the driver against the registration's centroids, walked over the
-    * index's resident cell graphs. A fresh RDD-backed plan on every
-    * call, so splicing two probes into one query cannot collide.
+    * index's resident cell graphs and merged on the driver — one Spark
+    * job, answered with the hits themselves.
     */
   private def probe(spec: IndexSpec, queries: Array[(Long, Array[Float])],
-      k: Int): DataFrame =
-    graft.search.Hnsw.searchRouted(spec.index.sparkSession, queries, spec.index,
-      spec.centroidRows, k, spec.nprobe, m = 16, efConstruction = 100,
-      efSearch = spec.efSearch, qidCol = "qid", idCol = spec.idCol, embCol = spec.embCol)
+      k: Int): Array[graft.search.Hnsw.Hit] =
+    graft.search.Hnsw.searchRouted(queries, spec.index, spec.centroidRows, k,
+      spec.nprobe, m = 16, efConstruction = 100, efSearch = spec.efSearch,
+      idCol = spec.idCol, embCol = spec.embCol)
+
+  /** `id IN (candidates)` over literal ids — the splice every shape emits. */
+  private def candidateIn(id: Attribute, candIds: IndexedSeq[Any]): In =
+    In(id, candIds.map(v => Literal.create(v, id.dataType)))
 
   /** Rewrite one `Sort(dist ASC) → Project → Scan` subtree (already
     * known to sit under a Limit k) into
-    * `Sort(dist ASC) → Project → (Scan ⋉ probe)`, or None if the shape
-    * / registration / sort key doesn't qualify.
+    * `Sort(dist ASC) → Project → Filter(id IN probe ids) → Scan`, or None
+    * if the shape / registration / sort key doesn't qualify.
     */
   private def rewriteSort(srt: Sort, k: Int,
       cur: Option[SparkSession]): Option[Sort] =
@@ -682,12 +687,12 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   // cannot collide)
                   s"qv=${qv.mkString(",")}|cond=${flt.condition.sql}"
                 val decision = memoProbe(cacheKey)({
-                  val candIds = probe(spec, Array((0L, qv)), kp)
-                    .select(spec.idCol).collect().map(_.get(0)).toIndexedSeq
-                  val candIn = In(leftId,
-                    candIds.map(v => Literal.create(v, leftId.dataType)))
+                  val candIds = probe(spec, Array((0L, qv)), kp).map(h => h.id: Any).toIndexedSeq
+                  // one narrow job: the ≤ kp surviving ids themselves
                   val survivors = org.apache.spark.sql.graft.PlanOps
-                    .ofRows(spark, Filter(And(flt.condition, candIn), below)).count()
+                    .ofRows(spark, Project(Seq(leftId),
+                      Filter(And(flt.condition, candidateIn(leftId, candIds)), below)))
+                    .collect().length
                   if (survivors < k) {
                     logInfo(s"graft ANN filtered rewrite: only $survivors of " +
                       s"${candIds.length} probe candidates survive the filter (< k=$k); " +
@@ -706,10 +711,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                     None
                   case Some(candIds) =>
                     firedFiltered.incrementAndGet()
-                    val candIn = In(leftId,
-                      candIds.map(v => Literal.create(v, leftId.dataType)))
-                    Some(srt.copy(child =
-                      p.copy(child = flt.copy(condition = And(flt.condition, candIn)))))
+                    Some(srt.copy(child = p.copy(child =
+                      flt.copy(condition = And(flt.condition, candidateIn(leftId, candIds))))))
                 }
               }
             case _ => None
@@ -730,15 +733,20 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
           leaf.output.find(_.name == spec.idCol) match {
             case Some(leftId)
                 if leaf.outputSet.contains(embAttr) && embAttr.name == spec.embCol =>
-              val cands = probe(spec, Array((0L, qv)),
-                math.max(k, 1) * math.max(spec.overfetch, 1)).select(spec.idCol)
-              val right = EliminateSubqueryAliases(cands.queryExecution.analyzed)
-              val join = Join(leaf, right, LeftSemi,
-                Some(EqualTo(leftId, right.output.head)), JoinHint.NONE)
-              fired.incrementAndGet()
-              logInfo(s"graft ANN rewrite ($metric): Sort+Limit($k) over " +
-                s"${spec.idCol}-indexed scan → semi-join with stored-index probe")
-              Some(srt.copy(child = p.copy(child = join)))
+              val cacheKey = s"${specCacheKey(spec)}|knn|$metric|k=$k|qv=${qv.mkString(",")}"
+              val decision = memoProbe(cacheKey)({
+                val candIds = probe(spec, Array((0L, qv)),
+                  math.max(k, 1) * math.max(spec.overfetch, 1)).map(h => h.id: Any).toIndexedSeq
+                // no candidates leaves nothing to splice: the exact plan answers
+                if (candIds.isEmpty) None else Some(candIds)
+              })
+              decision.map { candIds =>
+                fired.incrementAndGet()
+                logInfo(s"graft ANN rewrite ($metric): Sort+Limit($k) over " +
+                  s"${spec.idCol}-indexed scan → candidate-id predicate " +
+                  s"(${candIds.length} probe candidates)")
+                srt.copy(child = p.copy(child = Filter(candidateIn(leftId, candIds), leaf)))
+              }
             case _ => None
           }
         }
@@ -1023,7 +1031,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                       } else {
                         val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
                           (if (filtered) math.max(spec.filteredOverfetch, 1) else 1)
-                        val cands = probe(spec, graft.search.Hnsw.collectQueries(qdfProbe), kp)
+                        val hits = probe(spec, graft.search.Hnsw.collectQueries(qdfProbe), kp)
                         // Collected once for BOTH branches: the per-query
                         // guards below must run over the FULL query-side qid
                         // set, not just qids present in the probe output — a
@@ -1034,10 +1042,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                         // silently re-rank over neighbors that aren't its own.
                         val allQids = qdf.select("qid")
                           .collect().map(_.get(0)).toSet
-                        val pairs = cands
-                          .select(org.apache.spark.sql.functions.col("qid"),
-                            org.apache.spark.sql.functions.col(spec.idCol))
-                          .collect().map(row => (row.get(0), row.get(1)))
+                        val pairs = hits.map(h => (h.qid: Any, h.id: Any))
                         val byQid = pairs.groupBy(_._1)
                         val distinctIds = pairs.map(_._2).distinct.toIndexedSeq
                         fltOpt match {
@@ -1059,12 +1064,11 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                               None
                             } else flt.child.output.find(_.name == spec.idCol)
                               .flatMap { belowId =>
-                                val candInBelow = In(belowId, distinctIds
-                                  .map(v => Literal.create(v, belowId.dataType)))
                                 val survived = org.apache.spark.sql.graft.PlanOps
                                   .ofRows(spark,
-                                    Project(Seq(belowId),
-                                      Filter(And(flt.condition, candInBelow), flt.child)))
+                                    Project(Seq(belowId), Filter(
+                                      And(flt.condition, candidateIn(belowId, distinctIds)),
+                                      flt.child)))
                                   .collect().map(_.get(0)).toSet
                                 val minSurvivors = byQid.values
                                   .map(_.count(pr => survived.contains(pr._2))).min
@@ -1083,8 +1087,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                         if (filtered) batchFilteredFallbacks.incrementAndGet()
                         None
                       case Some(candIds) =>
-                        val candIn = In(idAttr,
-                          candIds.map(v => Literal.create(v, idAttr.dataType)))
+                        val candIn = candidateIn(idAttr, candIds)
                         if (filtered) firedBatchFiltered.incrementAndGet()
                         else firedBatch.incrementAndGet()
                         logInfo(s"graft batch ANN rewrite" +

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -47,30 +46,19 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * The splice markers are the rewrites' own structural idempotence
   * markers, so they cannot drift from what the rules emit:
-  * [[AnnIndexRewrite]] splices either a LeftSemi probe join
-  * (single-query shape) or a literal candidate-id IN/INSET conjunct
-  * (filtered/batch shapes); [[AggRewrite]] replaces the fact scan, so
+  * [[AnnIndexRewrite]] splices a literal candidate-id IN/INSET conjunct
+  * in every shape (single-query, filtered, batch); [[AggRewrite]]
+  * replaces the fact scan, so
   * its marker is the ABSENCE of every fact path among the plan's scan
   * leaves.
   */
 object PlannerPin {
 
-  /** True when the optimized plan carries the single-query ANN probe
-    * splice: a LeftSemi join whose condition references the index id
-    * column (the exact Sort+Limit plan has no semi-join at all).
-    */
-  def hasProbeSemiJoin(plan: LogicalPlan, idCol: String): Boolean =
-    plan.exists {
-      case Join(_, _, LeftSemi, cond, _) =>
-        cond.exists(_.references.exists(_.name == idCol))
-      case _ => false
-    }
-
   /** True when some Filter carries a literal id-IN/INSET conjunct on
-    * `idCol` — the filtered/batch splice (the same marker
-    * AnnIndexRewrite's own idempotence guard recognizes; OptimizeIn may
-    * have converted the spliced In to InSet inside the shared
-    * fixed-point batch, so both shapes count).
+    * `idCol` — the ANN probe splice (the same marker AnnIndexRewrite's
+    * own idempotence guard recognizes; OptimizeIn may have converted the
+    * spliced In to InSet inside the shared fixed-point batch, so both
+    * shapes count).
     */
   def hasCandidateIn(plan: LogicalPlan, idCol: String): Boolean =
     plan.exists {
@@ -84,11 +72,11 @@ object PlannerPin {
       case _ => false
     }
 
-  /** Any ANN probe splice on `idCol` — single-query semi-join OR
-    * filtered/batch candidate-id predicate.
+  /** Any ANN probe splice on `idCol`: [[hasCandidateIn]], curried for
+    * [[pinned]].
     */
   def annSpliced(idCol: String)(plan: LogicalPlan): Boolean =
-    hasProbeSemiJoin(plan, idCol) || hasCandidateIn(plan, idCol)
+    hasCandidateIn(plan, idCol)
 
   /** True when the plan still scans `path` (V1 parquet leaf). */
   def scansPath(plan: LogicalPlan, path: String): Boolean = {

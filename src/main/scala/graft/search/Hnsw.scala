@@ -9,12 +9,12 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** HNSW graph ANN (Malkov & Yashunin, TPAMI'18) — the index family the
@@ -31,14 +31,15 @@ import org.apache.spark.storage.StorageLevel
   * in ONE `mapPartitions` pass (embarrassingly parallel, zero shuffle
   * of vectors beyond the one partitioning exchange), every segment
   * answers each broadcast query from its local graph, and the global
-  * answer is a per-query top-k over the `numGraphs · k` candidate rows
-  * (WindowGroupLimit — shuffle volume O(numGraphs · k · |Q|), never
-  * O(N)). At 100 TB: segments are the parallelism unit, graph build
-  * cost is linear-ish per segment (each insert touches ~efConstruction
-  * nodes), query fan-out is one tiny task per segment, and the merge
-  * is the same top-k heap every other search family uses. For truly
-  * extreme segment counts the IVF router in front (probe a subset of
-  * segments) is the standard composition — both pieces exist here.
+  * answer is a per-query top-k over the `numGraphs · k` candidate rows,
+  * merged on the driver in the same job ([[topKOnDriver]] — no shuffle;
+  * the driver holds O(k · |Q|) rows, never O(N)). At 100 TB: segments
+  * are the parallelism unit, graph build cost is linear-ish per segment
+  * (each insert touches ~efConstruction nodes), query fan-out is one
+  * tiny task per segment, and the merge is a bounded top-k heap per
+  * query. For truly extreme segment counts the IVF router in front
+  * (probe a subset of segments) is the standard composition — both
+  * pieces exist here.
   *
   * RESIDENT SERVING: a STORED index ([[buildIndex]], [[buildRoutedIndex]])
   * is searched the way a vector database serves it — from graphs that
@@ -46,7 +47,9 @@ import org.apache.spark.storage.StorageLevel
   * segment (or cell) graphs once into a persisted RDD, one partition per
   * graph; every later search runs one narrow task per partition against
   * them, with no index scan, no exchange of vectors and no rebuild
-  * ([[graphsOf]] has the key and the lifetime).
+  * ([[graphsOf]] has the key and the lifetime). A resident search is one
+  * Spark job: the walk tasks, whose bounded per-query top-k lists the
+  * driver merges as they finish.
   *
   * DETERMINISM (the suite's oracle discipline): layer assignment is a
   * SplitMix64 hash of the vector id (no RNG state), insertion order is
@@ -280,7 +283,8 @@ object Hnsw {
   }
 
   /** Distributed top-k: per-segment HNSW search + global top-k merge.
-    * Output (qid, vec_id, rk, dist) — the exact-path schema, dist = L2².
+    * Output (qid, vec_id, rk, dist) — the exact-path schema, dist = L2² —
+    * as a local frame: the search runs when this is called.
     */
   def topK(
       spark: SparkSession,
@@ -306,21 +310,64 @@ object Hnsw {
           g.search(qv, k, efSearch).map { case (id, d) => (qid, id, d) }
         }
       }
-      .toDF(qidCol, idCol, "dist")
-    mergeTopK(candidates, k, qidCol, idCol)
+      .rdd
+    frameOf(spark, topKOnDriver(candidates, k), qidCol, idCol)
   }
 
-  /** The global top-k every search here ends with: per-query
-    * row_number over the (dist, id)-ordered candidates — shuffle volume
-    * O(#graphs · k · |Q|), never O(N).
+  /** One row of a search answer: query, vector id, 1-based rank, L2². */
+  private[graft] final case class Hit(qid: Long, id: Long, rk: Int, dist: Double)
+
+  /** The (dist, id) order every answer is ranked by. It equals Spark
+    * SQL's ascending order (NaN last) because an L2² sum is never -0.0,
+    * the one value on which the two orders differ.
     */
-  private def mergeTopK(candidates: DataFrame, k: Int, qidCol: String,
+  private val byDistThenVecId: Ordering[(Double, Long)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+
+  /** The global top-k every search here ends with, shaped like
+    * `RDD.takeOrdered` but per query: each task keeps at most k of its
+    * (qid, id, dist) candidates per qid in a bounded heap, and one `fold`
+    * merges the tasks' lists on the driver as they finish. One job, no
+    * shuffle; the driver holds O(|Q| · k) rows plus one task's result,
+    * never all candidates. An RDD with no partitions (every cell pruned)
+    * folds to no rows. Hits come ordered by (qid, rk).
+    */
+  private def topKOnDriver(candidates: RDD[(Long, Long, Double)], k: Int): Array[Hit] = {
+    if (k <= 0) return Array.empty
+    type Ranked = Map[Long, Array[(Double, Long)]]
+    val perTask = candidates.mapPartitions { it =>
+      val heaps = mutable.HashMap.empty[Long, mutable.PriorityQueue[(Double, Long)]]
+      it.foreach { case (qid, id, d) =>
+        // max-heap: the head is the worst candidate kept so far
+        val h = heaps.getOrElseUpdate(qid, mutable.PriorityQueue.empty(byDistThenVecId))
+        if (h.size < k) h.enqueue((d, id))
+        else if (byDistThenVecId.lt((d, id), h.head)) { h.dequeue(); h.enqueue((d, id)) }
+      }
+      Iterator.single[Ranked](
+        heaps.iterator.map { case (qid, h) => qid -> h.toArray.sorted(byDistThenVecId) }.toMap)
+    }
+    val merged = perTask.fold(Map.empty) { (a, b) =>
+      b.foldLeft(a) { case (acc, (qid, xs)) =>
+        acc.updated(qid, acc.get(qid).fold(xs)(ys => (ys ++ xs).sorted(byDistThenVecId).take(k)))
+      }
+    }
+    merged.toArray.sortBy(_._1).flatMap { case (qid, ranked) =>
+      ranked.zipWithIndex.map { case ((d, id), i) => Hit(qid, id, i + 1, d) }
+    }
+  }
+
+  /** Hits as the search frame every caller gets: (qid, id, rk, dist), all
+    * non-null — the schema of a row_number top-k over the candidates.
+    */
+  private def frameOf(spark: SparkSession, hits: Array[Hit], qidCol: String,
       idCol: String): DataFrame = {
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("dist").asc, col(idCol).asc)
-    candidates
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("rk"), col("dist"))
+    val schema = StructType(Seq(
+      StructField(qidCol, LongType, nullable = false),
+      StructField(idCol, LongType, nullable = false),
+      StructField("rk", IntegerType, nullable = false),
+      StructField("dist", DoubleType, nullable = false)))
+    spark.createDataFrame(
+      java.util.Arrays.asList(hits.map(h => Row(h.qid, h.id, h.rk, h.dist)): _*), schema)
   }
 
   /** The query vectors, on the driver. Queries are point-lookup-bounded
@@ -405,8 +452,8 @@ object Hnsw {
           }
         }
       }
-      .toDF(qidCol, idCol, "dist")
-    mergeTopK(candidates, k, qidCol, idCol)
+      .rdd
+    frameOf(spark, topKOnDriver(candidates, k), qidCol, idCol)
   }
 
   /** Build the STORABLE routed index: every IVF cell's graph built ONCE
@@ -463,16 +510,15 @@ object Hnsw {
       qEmbCol: String = "qemb",
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    searchRouted(spark, collectQueries(queries, qidCol, qEmbCol), index,
+    frameOf(spark, searchRouted(collectQueries(queries, qidCol, qEmbCol), index,
       collectCentroids(centroids), k, nprobe, m, efConstruction, efSearch,
-      qidCol, idCol, embCol)
+      idCol, embCol), qidCol, idCol)
 
-  /** [[searchRoutedIndex]] over driver-side queries and centroids — the
-    * form the planner's probe sites call with centroids collected once
-    * per registration.
+  /** [[searchRoutedIndex]] over driver-side queries and centroids, answering
+    * with the hits themselves — the form the planner's probe sites call
+    * with centroids collected once per registration.
     */
   private[graft] def searchRouted(
-      spark: SparkSession,
       queries: Array[(Long, Array[Float])],
       index: DataFrame,
       centroids: Array[(Int, Array[Float])],
@@ -481,13 +527,12 @@ object Hnsw {
       m: Int,
       efConstruction: Int,
       efSearch: Int,
-      qidCol: String,
       idCol: String,
-      embCol: String): DataFrame = {
+      embCol: String): Array[Hit] = {
     val routes = route(queries, centroids, nprobe)
     val graphs = graphsOf(index, "cell", math.max(centroids.length, 1), m,
       efConstruction, idCol, embCol, only = Some(routes.keys))
-    walk(spark, graphs, queries, Some(routes), k, efSearch, Set.empty, qidCol, idCol)
+    walk(graphs, queries, Some(routes), k, efSearch, Set.empty)
   }
 
   /** Build the STORABLE index: one row per node — (seg, vec_id,
@@ -593,9 +638,10 @@ object Hnsw {
     * re-build — the loaded walk is bit-identical to the built one) into
     * a persisted RDD ([[graphsOf]]); this and every later search runs
     * one narrow task per partition that walks its graphs for the
-    * broadcast queries, then the global top-k merges. No index file is
-    * read and no vector is exchanged after the first search. Output
-    * schema matches [[topK]].
+    * broadcast queries, and the driver merges the global top-k as the
+    * tasks finish. No index file is read and no vector is exchanged
+    * after the first search, and a resident search is one job. Output
+    * schema matches [[topK]], as a local frame.
     */
   def searchIndex(
       spark: SparkSession,
@@ -640,28 +686,25 @@ object Hnsw {
       qEmbCol: String = "qemb",
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    walk(spark, graphsOf(index, "seg", numGraphs, m, efConstruction, idCol, embCol),
-      collectQueries(queries, qidCol, qEmbCol), None, k, efSearch, tombstones.toSet,
+    frameOf(spark,
+      walk(graphsOf(index, "seg", numGraphs, m, efConstruction, idCol, embCol),
+        collectQueries(queries, qidCol, qEmbCol), None, k, efSearch, tombstones.toSet),
       qidCol, idCol)
 
   /** Answer `queries` from rehydrated graphs: one narrow task per
-    * partition walks that partition's graphs, then [[mergeTopK]]. With
+    * partition walks that partition's graphs, then [[topKOnDriver]]. With
     * `routes` (cell → qids) a graph answers only the queries routed to
     * it and partitions holding no routed cell are pruned away; without
     * it every graph answers every query. Each walk over-fetches by the
     * tombstone count and drops tombstoned ids.
     */
   private def walk(
-      spark: SparkSession,
       graphs: RDD[(Int, Graph)],
       queries: Array[(Long, Array[Float])],
       routes: Option[Map[Int, Array[Long]]],
       k: Int,
       efSearch: Int,
-      tombstones: Set[Long],
-      qidCol: String,
-      idCol: String): DataFrame = {
-    import spark.implicits._
+      tombstones: Set[Long]): Array[Hit] = {
     val fetch = k + tombstones.size
     val ef = math.max(efSearch, fetch)
     val byQid = queries.toMap
@@ -670,7 +713,7 @@ object Hnsw {
       val keep = r.keySet.map(graphs.partitioner.get.getPartition)
       PartitionPruningRDD.create(graphs, keep.contains)
     }
-    val qB = spark.sparkContext.broadcast((queries, perGraph, tombstones))
+    val qB = graphs.sparkContext.broadcast((queries, perGraph, tombstones))
     val candidates = probed.mapPartitions { it =>
       val (all, routed, tomb) = qB.value
       it.flatMap { case (key, g) =>
@@ -679,8 +722,8 @@ object Hnsw {
             .collect { case (id, d) if !tomb.contains(id) => (qid, id, d) }
         }
       }
-    }.toDF(qidCol, idCol, "dist")
-    mergeTopK(candidates, k, qidCol, idCol)
+    }
+    topKOnDriver(candidates, k)
   }
 
   // ---- resident graphs ------------------------------------------------

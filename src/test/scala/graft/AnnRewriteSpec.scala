@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
@@ -52,30 +53,38 @@ class AnnRewriteSpec extends GraftSpec {
         exhaustiveProbe = true))
   }
 
-  private def semiJoins(df: DataFrame): Seq[Join] =
-    df.queryExecution.optimizedPlan.collect {
-      case j: Join if j.joinType == LeftSemi => j
-    }
+  /** The candidate-id predicates spliced on vec_id — an In (or InSet,
+    * after OptimizeIn) over literal ids inside a Filter — as the number
+    * of ids each carries.
+    */
+  private def candidateIns(plan: LogicalPlan): Seq[Int] =
+    plan.collect { case f: Filter => f.condition.collect {
+      case In(a: AttributeReference, vs) if a.name == "vec_id" => vs.size
+      case InSet(a: AttributeReference, hs) if a.name == "vec_id" => hs.size
+    } }.flatten
+
+  /** k · overfetch for the specs' registrations (k = 10, overfetch 2). */
+  private val probeIds = 20
 
   test("no registered index: the pattern keeps the exact plan (fallback)") {
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     val plan = AnnIndexRewrite(pattern(qv0).queryExecution.optimizedPlan)
-    assert(plan.collect { case j: Join => j }.isEmpty,
+    assert(candidateIns(plan).isEmpty,
       "without registration the plan must stay the exact Sort+Limit")
   }
 
-  test("registered index: the rule fires and splices a semi-join probe") {
+  test("registered index: the rule fires and splices a candidate-id predicate") {
     VectorExpressions.ensureRegistered(spark)
     registerExhaustive()
     try {
       val before = pattern(qv0).queryExecution.optimizedPlan
       val after = AnnIndexRewrite(before)
-      val joins = after.collect { case j: Join if j.joinType == LeftSemi => j }
-      assert(joins.size === 1, "exactly one probe semi-join spliced")
-      val probeSide = joins.head.right
-      assert(probeSide.collectLeaves().map(_.nodeName) === Seq("ExternalRDD"),
-        "the probe side is the walk over the resident cell graphs, reading no index file")
+      assert(candidateIns(after) === Seq(probeIds),
+        "exactly one candidate-id predicate carrying the k·overfetch probe ids")
+      val leaves = after.collectLeaves()
+      assert(leaves.size === 1 && leaves.head.isInstanceOf[LogicalRelation],
+        s"the rewritten query scans only its source, the probe already ran: $leaves")
     } finally AnnIndexRewrite.clear()
   }
 
@@ -87,10 +96,36 @@ class AnnRewriteSpec extends GraftSpec {
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val df = pattern(qv0)
-      assert(semiJoins(df).size === 1, "the optimizer itself applied the rewrite")
+      assert(candidateIns(df.queryExecution.optimizedPlan) === Seq(probeIds),
+        "the optimizer itself applied the rewrite")
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(got.toSeq === expected.toSeq,
         "index acceleration must not change the exact result")
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      AnnIndexRewrite.clear()
+    }
+  }
+
+  test("an unfiltered planner query: one probe job at plan time, one job to answer") {
+    VectorExpressions.ensureRegistered(spark)
+    AnnIndexRewrite.clear()
+    val qv7 = emb.filter($"vec_id" === 7).select("embedding").head().getSeq[Float](0).toArray
+    val expected = pattern(qv7).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    registerExhaustive()
+    spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
+    try {
+      // the first probe collects the centroids and makes the graphs resident
+      pattern(qv0).collect()
+      val df = pattern(qv7)
+      val planned = SparkWork.of(spark)(df.queryExecution.optimizedPlan)
+      val answered = SparkWork.of(spark)(df.collect())
+      assert(planned.jobs === 1, s"plan time runs the probe as one job: $planned")
+      assert(answered.jobs === 1, s"the rewritten query runs as one job: $answered")
+      assert(candidateIns(df.queryExecution.optimizedPlan) === Seq(probeIds))
+      assert(planned.shuffleReadBytes + answered.shuffleReadBytes === 0L,
+        s"no shuffle: $planned, $answered")
+      assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq === expected.toSeq)
     } finally {
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
@@ -111,7 +146,7 @@ class AnnRewriteSpec extends GraftSpec {
         .select($"vec_id", round(sqrt($"dist2"), 4).as("dist"))
         .orderBy($"dist", $"vec_id")
       val after = AnnIndexRewrite(df.queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join if j.joinType == LeftSemi => j }.size === 1,
+      assert(candidateIns(after) === Seq(probeIds),
         "rewrite must fire through the pushed projection")
       assert(AnnIndexRewrite.fired.get() === before + 1)
     } finally AnnIndexRewrite.clear()
@@ -123,23 +158,6 @@ class AnnRewriteSpec extends GraftSpec {
         VectorExpressions.l2Sq(typedLit(qv), $"embedding").as("dist2"))
       .orderBy($"dist2", $"vec_id")
       .limit(10)
-
-  /** The spliced candidate-id predicate: an In (or InSet, after
-    * OptimizeIn) over literal ids on vec_id inside a Filter.
-    */
-  private def candidatePredicates(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-    plan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-          if f.condition.exists {
-            case org.apache.spark.sql.catalyst.expressions.In(
-                a: org.apache.spark.sql.catalyst.expressions.AttributeReference, _)
-                if a.name == "vec_id" => true
-            case org.apache.spark.sql.catalyst.expressions.InSet(
-                a: org.apache.spark.sql.catalyst.expressions.AttributeReference, _)
-                if a.name == "vec_id" => true
-            case _ => false
-          } => f
-    }
 
   test("filtered pattern: adaptive rewrite fires, result stays exact") {
     // Metadata-filtered kNN — the r15 productive form of what used to
@@ -157,7 +175,7 @@ class AnnRewriteSpec extends GraftSpec {
     try {
       val before = AnnIndexRewrite.firedFiltered.get()
       val df = filteredPattern(qv0)
-      assert(candidatePredicates(df.queryExecution.optimizedPlan).nonEmpty,
+      assert(candidateIns(df.queryExecution.optimizedPlan).nonEmpty,
         "the optimizer spliced the candidate-id predicate into the Filter")
       assert(AnnIndexRewrite.firedFiltered.get() > before, "firedFiltered counted")
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -189,7 +207,7 @@ class AnnRewriteSpec extends GraftSpec {
       val firedBefore = AnnIndexRewrite.firedFiltered.get()
       val df = filteredPattern(qv0)
       val plan = df.queryExecution.optimizedPlan
-      assert(candidatePredicates(plan).isEmpty,
+      assert(candidateIns(plan).isEmpty,
         "no candidate predicate: the rule must decline when survivors < k")
       assert(AnnIndexRewrite.filteredFallbacks.get() > fallbacksBefore,
         "the decline is counter-observable")
@@ -222,7 +240,7 @@ class AnnRewriteSpec extends GraftSpec {
       val fallbacksBefore = AnnIndexRewrite.filteredFallbacks.get()
       val firedBefore = AnnIndexRewrite.firedFiltered.get()
       val df = filteredPattern(qv0)
-      assert(candidatePredicates(df.queryExecution.optimizedPlan).isEmpty,
+      assert(candidateIns(df.queryExecution.optimizedPlan).isEmpty,
         "no candidate predicate: an approx registration must not rewrite filtered shapes")
       assert(AnnIndexRewrite.filteredSkippedApprox.get() > skippedBefore,
         "the decline is counted as skipped-approx")
@@ -243,8 +261,7 @@ class AnnRewriteSpec extends GraftSpec {
     spark.conf.set("spark.graft.ann.rewrite", "false")
     try {
       val after = AnnIndexRewrite(filteredPattern(qv0).queryExecution.optimizedPlan)
-      assert(candidatePredicates(after).isEmpty)
-      assert(after.collect { case j: Join => j }.isEmpty)
+      assert(candidateIns(after).isEmpty)
     } finally {
       spark.conf.unset("spark.graft.ann.rewrite")
       AnnIndexRewrite.clear()
@@ -280,7 +297,7 @@ class AnnRewriteSpec extends GraftSpec {
       val df = batchPattern
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatch.get() > before, "the batch rewrite fired")
-      assert(candidatePredicates(plan).nonEmpty,
+      assert(candidateIns(plan).nonEmpty,
         "the scan side carries the candidate-id predicate")
       assert(collectBatch(df) === expected,
         "batch acceleration must not change any query's exact top-k")
@@ -371,8 +388,8 @@ class AnnRewriteSpec extends GraftSpec {
     try {
       val before = AnnIndexRewrite.fired.get()
       val df = cosinePattern(qv0)
-      assert(semiJoins(df).size === 1,
-        "the cosine key spliced the normalized-index probe semi-join")
+      assert(candidateIns(df.queryExecution.optimizedPlan) === Seq(probeIds),
+        "the cosine key spliced the normalized-index probe's candidate ids")
       assert(AnnIndexRewrite.fired.get() > before)
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(got.toSeq === expected.toSeq,
@@ -390,7 +407,7 @@ class AnnRewriteSpec extends GraftSpec {
     try {
       val qvZero = Array.fill(qv0.length)(0.0f)
       val after = AnnIndexRewrite(cosinePattern(qvZero).queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty,
+      assert(candidateIns(after).isEmpty,
         "a zero query vector has no cosine ranking — the plan must stay exact")
     } finally AnnIndexRewrite.clear()
   }
@@ -405,7 +422,7 @@ class AnnRewriteSpec extends GraftSpec {
     registerCosine() // ONLY metric = "cosine"
     try {
       val after = AnnIndexRewrite(pattern(qv0).queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty,
+      assert(candidateIns(after).isEmpty,
         "metric mismatch: the L2 pattern must not use the cosine index")
     } finally AnnIndexRewrite.clear()
   }
@@ -437,7 +454,7 @@ class AnnRewriteSpec extends GraftSpec {
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatchFiltered.get() > before,
         "the batch-filtered rewrite fired")
-      assert(candidatePredicates(plan).nonEmpty,
+      assert(candidateIns(plan).nonEmpty,
         "the filtered scan side carries the candidate-id predicate")
       assert(collectBatch(df) === expected,
         "batch-filtered acceleration must not change any query's exact filtered top-k")
@@ -468,7 +485,7 @@ class AnnRewriteSpec extends GraftSpec {
       val firedBefore = AnnIndexRewrite.firedBatchFiltered.get()
       val df = batchFilteredPattern
       val plan = df.queryExecution.optimizedPlan
-      assert(candidatePredicates(plan).isEmpty,
+      assert(candidateIns(plan).isEmpty,
         "no candidate predicate: the rule must decline when any query is short")
       assert(AnnIndexRewrite.batchFilteredFallbacks.get() > fallbacksBefore,
         "the decline is counter-observable")
@@ -505,7 +522,7 @@ class AnnRewriteSpec extends GraftSpec {
       val df = batchCosinePattern
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatch.get() > before, "the batch cosine rewrite fired")
-      assert(candidatePredicates(plan).nonEmpty,
+      assert(candidateIns(plan).nonEmpty,
         "the scan side carries the candidate-id predicate")
       assert(collectBatch(df) === expected,
         "batch cosine acceleration must not change any query's exact top-k")
@@ -554,7 +571,7 @@ class AnnRewriteSpec extends GraftSpec {
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatch.get() === before,
         "zero-norm query vector: the batch cosine rewrite must decline")
-      assert(candidatePredicates(plan).isEmpty)
+      assert(candidateIns(plan).isEmpty)
     } finally {
       spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
@@ -583,7 +600,7 @@ class AnnRewriteSpec extends GraftSpec {
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatchFiltered.get() > before,
         "the batch-filtered cosine rewrite fired")
-      assert(candidatePredicates(plan).nonEmpty)
+      assert(candidateIns(plan).nonEmpty)
       assert(collectBatch(df) === expected,
         "the full composition must not change any query's exact filtered top-k")
     } finally {
@@ -619,7 +636,7 @@ class AnnRewriteSpec extends GraftSpec {
         .orderBy($"dist2", $"vec_id")
         .limit(10)
       val before = AnnIndexRewrite(pat.queryExecution.optimizedPlan)
-      assert(before.collect { case j: Join if j.joinType == LeftSemi => j }.size === 1,
+      assert(candidateIns(before) === Seq(probeIds),
         "fresh registration: the rewrite fires")
       // mutate the source: append one more file to the directory
       val top = emb.agg(max($"vec_id")).head().getLong(0)
@@ -628,13 +645,13 @@ class AnnRewriteSpec extends GraftSpec {
         .write.mode("append").parquet(tmp)
       val dropped = AnnIndexRewrite.droppedStale.get()
       val after = AnnIndexRewrite(pat.queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty,
+      assert(candidateIns(after).isEmpty,
         "stale snapshot: the rule must keep the exact plan")
       assert(AnnIndexRewrite.droppedStale.get() > dropped,
         "the self-heal is counter-observable")
       // and the registration is gone — the next plan doesn't even probe
       val again = AnnIndexRewrite(pat.queryExecution.optimizedPlan)
-      assert(again.collect { case j: Join => j }.isEmpty)
+      assert(candidateIns(again).isEmpty)
     } finally {
       spark.conf.unset("spark.graft.ann.staleness.intervalMs")
       AnnIndexRewrite.clear()
@@ -647,20 +664,18 @@ class AnnRewriteSpec extends GraftSpec {
     spark.conf.set("spark.graft.ann.rewrite", "false")
     try {
       val after = AnnIndexRewrite(pattern(qv0).queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty)
+      assert(candidateIns(after).isEmpty)
     } finally {
       spark.conf.unset("spark.graft.ann.rewrite")
       AnnIndexRewrite.clear()
     }
   }
   test("two ANN patterns in one query: no exprId collision, both exact") {
-    // a union of two kNN results over the same registered table: a
-    // DataFrame-backed spec may splice only ONCE per plan (the second
-    // pattern keeps the exact path); a path-backed spec splices fresh
-    // reads and may fire for both. Either way the RESULT must equal
-    // the pure-exact union — and analysis must not blow up on
-    // duplicated index attrs, which is what an unguarded second splice
-    // did.
+    // a union of two kNN results over the same registered table: each
+    // pattern splices its own literal candidate-id predicate, for a
+    // DataFrame-backed and a path-backed spec alike — only literals
+    // enter the plan, so two splices cannot collide on index attrs.
+    // Either way the RESULT must equal the pure-exact union.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     val qv1 = qv0
@@ -670,7 +685,10 @@ class AnnRewriteSpec extends GraftSpec {
     registerExhaustive() // DataFrame-backed (indexPath = None)
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
-      val got = both.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
+      val df1 = both
+      assert(candidateIns(df1.queryExecution.optimizedPlan) === Seq(probeIds, probeIds),
+        "DataFrame-backed spec must accelerate BOTH patterns")
+      val got = df1.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
       assert(got.toSeq === expected.toSeq)
       // path-backed: write the index, register with indexPath, expect
       // BOTH patterns accelerated and the same exact rows
@@ -683,8 +701,8 @@ class AnnRewriteSpec extends GraftSpec {
         AnnIndexRewrite.IndexSpec(spark.read.parquet(tmp), cent,
           nprobe = 4, efSearch = 4096, indexPath = Some(tmp)))
       val df2 = both
-      assert(semiJoins(df2).size === 2,
-        "path-backed spec must accelerate BOTH patterns (fresh reads per splice)")
+      assert(candidateIns(df2.queryExecution.optimizedPlan) === Seq(probeIds, probeIds),
+        "path-backed spec must accelerate BOTH patterns")
       val got2 = df2.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
       assert(got2.toSeq === expected.toSeq)
     } finally {
@@ -714,7 +732,7 @@ class AnnRewriteSpec extends GraftSpec {
       AnnIndexRewrite.register(srcPath,
         AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096))
       val df = pattern(qv0)
-      assert(semiJoins(df).size === 1)
+      assert(candidateIns(df.queryExecution.optimizedPlan) === Seq(probeIds))
       df.collect()
       assert((persisted -- before).size === 1, s"$name: the probe made the cell graphs resident")
       release()
@@ -763,8 +781,8 @@ class AnnRewriteSpec extends GraftSpec {
     try {
       val before = AnnIndexRewrite.fired.get()
       val df = ipPattern(qv0)
-      assert(semiJoins(df).size === 1,
-        "the ip key spliced the augmented-index probe semi-join")
+      assert(candidateIns(df.queryExecution.optimizedPlan) === Seq(probeIds),
+        "the ip key spliced the augmented-index probe's candidate ids")
       assert(AnnIndexRewrite.fired.get() > before)
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(got.toSeq === expected.toSeq,
@@ -782,7 +800,7 @@ class AnnRewriteSpec extends GraftSpec {
     try {
       val qvNaN = qv0.clone(); qvNaN(0) = Float.NaN
       val after = AnnIndexRewrite(ipPattern(qvNaN).queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty,
+      assert(candidateIns(after).isEmpty,
         "a NaN query component has no dot ranking — the plan must stay exact")
     } finally AnnIndexRewrite.clear()
   }
@@ -797,7 +815,7 @@ class AnnRewriteSpec extends GraftSpec {
     registerExhaustive() // ONLY metric = "l2"
     try {
       val after = AnnIndexRewrite(ipPattern(qv0).queryExecution.optimizedPlan)
-      assert(after.collect { case j: Join => j }.isEmpty,
+      assert(candidateIns(after).isEmpty,
         "metric mismatch: the ip pattern must not use the L2 index")
     } finally AnnIndexRewrite.clear()
   }
@@ -818,7 +836,7 @@ class AnnRewriteSpec extends GraftSpec {
       val df = batchIp
       val plan = df.queryExecution.optimizedPlan
       assert(AnnIndexRewrite.firedBatch.get() > before, "the batch ip rewrite fired")
-      assert(candidatePredicates(plan).nonEmpty,
+      assert(candidateIns(plan).nonEmpty,
         "the scan side carries the candidate-id predicate")
       assert(collectBatch(df) === expected,
         "batch ip acceleration must not change any query's exact top-k")

@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,28 +18,8 @@ class VectorStoreSpec extends GraftSpec {
       java.util.Arrays.asList(rows: _*), graft.model.Schemas.collection)
   }
 
-  /** Spark jobs `body` starts, counted under a job group of its own by a
-    * listener read after the listener bus has drained.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"vstore-jobs-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "VectorStoreSpec job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
+  /** Spark jobs `body` starts ([[SparkWork]]). */
+  private def jobsOf(body: => Unit): Int = SparkWork.of(spark)(body).jobs
 
   /** (name, length, modification time) of every file under `dir`. */
   private def files(dir: String): Set[(String, Long, Long)] = {
