@@ -308,7 +308,7 @@ object Bench {
     // artifact write must not fail the bench.
     if (sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS", "1") != "0") {
       try graft.bench.ExperimentArtifacts.writeAll(spark, sfDir, "spark-warehouse/experiment_results")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] experiment artifacts failed: ${e.getMessage}")
       }
     }

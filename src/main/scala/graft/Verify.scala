@@ -67,7 +67,7 @@ object Verify {
       inFlight.add(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         failures.put(name, Option(e.getMessage).getOrElse(e.getClass.getName))
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally inFlight.remove(name)

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +55,7 @@ object ManifestIngest {
           val payload = fetch(id)
           FetchResult(id, "ok", payload.length, "")
         } catch {
-          case e: Throwable => FetchResult(id, "error", 0, String.valueOf(e.getMessage))
+          case NonFatal(e) => FetchResult(id, "error", 0, String.valueOf(e.getMessage))
         }
       }
     }

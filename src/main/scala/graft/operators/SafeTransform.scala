@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
@@ -20,7 +21,7 @@ object SafeTransform {
 
   /** Wrap a fallible function: failures → null (task never dies). */
   def safeUdf[I: TypeTag, O: TypeTag](f: I => O): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((in: I) => try Option(f(in)) catch { case _: Throwable => None })
+    udf((in: I) => try Option(f(in)) catch { case NonFatal(_) => None })
 
   /** Apply a fallible transform, returning (survivors, failedIds) —
     * the reconciliation step the reference does with index bookkeeping.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 
 /** Materialized-aggregate rewrite — the planner family every warehouse
@@ -73,10 +73,11 @@ import org.apache.spark.sql.internal.SQLConf
   *   remap is COUNT(DISTINCT mv.x), NULL-skipping on both sides. Any
   *   other DISTINCT aggregate, and every per-aggregate FILTER clause,
   *   declines (not re-aggregable from a plain rollup);
-  * - a SOURCE-STALENESS fingerprint (same discipline as
-  *   AnnIndexRewrite): the MV is a snapshot claim over the source's
-  *   file listing at registration; a changed listing drops the
-  *   registration (droppedStale) and the query scans the facts.
+  * - the MV is a snapshot of its source's files ([[SourceSnapshots]]):
+  *   a changed listing drops the registration (droppedStale) and the
+  *   query scans the facts; a join view is dropped when EITHER source
+  *   changes; a listing failure declines the plan but keeps the
+  *   registration.
   *
   * Registration is session-lived, like a temp view; a different live
   * session scanning the same path keeps its exact plan.
@@ -116,15 +117,15 @@ object AggRewrite extends Rule[LogicalPlan] {
     * ascending row count among the ones that map the whole query.
     */
   private val registry = TrieMap.empty[String, List[MvSpec]]
-  private val sourceSigs = TrieMap.empty[String, Long]
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
+  // one guard for both registries: MVs keyed by their source path,
+  // join views by their "pathA|pathB" pair (joinRegKey)
+  private val snapshots = new SourceSnapshots("agg")
 
   val fired = new java.util.concurrent.atomic.AtomicLong(0)
   val fallbacks = new java.util.concurrent.atomic.AtomicLong(0)
-  val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
+  val droppedStale: java.util.concurrent.atomic.AtomicLong = snapshots.droppedStale
 
-  private def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+  import SourceSnapshots.{normalize, pathOf}
 
   def register(sourcePath: String, spec: MvSpec): Unit = {
     require(spec.measures.values.forall(m =>
@@ -139,20 +140,15 @@ object AggRewrite extends Rule[LogicalPlan] {
         Some(sized :: list.filterNot(_.groupCols.toSet == sized.groupCols.toSet))
       case None => Some(List(sized))
     }
-    try sourceSigs.put(key, sourceSignature(sourcePath, spec))
-    catch { case _: Exception => sourceSigs.remove(key) }
-    staleChecks.remove(key)
+    snapshots.take(key, Seq(sourcePath), spec.mv.sparkSession)
   }
 
   def unregister(sourcePath: String): Unit = {
     val key = normalize(sourcePath)
-    registry.remove(key); sourceSigs.remove(key); staleChecks.remove(key)
+    registry.remove(key); snapshots.forget(key)
   }
 
-  def clear(): Unit = {
-    registry.clear(); sourceSigs.clear(); staleChecks.clear()
-    joinRegistry.clear(); joinSigs.clear(); joinStaleChecks.clear()
-  }
+  def clear(): Unit = { registry.clear(); joinRegistry.clear(); snapshots.clear() }
 
   /** Clear the plan-time staleness verdict caches WITHOUT touching any
     * registration — the retry-once path of the rewrite_fired pin
@@ -160,74 +156,10 @@ object AggRewrite extends Rule[LogicalPlan] {
     * every plan for a whole check interval, which is exactly the flake
     * the r17 driver run hit.
     */
-  def resetPlanCaches(): Unit = { staleChecks.clear(); joinStaleChecks.clear() }
+  def resetPlanCaches(): Unit = snapshots.resetVerdicts()
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.agg.rewrite", "true").toBoolean
-
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.agg.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the source file listing — the
-    * same commutative per-file mix as AnnIndexRewrite's guard.
-    */
-  private def sourceSignature(sourcePath: String, spec: MvSpec): Long = {
-    val conf = spec.mv.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
-
-  /** Transient listing failures decline THIS plan (the exact plan is
-    * the safe side — serving from a possibly-stale MV for a whole check
-    * interval is the unsafe one; ADVICE r17) but KEEP the registration
-    * and retry after the interval; only a successful listing that
-    * disagrees with the snapshot drops it permanently — the same
-    * three-way verdict as [[AnnIndexRewrite.sourceIsStale]].
-    */
-  private def sourceIsStale(key: String, path: String, spec: MvSpec): Boolean =
-    sourceSigs.get(key) match {
-      case None => false // unfingerprintable at registration: guard off
-      case Some(sig) =>
-        val now = System.nanoTime()
-        staleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            val verdict: Option[Boolean] =
-              try Some(sourceSignature(path, spec) == sig)
-              catch { case _: Exception => None } // transient: unknown
-            val fresh = verdict.getOrElse(false)
-            staleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft agg rewrite: source $path changed since MV " +
-                  "registration — dropping the stale registration (exact plan)")
-                registry.remove(key); sourceSigs.remove(key); staleChecks.remove(key)
-              case None =>
-                logWarning(s"graft agg rewrite: could not re-list $path to verify " +
-                  "MV freshness — keeping the exact plan for this check interval " +
-                  "and retrying (registration kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
 
   // ---- star-schema (join) views ----------------------------------------
 
@@ -245,16 +177,11 @@ object AggRewrite extends Rule[LogicalPlan] {
       mvPath: Option[String] = None)
 
   private val joinRegistry = TrieMap.empty[String, JoinMvSpec]
-  private val joinSigs = TrieMap.empty[String, Long]
-  private val joinStaleChecks = TrieMap.empty[String, (Long, Boolean)]
 
   private def joinRegKey(a: String, b: String): String = {
     val s = Seq(normalize(a), normalize(b)).sorted
     s.head + "|" + s(1)
   }
-
-  private def signatureOf(path: String, session: SparkSession): Long =
-    sourceSignature(path, MvSpec(session.emptyDataFrame, Nil, Map.empty))
 
   def registerJoin(pathA: String, pathB: String, spec: JoinMvSpec): Unit = {
     require(spec.measures.values.forall(m =>
@@ -262,28 +189,17 @@ object AggRewrite extends Rule[LogicalPlan] {
       "measure funcs must be count|sum|min|max")
     val key = joinRegKey(pathA, pathB)
     joinRegistry.put(key, spec)
-    try joinSigs.put(key, signatureOf(pathA, spec.mv.sparkSession) +
-      signatureOf(pathB, spec.mv.sparkSession))
-    catch { case _: Exception => joinSigs.remove(key) }
-    joinStaleChecks.remove(key)
+    // either source changing voids the view
+    snapshots.take(key, Seq(pathA, pathB), spec.mv.sparkSession)
   }
 
   def unregisterJoin(pathA: String, pathB: String): Unit = {
     val key = joinRegKey(pathA, pathB)
-    joinRegistry.remove(key); joinSigs.remove(key); joinStaleChecks.remove(key)
-  }
-
-  /** Scan root path of a parquet V1 leaf. */
-  private def pathOf(leaf: LogicalPlan): Option[org.apache.hadoop.fs.Path] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location.rootPaths.headOption
-      case _ => None
-    }
-    case _ => None
+    joinRegistry.remove(key); snapshots.forget(key)
   }
 
   /** The registered join view for this leaf PAIR (either order), owned
-    * by the current session and not stale — same checks as [[specOf]],
+    * by the current session and not stale — same checks as [[specsOf]],
     * with BOTH sources fingerprinted (either table changing drops it).
     */
   private def joinSpecOf(leafA: LogicalPlan, leafB: LogicalPlan,
@@ -297,42 +213,10 @@ object AggRewrite extends Rule[LogicalPlan] {
         joinRegistry.remove(key); false
       }
       if cur.exists(_ eq spec.mv.sparkSession)
-      if !joinSourcesStale(key, pa.toString, pb.toString, spec)
+      if !snapshots.stale(key, Seq(pa.toString, pb.toString), spec.mv.sparkSession) {
+        joinRegistry.remove(key)
+      }
     } yield (spec, pa.toString, pb.toString)
-
-  private def joinSourcesStale(key: String, pathA: String, pathB: String,
-      spec: JoinMvSpec): Boolean =
-    joinSigs.get(key) match {
-      case None => false
-      case Some(sig) =>
-        val now = System.nanoTime()
-        joinStaleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            // same three-way verdict as sourceIsStale: a transient
-            // listing failure declines-but-keeps (exact plan, retry
-            // after the interval); only a verified change drops the view
-            val verdict: Option[Boolean] =
-              try Some(signatureOf(pathA, spec.mv.sparkSession) +
-                signatureOf(pathB, spec.mv.sparkSession) == sig)
-              catch { case _: Exception => None }
-            val fresh = verdict.getOrElse(false)
-            joinStaleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft agg rewrite: a join-view source ($pathA / $pathB) " +
-                  "changed since registration — dropping the stale view (exact plan)")
-                joinRegistry.remove(key); joinSigs.remove(key); joinStaleChecks.remove(key)
-              case None =>
-                logWarning(s"graft agg rewrite: could not re-list $pathA / $pathB " +
-                  "to verify join-view freshness — keeping the exact plan for this " +
-                  "check interval and retrying (registration kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
 
   private def leafThroughProjects(p: LogicalPlan): LogicalPlan = p match {
     case Project(cols, inner) if cols.forall(_.isInstanceOf[AttributeReference]) =>
@@ -345,28 +229,23 @@ object AggRewrite extends Rule[LogicalPlan] {
     * the whole query). Session-ownership and staleness are per PATH:
     * every MV over the path is a snapshot of the same listing.
     */
-  private def specsOf(leaf: LogicalPlan, cur: Option[SparkSession])
-      : Seq[MvSpec] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.toSeq.flatMap { p =>
-          val key = p.toUri.getPath
-          registry.getOrElse(key, Nil) match {
-            case Nil => Nil
-            case specs if specs.exists(_.mv.sparkSession.sparkContext.isStopped) =>
-              registry.remove(key); Nil
-            case specs if !specs.forall(s => cur.exists(_ eq s.mv.sparkSession)) =>
-              Nil // session-lived registration, like AnnIndexRewrite's
-            case specs if sourceIsStale(key, p.toString, specs.head) =>
-              Nil
-            case specs =>
-              specs.sortBy(s => if (s.rows >= 0) s.rows else Long.MaxValue)
-          }
-        }
-      case _ => Nil
+  private def specsOf(leaf: LogicalPlan, cur: Option[SparkSession]): Seq[MvSpec] =
+    pathOf(leaf).toSeq.flatMap { p =>
+      val key = p.toUri.getPath
+      registry.getOrElse(key, Nil) match {
+        case Nil => Nil
+        case specs if specs.exists(_.mv.sparkSession.sparkContext.isStopped) =>
+          registry.remove(key); Nil
+        case specs if !specs.forall(s => cur.exists(_ eq s.mv.sparkSession)) =>
+          Nil // session-lived registration, like AnnIndexRewrite's
+        case specs if snapshots.stale(key, Seq(p.toString), specs.head.mv.sparkSession) {
+            registry.remove(key)
+          } =>
+          Nil
+        case specs =>
+          specs.sortBy(s => if (s.rows >= 0) s.rows else Long.MaxValue)
+      }
     }
-    case _ => Nil
-  }
 
   /** True when every IEEE-reassociation hazard is absent: integral
     * types re-sum exactly; float/double re-sums reorder additions.

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
@@ -120,6 +119,12 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   * exact plan, never a double probe. A probe with no candidates splices
   * nothing: the exact plan answers.
   *
+  * An index is a snapshot of its source's files: [[SourceSnapshots]]
+  * fingerprints the listing at registration and re-checks it lazily at
+  * plan time; a changed source drops the registration
+  * ([[droppedStale]]) and a listing failure declines the plan, keeping
+  * the registration — either way the exact plan answers.
+  *
   * Known limitation, by design: a `cache()`d source table is
   * substituted with an InMemoryRelation before optimization, which
   * hides the scan's path — such plans keep the exact path (correct,
@@ -172,28 +177,21 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * session-lived, like a temp view.
     */
   private val registry = TrieMap.empty[String, IndexSpec]
-
-  def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+  private val snapshots = new SourceSnapshots("ANN")
 
   private val Metrics = Seq("l2", "cosine", "ip")
 
   private def regKey(path: String, metric: String): String =
-    normalize(path) + "#" + metric
+    SourceSnapshots.normalize(path) + "#" + metric
 
   def register(sourcePath: String, spec: IndexSpec): Unit = {
     require(Metrics.contains(spec.metric), s"unknown metric '${spec.metric}'")
     val key = regKey(sourcePath, spec.metric)
     registry.put(key, spec).foreach(release)
-    // Freeze the source's file listing AT registration: the index is a
-    // snapshot of the table's content, and the exactness contract
-    // (candidates ⊇ true top-k at exhaustive knobs) only holds while
-    // the table IS that snapshot. See [[sourceIsStale]]. An
-    // unfingerprintable source (exotic scheme, listing error) keeps the
-    // guard OFF for that registration rather than blocking it.
-    try sourceSigs.put(key, sourceSignature(sourcePath, spec))
-    catch { case _: Exception => sourceSigs.remove(key) }
-    staleChecks.remove(key)
+    // the exactness contract (candidates ⊇ true top-k at exhaustive
+    // knobs) only holds while the table IS the snapshot the index was
+    // built from
+    snapshots.take(key, Seq(sourcePath), spec.index.sparkSession)
     invalidateProbeCaches()
   }
 
@@ -201,15 +199,14 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     Metrics.foreach { m =>
       val key = regKey(sourcePath, m)
       registry.remove(key).foreach(release)
-      sourceSigs.remove(key)
-      staleChecks.remove(key)
+      snapshots.forget(key)
     }
     invalidateProbeCaches()
   }
 
   def clear(): Unit = {
     registry.keys.foreach(k => registry.remove(k).foreach(release))
-    sourceSigs.clear(); staleChecks.clear()
+    snapshots.clear()
     invalidateProbeCaches()
   }
 
@@ -227,106 +224,12 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * retry. Dropping these entries costs a re-list + re-probe, never
     * correctness.
     */
-  def resetPlanCaches(): Unit = { staleChecks.clear(); invalidateProbeCaches() }
-
-  // ---- source staleness guard ----------------------------------------
-  // A registration is a SNAPSHOT claim: splicing an index probe into a
-  // scan whose files changed since registration would silently drop new
-  // rows (or resurrect deleted ones) from a query whose exact plan would
-  // see them — the one way the "acceleration never changes results"
-  // contract can break without any code being wrong. The guard
-  // fingerprints the source's file listing (path, length, modTime per
-  // file) at registration and revalidates lazily at plan time, at most
-  // once per `spark.graft.ann.staleness.intervalMs` (default 10 s) per
-  // registration — at 100 TB a table may hold 10⁵ files and listing on
-  // EVERY plan event would be the new bottleneck. A stale registration
-  // self-heals: it is dropped (warn logged) and the query runs the
-  // exact plan, mirroring the stopped-session cleanup above.
-  private val sourceSigs = TrieMap.empty[String, Long]
-  // key → (lastCheckedNanos, wasFresh)
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
+  def resetPlanCaches(): Unit = { snapshots.resetVerdicts(); invalidateProbeCaches() }
 
   /** Observability: registrations dropped because their source files
     * changed after registration (the staleness self-heal).
     */
-  val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.ann.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the source directory's file
-    * listing. Hidden/metadata files (`_SUCCESS`, `.crc`) are excluded —
-    * committers rewrite them without touching data.
-    */
-  private def sourceSignature(sourcePath: String, spec: IndexSpec): Long = {
-    val conf = spec.index.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            // commutative mix (sum of per-file hashes): listing order
-            // must not matter
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
-
-  /** True (and, on a VERIFIED change, self-heals the registry) when the
-    * source's current file listing no longer matches the
-    * registration-time snapshot. `sourcePath` must be the scan's FULL
-    * path (scheme + authority intact — the registry key is
-    * scheme-stripped, but listing a scheme-stripped path against the
-    * default FileSystem would misresolve s3a/hdfs sources).
-    *
-    * Transient listing failures (a 503, a race with a concurrent
-    * committer) decline THIS plan — the exact plan is the safe side —
-    * but KEEP the registration and retry after the check interval;
-    * only a successful listing that disagrees with the snapshot drops
-    * the registration permanently.
-    */
-  private def sourceIsStale(key: String, sourcePath: String, spec: IndexSpec): Boolean = {
-    val now = System.nanoTime()
-    val intervalNs = stalenessIntervalMs * 1000000L
-    staleChecks.get(key) match {
-      case Some((t, fresh)) if now - t < intervalNs => !fresh
-      case _ =>
-        val verdict: Option[Boolean] = sourceSigs.get(key) match {
-          case None => Some(true) // unfingerprintable at registration: guard off
-          case Some(sig) =>
-            try Some(sourceSignature(sourcePath, spec) == sig)
-            catch { case _: Exception => None } // transient: unknown
-        }
-        val fresh = verdict.getOrElse(false)
-        staleChecks.put(key, (now, fresh))
-        verdict match {
-          case Some(false) =>
-            registry.remove(key).foreach(release)
-            sourceSigs.remove(key)
-            invalidateProbeCaches()
-            droppedStale.incrementAndGet()
-            logWarning(s"graft ANN rewrite: source files under $sourcePath changed " +
-              "after index registration — dropping the registration and keeping " +
-              "the exact plan (re-register after rebuilding the index)")
-          case None =>
-            logWarning(s"graft ANN rewrite: could not re-list $sourcePath to " +
-              "verify index freshness — keeping the exact plan for this check " +
-              "interval and retrying (registration kept)")
-          case Some(true) => ()
-        }
-        !fresh
-    }
-  }
+  val droppedStale: java.util.concurrent.atomic.AtomicLong = snapshots.droppedStale
 
   /** Count of rewrites applied in this JVM — observability for specs
     * and operators (a registered index that never fires is a config
@@ -414,9 +317,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
   private val warnedNoSession = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** The scan's registered spec for `metric`, if any, owned by the
-    * current session. V1 parquet path only — that is what
-    * `spark.read.parquet` yields under the default
-    * `spark.sql.sources.useV1SourceList`.
+    * current session and not stale (V1 parquet scans only, see
+    * [[SourceSnapshots.pathOf]]).
     *
     * `cur` is the session the plan is being optimized FOR: the
     * session-bound [[AnnIndexRewriteRule]] passes its injected session
@@ -425,45 +327,41 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * thread-local active session.
     */
   private def specOf(leaf: LogicalPlan, metric: String,
-      cur: Option[SparkSession]): Option[IndexSpec] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.flatMap { p =>
-          val key = p.toUri.getPath + "#" + metric
-          registry.get(key).flatMap { spec =>
-            // a registration outlives its owning session only as a bug:
-            // handing a stopped session's DataFrame to a live query
-            // would fail at execution. Self-heal by dropping it — the
-            // query falls back to the exact plan (the rule's contract).
-            if (spec.index.sparkSession.sparkContext.isStopped) {
-              registry.remove(key).foreach(release); None
-            } else if (cur.isEmpty) {
-              if (warnedNoSession.compareAndSet(false, true)) {
-                logWarning("graft ANN rewrite: no current session to check " +
-                  "registration ownership against; keeping the exact plan " +
-                  "(register via a session built withExtensions(GraftExtensions) " +
-                  "to bind the rule to its session)")
-              }
-              None
-            } else if (!cur.exists(_ eq spec.index.sparkSession)) {
-              // registration is SESSION-lived (like a temp view), but the
-              // registry is JVM-global keyed by path: a DIFFERENT live
-              // session scanning the same path must not get this
-              // session's analyzed index subtree spliced into its plan —
-              // it keeps the exact path (correct, just unaccelerated).
-              None
-            } else if (sourceIsStale(key, p.toString, spec)) {
-              // source files changed since registration: the index is a
-              // stale snapshot and splicing it would drop/resurrect rows
-              // the exact plan sees — self-healed inside sourceIsStale
-              None
-            } else Some(spec)
+      cur: Option[SparkSession]): Option[IndexSpec] =
+    SourceSnapshots.pathOf(leaf).flatMap { p =>
+      val key = p.toUri.getPath + "#" + metric
+      registry.get(key).flatMap { spec =>
+        // a registration outlives its owning session only as a bug:
+        // handing a stopped session's DataFrame to a live query
+        // would fail at execution. Self-heal by dropping it — the
+        // query falls back to the exact plan (the rule's contract).
+        if (spec.index.sparkSession.sparkContext.isStopped) {
+          registry.remove(key).foreach(release); None
+        } else if (cur.isEmpty) {
+          if (warnedNoSession.compareAndSet(false, true)) {
+            logWarning("graft ANN rewrite: no current session to check " +
+              "registration ownership against; keeping the exact plan " +
+              "(register via a session built withExtensions(GraftExtensions) " +
+              "to bind the rule to its session)")
           }
-        }
-      case _ => None
+          None
+        } else if (!cur.exists(_ eq spec.index.sparkSession)) {
+          // registration is SESSION-lived (like a temp view), but the
+          // registry is JVM-global keyed by path: a DIFFERENT live
+          // session scanning the same path must not get this
+          // session's analyzed index subtree spliced into its plan —
+          // it keeps the exact path (correct, just unaccelerated).
+          None
+        } else if (snapshots.stale(key, Seq(p.toString), spec.index.sparkSession) {
+            registry.remove(key).foreach(release); invalidateProbeCaches()
+          }) {
+          // the index is a stale snapshot (dropped) or the listing
+          // could not be verified: splicing it could drop/resurrect
+          // rows the exact plan sees
+          None
+        } else Some(spec)
+      }
     }
-    case _ => None
-  }
 
   private def stripCasts(e: Expression): Expression = e match {
     case c: Cast => stripCasts(c.child)

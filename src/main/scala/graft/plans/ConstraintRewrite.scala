@@ -2,13 +2,14 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 
 /** Constraint-based JOIN ELIMINATION — the third planner family, next
@@ -77,11 +78,10 @@ import org.apache.spark.sql.internal.SQLConf
   *  - LEFT OUTER (dim on the right; RIGHT OUTER mirrored) requires
   *    only dim-key uniqueness — NULL or dangling fact keys are kept
   *    null-extended, and the nulls land in columns nobody reads;
-  *  - verified claims are SNAPSHOTS: both paths carry the same
-  *    file-listing fingerprint discipline as the other families — a
-  *    changed listing drops every claim on the path (droppedStale), a
-  *    transient listing failure declines this plan but keeps the
-  *    registration for retry after the interval.
+  *  - verified claims are SNAPSHOTS of both paths' files
+  *    ([[SourceSnapshots]]): a changed listing drops every claim on the
+  *    path (droppedStale), a transient listing failure declines this
+  *    plan but keeps the registration for retry after the interval.
   *
   * Registration is session-lived, like a temp view: every claim
   * records its registering session, and BOTH claim kinds are usable
@@ -118,15 +118,13 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private val uniques = TrieMap.empty[String, UniqueSpec] // normalized dim path
   private val fks = TrieMap.empty[(String, String), FkSpec] // (fact path, fact col)
-  private val sigs = TrieMap.empty[String, Long] // per-path listing snapshot
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
+  private val snapshots = new SourceSnapshots("constraint") // keyed by normalized path
 
   val fired = new java.util.concurrent.atomic.AtomicLong(0)
   val fallbacks = new java.util.concurrent.atomic.AtomicLong(0)
-  val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
+  val droppedStale: java.util.concurrent.atomic.AtomicLong = snapshots.droppedStale
 
-  private def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+  import SourceSnapshots.{normalize, pathOf}
 
   /** Verify `keyCol` unique (no duplicate non-NULL value) in the
     * parquet at `dimPath`, then register the claim. Refuses a column
@@ -142,9 +140,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
         "duplicate non-NULL values")
     val key = normalize(dimPath)
     uniques.put(key, UniqueSpec(spark, keyCol, noNulls = r.getLong(0) == r.getLong(1)))
-    try sigs.put(key, sourceSignature(spark, dimPath))
-    catch { case _: Exception => sigs.remove(key) }
-    staleChecks.remove(key)
+    snapshots.take(key, Seq(dimPath), spark)
   }
 
   /** Verify the referential-integrity claim — zero NULL `factCol`
@@ -167,50 +163,20 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       s"registerForeignKey refused: $factPath.$factCol has values absent from $dimPath.$dimCol")
     val factKey = normalize(factPath)
     fks.put((factKey, factCol), FkSpec(spark, factKey, factCol, dimKey, dimCol))
-    try sigs.put(factKey, sourceSignature(spark, factPath))
-    catch { case _: Exception => sigs.remove(factKey) }
-    staleChecks.remove(factKey)
+    snapshots.take(factKey, Seq(factPath), spark)
   }
 
   def unregister(path: String): Unit = dropClaimsOn(normalize(path))
 
-  def clear(): Unit = { uniques.clear(); fks.clear(); sigs.clear(); staleChecks.clear() }
+  def clear(): Unit = { uniques.clear(); fks.clear(); snapshots.clear() }
 
   /** Clear plan-time staleness verdicts without touching registrations
     * — the [[PlannerPin]] retry-once hook, same as the sibling rules.
     */
-  def resetPlanCaches(): Unit = staleChecks.clear()
+  def resetPlanCaches(): Unit = snapshots.resetVerdicts()
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.constraint.rewrite", "true").toBoolean
-
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.constraint.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the path's file listing — the
-    * shared commutative per-file mix of the other two families.
-    */
-  private def sourceSignature(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
 
   /** Every claim involving the path is a snapshot of its listing:
     * unique claims ON it, FK claims FROM it (fact grew — a new row may
@@ -222,51 +188,16 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     fks.filterInPlace { case (_, spec) =>
       spec.factPath != key && spec.dimPath != key
     }
-    sigs.remove(key); staleChecks.remove(key)
+    snapshots.forget(key)
   }
 
-  /** Three-way staleness verdict per path, shared by both claim kinds:
-    * fresh (proceed), verified-changed (drop every claim on the path),
-    * transient-unknown (decline this plan, keep the claims, retry
-    * after the interval).
+  /** True when `root`'s claims must not be used for this plan — the
+    * [[SourceSnapshots]] verdict, shared by both claim kinds: a
+    * verified change drops every claim on the path.
     */
-  private def pathIsStale(session: SparkSession, key: String, path: String): Boolean =
-    sigs.get(key) match {
-      case None => false // unfingerprintable at registration: guard off
-      case Some(sig) =>
-        val now = System.nanoTime()
-        staleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            val verdict: Option[Boolean] =
-              try Some(sourceSignature(session, path) == sig)
-              catch { case _: Exception => None }
-            val fresh = verdict.getOrElse(false)
-            staleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft constraint rewrite: $path changed since its " +
-                  "constraints were verified — dropping every claim on it (exact plan)")
-                dropClaimsOn(key)
-              case None =>
-                logWarning(s"graft constraint rewrite: could not re-list $path to " +
-                  "verify constraint freshness — keeping the exact plan for this " +
-                  "check interval and retrying (claims kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
-
-  /** Normalized root path of a V1 parquet leaf. */
-  private def pathOf(leaf: LogicalPlan): Option[String] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.map(_.toUri.getPath)
-      case _ => None
-    }
-    case _ => None
+  private def isStale(session: SparkSession, root: Path): Boolean = {
+    val key = root.toUri.getPath
+    snapshots.stale(key, Seq(root.toString), session)(dropClaimsOn(key))
   }
 
   /** Unwrap the dim side to its leaf through attr-only Projects and
@@ -296,7 +227,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * all-matching non-NULL column still all-matches.
     */
   private def fkOrigin(factSide: LogicalPlan, attr: AttributeReference)
-      : Option[String] = {
+      : Option[Path] = {
     val hazard = factSide.exists {
       case Join(_, _, jt, _, _) =>
         jt != Inner && jt != Cross && jt != LeftSemi && jt != LeftAnti
@@ -319,7 +250,8 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       cond: Expression, cur: Option[SparkSession]): Option[LogicalPlan] = {
     val (dimLeaf, dimFilters) = stripDim(dimSide)
     for {
-      dimPath <- pathOf(dimLeaf)
+      dimRoot <- pathOf(dimLeaf)
+      dimPath = dimRoot.toUri.getPath
       uniq <- uniques.get(dimPath)
       if !uniq.session.sparkContext.isStopped || { dropClaimsOn(dimPath); false }
       if cur.exists(_ eq uniq.session) // session-lived, like a temp view
@@ -343,7 +275,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       }
       // no dim column may outlive the join
       if projRefs.subsetOf(factSide.outputSet)
-      if !pathIsStale(uniq.session, dimPath, dimPath)
+      if !isStale(uniq.session, dimRoot)
       // which claims does this join type need? outer = uniqueness only;
       // inner = + the FK (nothing may be dropped); LEFT SEMI = the FK
       // alone would do (dim duplicates don't duplicate a semi join's
@@ -362,11 +294,11 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
         // the fact key needs the verified FK on its origin column —
         // owned by THIS session (an FK verified by another session is
         // no proof here) and staleness-checked by ITS owner session
-        fkOrigin(factSide, factKey).flatMap { factPath =>
-          fks.get((factPath, factKey.name)) match {
+        fkOrigin(factSide, factKey).flatMap { factRoot =>
+          fks.get((factRoot.toUri.getPath, factKey.name)) match {
             case Some(fk) if fk.dimPath == dimPath && fk.dimCol == uniq.keyCol &&
                 cur.exists(_ eq fk.session) &&
-                !pathIsStale(fk.session, factPath, factPath) => Some(true)
+                !isStale(fk.session, factRoot) => Some(true)
             case _ => None
           }
         }
@@ -429,7 +361,8 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def dimClaimHolds(dimLeaf: LogicalPlan, dimFilters: Seq[Expression],
       dimKey: AttributeReference, cur: Option[SparkSession]): Option[String] =
     for {
-      dimPath <- pathOf(dimLeaf)
+      dimRoot <- pathOf(dimLeaf)
+      dimPath = dimRoot.toUri.getPath
       uniq <- uniques.get(dimPath)
       if !uniq.session.sparkContext.isStopped || { dropClaimsOn(dimPath); false }
       if cur.exists(_ eq uniq.session)
@@ -438,7 +371,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
         case IsNotNull(x: AttributeReference) => x.exprId == dimKey.exprId
         case _ => false
       }
-      if !pathIsStale(uniq.session, dimPath, dimPath)
+      if !isStale(uniq.session, dimRoot)
     } yield dimPath
 
   /** The verified-FK check for the fact side of a subquery predicate:
@@ -451,11 +384,11 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def fkHolds(factChild: LogicalPlan, factKey: AttributeReference,
       dimPath: String, dimCol: String, cur: Option[SparkSession]): Boolean =
-    fkOrigin(factChild, factKey).exists { factPath =>
-      fks.get((factPath, factKey.name)).exists(fk =>
+    fkOrigin(factChild, factKey).exists { factRoot =>
+      fks.get((factRoot.toUri.getPath, factKey.name)).exists(fk =>
         fk.dimPath == dimPath && fk.dimCol == dimCol &&
           cur.exists(_ eq fk.session) &&
-          !pathIsStale(fk.session, factPath, factPath))
+          !isStale(fk.session, factRoot))
     }
 
   // ---- uniqueness-driven DISTINCT elimination / COUNT(DISTINCT) fold -----
@@ -484,13 +417,14 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
     leafOf(plan).exists { leaf =>
-      leaf.outputSet.contains(attr) && pathOf(leaf).exists { path =>
+      leaf.outputSet.contains(attr) && pathOf(leaf).exists { root =>
+        val path = root.toUri.getPath
         uniques.get(path).exists { u =>
           u.keyCol == attr.name &&
             (!needNoNulls || u.noNulls) &&
             (!u.session.sparkContext.isStopped || { dropClaimsOn(path); false }) &&
             cur.exists(_ eq u.session) &&
-            !pathIsStale(u.session, path, path)
+            !isStale(u.session, root)
         }
       }
     }
@@ -714,7 +648,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     if (replaced.isEmpty) {
       // a registered dim was in play but the proof didn't close
       val dimRegistered = Seq(l, r).exists(s =>
-        pathOf(stripDim(s)._1).exists(uniques.contains))
+        pathOf(stripDim(s)._1).exists(p => uniques.contains(p.toUri.getPath)))
       if (dimRegistered) fallbacks.incrementAndGet()
     }
     replaced

@@ -624,7 +624,7 @@ class AggRewriteSpec extends GraftSpec {
       AggRewrite.register(srcCopy, AggRewrite.MvSpec(spark.read.parquet(mvDir),
         groupCols = Seq("l_returnflag", "l_linestatus", "l_linenumber"),
         measures = Map("n" -> (("count", ""))), mvPath = Some(mvDir)))
-      spark.conf.set("spark.graft.agg.staleness.intervalMs", "0")
+      spark.conf.set("spark.graft.staleness.intervalMs", "0")
       spark.experimental.extraOptimizations = Seq(AggRewrite)
       def q = spark.read.parquet(srcCopy).groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
       assert(!scansPath(q, srcCopy), "fresh registration fires")
@@ -638,7 +638,7 @@ class AggRewriteSpec extends GraftSpec {
       // and the exact plan sees the appended rows
       assert(after.agg(sum($"n")).head().getLong(0) === 250L)
     } finally {
-      spark.conf.unset("spark.graft.agg.staleness.intervalMs")
+      spark.conf.unset("spark.graft.staleness.intervalMs")
       spark.experimental.extraOptimizations = Nil
       AggRewrite.clear()
       val p = new org.apache.hadoop.fs.Path(base.toString)

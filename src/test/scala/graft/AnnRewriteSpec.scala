@@ -628,7 +628,7 @@ class AnnRewriteSpec extends GraftSpec {
     AnnIndexRewrite.register(tmp,
       AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
         exhaustiveProbe = true))
-    spark.conf.set("spark.graft.ann.staleness.intervalMs", "0")
+    spark.conf.set("spark.graft.staleness.intervalMs", "0")
     try {
       def pat: DataFrame = spark.read.parquet(tmp)
         .select($"vec_id",
@@ -653,7 +653,7 @@ class AnnRewriteSpec extends GraftSpec {
       val again = AnnIndexRewrite(pat.queryExecution.optimizedPlan)
       assert(candidateIns(again).isEmpty)
     } finally {
-      spark.conf.unset("spark.graft.ann.staleness.intervalMs")
+      spark.conf.unset("spark.graft.staleness.intervalMs")
       AnnIndexRewrite.clear()
     }
   }

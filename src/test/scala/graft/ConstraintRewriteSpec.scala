@@ -463,7 +463,7 @@ class ConstraintRewriteSpec extends GraftSpec {
     Tables.customer(spark, sfDir).write.mode("overwrite").parquet(tmp)
     ConstraintRewrite.registerUnique(spark, tmp, "c_custkey")
     spark.experimental.extraOptimizations = Seq(ConstraintRewrite)
-    spark.conf.set("spark.graft.constraint.staleness.intervalMs", "0")
+    spark.conf.set("spark.graft.staleness.intervalMs", "0")
     try {
       def q = Tables.orders(spark, sfDir)
         .join(spark.read.parquet(tmp), $"o_custkey" === $"c_custkey", "left_outer")
@@ -479,7 +479,7 @@ class ConstraintRewriteSpec extends GraftSpec {
       ConstraintRewrite.resetPlanCaches()
       assert(scansPath(q, tmp))
     } finally {
-      spark.conf.unset("spark.graft.constraint.staleness.intervalMs")
+      spark.conf.unset("spark.graft.staleness.intervalMs")
       spark.experimental.extraOptimizations = Nil
       ConstraintRewrite.clear()
     }

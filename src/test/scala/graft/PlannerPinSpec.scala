@@ -74,7 +74,7 @@ class PlannerPinSpec extends GraftSpec {
           VectorExpressions.l2Sq(typedLit(qv), $"embedding").as("dist2"))
         .orderBy($"dist2", $"vec_id").limit(10)
       // a poisoned verdict must outlive the test unless healed explicitly
-      spark.conf.set("spark.graft.ann.staleness.intervalMs", "3600000")
+      spark.conf.set("spark.graft.staleness.intervalMs", "3600000")
       spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
       try {
         val detect = PlannerPin.annSpliced("vec_id") _
@@ -106,7 +106,7 @@ class PlannerPinSpec extends GraftSpec {
         assert(AnnIndexRewrite.droppedStale.get() === droppedBefore,
           "a transient failure must not drop the registration")
       } finally {
-        spark.conf.unset("spark.graft.ann.staleness.intervalMs")
+        spark.conf.unset("spark.graft.staleness.intervalMs")
         spark.experimental.extraOptimizations = Nil
         AnnIndexRewrite.clear()
       }
@@ -124,7 +124,7 @@ class PlannerPinSpec extends GraftSpec {
         mvPath = Some(tmp)))
       def build(): DataFrame = emb.groupBy($"label").agg(count(lit(1)).as("n"))
       val detect = PlannerPin.aggSpliced(Seq(src)) _
-      spark.conf.set("spark.graft.agg.staleness.intervalMs", "3600000")
+      spark.conf.set("spark.graft.staleness.intervalMs", "3600000")
       spark.experimental.extraOptimizations = Seq(AggRewrite)
       try {
         assert(detect(build().queryExecution.optimizedPlan),
@@ -145,7 +145,7 @@ class PlannerPinSpec extends GraftSpec {
         assert(AggRewrite.droppedStale.get() === droppedBefore,
           "a transient failure must not drop the registration")
       } finally {
-        spark.conf.unset("spark.graft.agg.staleness.intervalMs")
+        spark.conf.unset("spark.graft.staleness.intervalMs")
         spark.experimental.extraOptimizations = Nil
         AggRewrite.clear()
       }
