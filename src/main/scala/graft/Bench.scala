@@ -119,14 +119,6 @@ object Bench {
       val rest = all.filterNot(n => serialNames.contains(n))
       heavyFirst.filter(rest.contains) ++ rest.filterNot(heavyFirst.contains)
     }
-    // One full suite pass: stage 0 runs the shared-cache builder to
-    // completion first — the n-gram pair list (persisted MEMORY_AND_DISK
-    // inside SparkEntry) feeds dedup_ngram_jaccard, dedup_clusters,
-    // dedup_clusters_distributed and dedup_drop_list, and persist() does
-    // NOT dedupe in-flight partition computation, so submitting those
-    // concurrently recomputes the most expensive intermediate once per
-    // consumer (the r5 stampede). The builder's time carries the build
-    // cost; dependents read the cache.
     // the latest failure of each query, across every pass
     val errors = new ConcurrentHashMap[String, Throwable]()
     def runPass(dir: String, serial: Boolean = false): (Double, Map[String, Double]) = {
@@ -144,24 +136,14 @@ object Bench {
         }
       }
       val t0 = System.nanoTime()
-      // Shared-cache builders run to completion BEFORE their dependents
-      // are submitted — persist() does not dedupe in-flight partition
-      // computation (the r5 4× stampede): dedup_ngram_jaccard feeds the
-      // pair-list cache; search_bm25 materializes the shared postings +
-      // its idf frame, and search_vsm_cosine the VSM doc-side frames
-      // (weights + norms — bm25 never touches them), so the rrf/logprob
-      // consumers find every bundle frame already computed.
-      // bpe_train_merges populates sharedBpe: its two dependents would
-      // otherwise BLOCK inside computeIfAbsent (wasting pool slots for
-      // the whole training) rather than recompute.
-      val cacheBuilders = Seq("dedup_ngram_jaccard", "search_bm25", "search_vsm_cosine",
-        "bpe_train_merges")
+      // One full suite pass. The cache builders run to completion BEFORE
+      // their dependents are submitted: persist() does not dedupe
+      // in-flight partition computation (the r5 4× stampede), and a
+      // dependent of a slot still building would wait on its future,
+      // holding a pool slot for the whole build. The builders fill
+      // disjoint slots, so they overlap safely on a small pool (r21).
+      val cacheBuilders = SparkEntry.cacheBuilderQueries.toSeq.sorted
         .filter(pooledNames.contains)
-      // The builders populate four DISJOINT caches (pair list, postings
-      // bundle, VSM frames, BPE merges) — no builder reads another's
-      // cache, so they overlap safely on a small pool (r21); only their
-      // DEPENDENTS must wait, and they do: the pool below is not
-      // submitted until every builder returns.
       if (cacheBuilders.nonEmpty) {
         val bpool = Executors.newFixedThreadPool(math.min(cacheBuilders.size, threads))
         cacheBuilders.foreach(n => bpool.execute(() => runOne(n)))

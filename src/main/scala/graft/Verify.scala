@@ -72,9 +72,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally inFlight.remove(name)
     }
-    val prelude = Seq("dedup_ngram_jaccard", "search_bm25",
-      "search_vsm_cosine", "bpe_train_merges").filter(queries.contains) ++
-      SparkEntry.gateMutatingQueries.toSeq.sorted.filter(queries.contains)
+    val prelude = (SparkEntry.cacheBuilderQueries.toSeq.sorted ++
+      SparkEntry.gateMutatingQueries.toSeq.sorted).filter(queries.contains)
     prelude.foreach(runOne)
     val rest = queries.keys.toSeq.sorted.filterNot(prelude.contains)
     if (threads <= 1) rest.foreach(runOne)

@@ -76,25 +76,19 @@ object Schemas {
 
 /** Loaders for the driver-generated fixtures under /root/testdata/sf*. */
 object Tables {
-  /** Inferred-schema cache per (session, dir, table) — every
+  /** Inferred schema per (session, path): every
     * `spark.read.parquet(path)` call re-reads a footer on the driver to
     * infer the schema, and the bench calls these loaders thousands of
     * times per pass (276 queries × ~2 tables × passes). The fixtures
-    * are immutable for a session's lifetime, so cache the first
-    * inference and declare it on subsequent reads (r22, guide §1.2 —
-    * the per-query constant-cost sweep). [[clearSchemaCache]] is wired
-    * into SparkEntry.clearCaches.
+    * are immutable for a session's lifetime, so the first inference is
+    * declared on later reads. A [[graft.operators.SharedFrames]] slot,
+    * dropped by SparkEntry.clearCaches.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  def clearSchemaCache(): Unit = schemaCache.clear()
+  private val schemas = graft.operators.SharedFrames.slot[StructType]("schema")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = System.identityHashCode(spark) + "|" + path
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = schemas(spark, path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -30,9 +30,10 @@ import org.apache.spark.sql.DataFrame
   * Release: a plain `DataFrame.unpersist` is a CacheManager no-op for
   * checkpointed frames — the persisted object is the RDD behind the
   * LogicalRDD leaf, so that is what gets unpersisted (the technique
-  * `Dedup.releaseCheckpoints` established). `releaseAll` is wired into
-  * `SparkEntry.clearCaches`; Bench additionally calls it between suite
-  * passes so 5 passes do not stack ~20 checkpoints each.
+  * `Dedup.releaseCheckpoints` established). `SparkEntry.clearCaches`
+  * calls `releaseAll` next to `SharedFrames.clear`; Bench calls
+  * `releaseTransients` between suite passes so 5 passes do not stack ~20
+  * checkpoints each.
   */
 object Materialize {
 
@@ -40,9 +41,9 @@ object Materialize {
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
 
-  /** Session-lifetime materializations (frames a SHARED cache entry
+  /** Session-lifetime materializations (frames a [[SharedFrames]] slot
     * reads from — releasing them between bench passes would strand the
-    * cache's consumers on unrecomputable lineage). Released only by
+    * slot's consumers on unrecomputable lineage). Released only by
     * [[releaseAll]] (clearCaches teardown), never by
     * [[releaseTransients]].
     */

@@ -150,6 +150,9 @@ object AggRewrite extends Rule[LogicalPlan] {
 
   def clear(): Unit = { registry.clear(); joinRegistry.clear(); snapshots.clear() }
 
+  /** No MV and no join view is registered. */
+  private[graft] def isEmpty: Boolean = registry.isEmpty && joinRegistry.isEmpty
+
   /** Clear the plan-time staleness verdict caches WITHOUT touching any
     * registration — the retry-once path of the rewrite_fired pin
     * ([[PlannerPin]]): a transient listing failure otherwise declines

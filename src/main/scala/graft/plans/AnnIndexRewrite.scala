@@ -204,6 +204,9 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     invalidateProbeCaches()
   }
 
+  /** No index is registered. */
+  private[graft] def isEmpty: Boolean = registry.isEmpty
+
   def clear(): Unit = {
     registry.keys.foreach(k => registry.remove(k).foreach(release))
     snapshots.clear()

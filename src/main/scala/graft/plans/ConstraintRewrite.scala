@@ -170,6 +170,9 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   def clear(): Unit = { uniques.clear(); fks.clear(); snapshots.clear() }
 
+  /** No claim is registered. */
+  private[graft] def isEmpty: Boolean = uniques.isEmpty && fks.isEmpty
+
   /** Clear plan-time staleness verdicts without touching registrations
     * — the [[PlannerPin]] retry-once hook, same as the sibling rules.
     */

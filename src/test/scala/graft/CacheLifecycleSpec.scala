@@ -1,9 +1,10 @@
 package graft
 
-/** The shared-computation cache (SparkEntry.sharedNgramPairs) must not
-  * leak persisted blocks past clearCaches() — Bench/Verify call it on
-  * teardown; a long-lived multi-tenant host would otherwise accumulate
-  * pinned pair lists for the life of the JVM.
+/** The shared builds (SparkEntry's SharedFrames slots) must not leak
+  * persisted blocks, planner registrations or temp dirs past
+  * clearCaches() — Bench/Verify call it on teardown; a long-lived
+  * multi-tenant host would otherwise accumulate them for the life of
+  * the JVM.
   */
 class CacheLifecycleSpec extends GraftSpec {
 
@@ -27,5 +28,37 @@ class CacheLifecycleSpec extends GraftSpec {
     // And the surface still works after invalidation (cache repopulates).
     assert(SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir).count() > 0)
     SparkEntry.clearCaches()
+  }
+
+  test("clearCaches releases the search, chunk, winnow and planner builds") {
+    // the six shared planner builds each write one temp dir
+    val plannerDirs = Set("graft_annidx", "graft_annidx_cos", "graft_annidx_ip",
+      "graft_aggmv", "graft_aggmv_coarse", "graft_aggjoinmv")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def plannerTemps: Set[java.io.File] = tmp.listFiles().toSet
+      .filter(f => plannerDirs.contains(f.getName.replaceAll("\\d+$", "")))
+    SparkEntry.clearCaches()
+    graft.plans.AnnIndexRewrite.clear()
+    graft.plans.AggRewrite.clear()
+    graft.plans.ConstraintRewrite.clear()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val tempsBefore = plannerTemps
+    Seq("search_bm25", "rag_chunk_retrieve", "dedup_winnow_clusters",
+      "ann_planner_rewrite", "ann_planner_cosine", "ann_planner_ip",
+      "agg_planner_choice", "agg_planner_join", "fk_planner_inner")
+      .foreach(n => SparkEntry.queries(n)(spark, sfDir).collect())
+    val mine = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    val temps = plannerTemps -- tempsBefore
+    assert(mine.nonEmpty, "the shared builds should be persisted while in use")
+    assert(temps.map(_.getName.replaceAll("\\d+$", "")) === plannerDirs)
+    assert(!graft.plans.AnnIndexRewrite.isEmpty && !graft.plans.AggRewrite.isEmpty &&
+      !graft.plans.ConstraintRewrite.isEmpty, "the planner builds should be registered")
+    SparkEntry.clearCaches()
+    val left = spark.sparkContext.getPersistentRDDs.keySet intersect mine
+    assert(left.isEmpty, s"clearCaches must remove every cache-owned persisted RDD, left: $left")
+    assert(graft.plans.AnnIndexRewrite.isEmpty, "ANN registrations must be dropped")
+    assert(graft.plans.AggRewrite.isEmpty, "MV registrations must be dropped")
+    assert(graft.plans.ConstraintRewrite.isEmpty, "constraint claims must be dropped")
+    assert(temps.filter(_.exists).isEmpty, "the planner temp dirs must be deleted")
   }
 }
