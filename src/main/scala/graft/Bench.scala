@@ -40,35 +40,6 @@ object Bench {
     b.append('"').toString
   }
 
-  /** Queries that run SERIALLY, before the pool, each with the whole
-    * local cluster to itself — the way a real cluster schedules its big
-    * queries. Two kinds live here: the measured heavy hitters (whose
-    * many-stage plans inflate 4-5× under slot contention) and the
-    * iterative star-contraction query (per-round barrier jobs stack
-    * queue latency × rounds when slots are shared). The pooled long
-    * tail (~0.5-3s each) overlaps fine.
-    */
-  private val heavySerial = Seq(
-    "dedup_containment", "dedup_clusters_distributed", "ann_lsh_top10",
-    "ann_rplsh_top10", "recall_curve", "dedup_embedding_cosine")
-
-  /** Longest-processing-time-first submission order for the pooled rest
-    * (LPT minimizes makespan on a fixed pool).
-    */
-  private val heavyFirst = Seq(
-    "agg_stream_join_dim_update", "events_sessionize_stream",
-    "dedup_stream_maintain", "agg_stream_join_maintain", "agg_stream_maintain",
-    "q9_profit_by_nation_year", "ann_ivfpq_multi",
-    "multimodal_decode_rgb", "ann_index_stream_append", "ann_hnsw_stream_append",
-    "search_maxsim", "quality_lm_spearman", "customers_entity_match",
-    "rag_chunk_retrieve",
-    "q2_min_cost_supplier", "dedup_clusters", "dedup_drop_list",
-    "corpus_dsir_weights", "dedup_semantic",
-    "ann_ivf_top5", "dedup_exact", "dedup_minhash",
-    "embed_tfidf", "quality_score", "lineitem_corr", "dedup_simhash",
-    "doc_fingerprint", "events_sessionize", "q1_agg", "q5_region_revenue",
-    "events_json_stats")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to every available core: the driver sets SPARK_GRAFT_SF_DIR
@@ -114,10 +85,11 @@ object Bench {
     graft.functions.TextExpressions.ensureRegistered(spark)
 
     val all = SparkEntry.queries.keys.toSeq.sorted
-    val serialNames = heavySerial.filter(all.contains)
+    val serialNames = SparkEntry.benchHeavySerial.filter(all.contains)
     val pooledNames = {
       val rest = all.filterNot(n => serialNames.contains(n))
-      heavyFirst.filter(rest.contains) ++ rest.filterNot(heavyFirst.contains)
+      val first = SparkEntry.benchHeavyFirst
+      first.filter(rest.contains) ++ rest.filterNot(first.contains)
     }
     // the latest failure of each query, across every pass
     val errors = new ConcurrentHashMap[String, Throwable]()

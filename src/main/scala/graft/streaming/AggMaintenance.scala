@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Incremental maintenance of a materialized rollup — the streaming
   * twin of the summary tables [[graft.plans.AggRewrite]] serves (the
@@ -80,68 +78,24 @@ object AggMaintenance {
     readView(spark, rollupDir, groupCols, measures)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=0")
 
-  /** Stream fact-shaped parquet from `srcDir`, maintaining the rollup
-    * one micro-batch at a time.
+  /** Hash-shatter key of the three Agg cycles: the whole fact row (the
+    * maintained views are batching-invariant by contract).
     */
-  def streamRollup(
-      spark: SparkSession,
-      srcDir: String,
-      rollupDir: String,
-      checkpointDir: String,
-      groupCols: Seq[String],
-      measures: Measures,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    // the shatter writer knows the schema — a caller that passes it
-    // skips the per-cycle footer-read job (r22, guide §1.2)
-    val srcSchema = schema.getOrElse(spark.read.parquet(srcDir).schema)
-    spark.readStream
-      .schema(srcSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), groupCols, measures, rollupDir, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  private def allCols(facts: DataFrame): Seq[Column] = facts.columns.toSeq.map(col)
 
-  /** The whole cycle on a batch table: shatter into `nFiles` source
-    * files, stream them one per micro-batch, return the final view
-    * (materialized; temp files deleted before returning).
+  /** The whole cycle on a batch table ([[StreamTwin.run]]): return the
+    * final view.
     */
   def maintainFromBatch(
       spark: SparkSession,
       facts: DataFrame,
       groupCols: Seq[String],
       measures: Measures,
-      nFiles: Int = 3): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_agg_maint")
-    val srcDir = base.resolve("src").toString
-    val rollupDir = base.resolve("rollup").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      // deterministic hash shatter (r22, guide §2.5): a keyless
-      // repartition(n) pays a local sort of every row first
-      // (sortBeforeRepartition, for retry determinism) — hashing the
-      // whole row gets the same deterministic n-way split without the
-      // sort, and the maintained view is batching-invariant by contract
-      facts.repartition(nFiles, xxhash64(facts.columns.map(col): _*))
-        .write.parquet(srcDir)
-      val q = streamRollup(spark, srcDir, rollupDir, ckptDir, groupCols, measures,
-        schema = Some(IndexMaintenance.nullableSchema(facts.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(
-        readView(spark, rollupDir, groupCols, measures))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
+      nFiles: Int = 3): DataFrame =
+    StreamTwin.run(spark, "graft_agg_maint", facts, nFiles, allCols(facts)) {
+      (dir, batch, batchId) =>
+        appendBatch(batch, groupCols, measures, s"$dir/rollup", batchId)
+    } { dir => readView(spark, s"$dir/rollup", groupCols, measures) }
 
   // ---- join-view maintenance (the AGGREGATE JOIN VIEW's stream twin) ----
 
@@ -181,9 +135,9 @@ object AggMaintenance {
       groupCols: Seq[String], measures: Measures): DataFrame =
     readView(spark, rollupDir, groupCols, measures)
 
-  /** The whole join-view cycle on batch tables: shatter the facts,
-    * stream them one file per micro-batch against the static dim,
-    * return the final view.
+  /** The whole join-view cycle on batch tables ([[StreamTwin.run]])
+    * against the static dim, materialized once for every batch's join
+    * and released once the view is materialized: return the final view.
     */
   def maintainJoinFromBatch(
       spark: SparkSession,
@@ -193,41 +147,14 @@ object AggMaintenance {
       groupCols: Seq[String],
       measures: Measures,
       nFiles: Int = 3): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_aggjoin_maint")
-    val srcDir = base.resolve("src").toString
-    val rollupDir = base.resolve("rollup").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      facts.repartition(nFiles, xxhash64(facts.columns.map(col): _*))
-        .write.parquet(srcDir)
-      val dimStatic = graft.operators.Materialize.materializeOnly(dim) // joined once per batch
-      val schema = IndexMaintenance.nullableSchema(facts.schema)
-      val q = spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          appendJoinBatch(batch.toDF(), dimStatic, joinCond, groupCols, measures,
-            rollupDir, batchId)
-          ()
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val view = graft.operators.Materialize(
-        readJoinView(spark, rollupDir, groupCols, measures))
-      // immediate release: Dataset.unpersist is a CacheManager no-op for
-      // checkpoint frames — the LogicalRDD-level release actually frees
-      // the blocks (r22)
-      graft.operators.Materialize.releaseOne(dimStatic)
-      view
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    val dimStatic = graft.operators.Materialize.materializeOnly(dim)
+    // released explicitly: Dataset.unpersist is a CacheManager no-op for
+    // checkpoint frames — the LogicalRDD-level release frees the blocks
+    try StreamTwin.run(spark, "graft_aggjoin_maint", facts, nFiles, allCols(facts)) {
+      (dir, batch, batchId) => appendJoinBatch(batch, dimStatic, joinCond, groupCols,
+        measures, s"$dir/rollup", batchId)
+    } { dir => readJoinView(spark, s"$dir/rollup", groupCols, measures) }
+    finally graft.operators.Materialize.releaseOne(dimStatic)
   }
 
   // ---- join-view maintenance under DIM UPDATES (SCD refresh) ------------
@@ -361,9 +288,9 @@ object AggMaintenance {
     kept.unionByName(recomputed)
   }
 
-  /** The whole dim-update cycle on batch tables: stream the shattered
-    * facts into KEYED partials (dim untouched), materialize the view
-    * over `dimV1`, apply the `dimV1 → dimV2` update by touched-group
+  /** The whole dim-update cycle on batch tables ([[StreamTwin.run]]):
+    * stream the facts into KEYED partials (dim untouched), derive the
+    * view over `dimV1`, apply the `dimV1 → dimV2` update by touched-group
     * refresh, and return the refreshed view — which must hash-match
     * the bulk `facts ⋈ dimV2 groupBy` (the `agg_stream_join_dim_update`
     * oracle).
@@ -378,43 +305,18 @@ object AggMaintenance {
       dimGroupCols: Seq[String],
       factGroupCols: Seq[String],
       measures: Measures,
-      nFiles: Int = 3): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_aggdim_maint")
-    val srcDir = base.resolve("src").toString
-    val rollupDir = base.resolve("rollup").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      facts.repartition(nFiles, xxhash64(facts.columns.map(col): _*))
-        .write.parquet(srcDir)
-      val schema = IndexMaintenance.nullableSchema(facts.schema)
-      val q = spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          appendKeyedBatch(batch.toDF(), factKey, factGroupCols, measures,
-            rollupDir, batchId)
-          ()
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      nFiles: Int = 3): DataFrame =
+    StreamTwin.run(spark, "graft_aggdim_maint", facts, nFiles, allCols(facts)) {
+      (dir, batch, batchId) => appendKeyedBatch(batch, factKey, factGroupCols, measures,
+        s"$dir/rollup", batchId)
+    } { dir =>
       val partials =
-        readKeyedPartials(spark, rollupDir, factKey, factGroupCols, measures)
+        readKeyedPartials(spark, s"$dir/rollup", factKey, factGroupCols, measures)
       // v1 is consumed exactly once (the refresh's carried-rows
-      // anti-join), so its old eager localCheckpoint was a pure extra
-      // job + materialization — let it inline into the refresh plan (r22)
+      // anti-join), so it inlines into the refresh plan unmaterialized
       val v1 = viewOverDim(partials, dimV1, factKey, dimKey, dimGroupCols,
         factGroupCols, measures)
-      graft.operators.Materialize(
-        refreshViewForDimUpdate(v1, partials, dimV1, dimV2, factKey,
-          dimKey, dimGroupCols, factGroupCols, measures))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      refreshViewForDimUpdate(v1, partials, dimV1, dimV2, factKey,
+        dimKey, dimGroupCols, factGroupCols, measures)
     }
-  }
 }

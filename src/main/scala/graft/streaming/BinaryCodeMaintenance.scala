@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.search.BinaryHash
 
@@ -27,7 +25,7 @@ import graft.search.BinaryHash
 object BinaryCodeMaintenance {
 
   /** Code one micro-batch and commit it as a full overwrite of
-    * `codesDir/batch_id=<batchId>/` (idempotent under foreachBatch
+    * `codesDir/batch_id=<batchId>/` (idempotent under micro-batch
     * retries — see the object doc).
     */
   def appendBatch(
@@ -43,62 +41,20 @@ object BinaryCodeMaintenance {
       .parquet(s"$codesDir/batch_id=$batchId")
   }
 
-  /** Stream embeddings-shaped parquet from `srcDir`, coding each
-    * micro-batch against the frozen thresholds.
-    */
-  def streamCodes(
-      spark: SparkSession,
-      srcDir: String,
-      codesDir: String,
-      checkpointDir: String,
-      thr: Array[Long],
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    spark.readStream
-      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), thr, codesDir, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** The whole cycle on a batch table: shatter into `nFiles` source
-    * files, stream them one per micro-batch, return the final
-    * (vec_id, code_lo, code_hi) — materialized off the temp files,
-    * which are deleted before returning.
+  /** The whole cycle on a batch table ([[StreamTwin.run]]): return the
+    * final (vec_id, code_lo, code_hi).
     */
   def maintainFromBatch(
       spark: SparkSession,
       emb: DataFrame,
       thr: Array[Long],
-      nFiles: Int = 2): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_bin_maint")
-    val srcDir = base.resolve("src").toString
-    val codesDir = base.resolve("codes").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      // source projected to the consumed columns (guide §2.3, r21):
-      // coding/assignment reads (vec_id, embedding) only
-      val src = emb.select(col("vec_id"), col("embedding"))
-      // deterministic hash shatter — no keyless-repartition pre-sort
-      // (r22, guide §2.5); coding is per-row pure
-      src.repartition(nFiles, xxhash64(col("vec_id")))
-        .write.parquet(srcDir)
-      val q = streamCodes(spark, srcDir, codesDir, ckptDir, thr,
-        schema = Some(IndexMaintenance.nullableSchema(src.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(spark.read.parquet(codesDir)
-        .select(col("vec_id"), col("code_lo"), col("code_hi")))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      nFiles: Int = 2): DataFrame =
+    // source projected to the consumed columns, hash-shattered on vec_id
+    // (coding is per-row pure)
+    StreamTwin.run(spark, "graft_bin_maint", emb.select(col("vec_id"), col("embedding")),
+      nFiles, Seq(col("vec_id"))) {
+      (dir, batch, batchId) => appendBatch(batch, thr, s"$dir/codes", batchId)
+    } { dir =>
+      spark.read.parquet(s"$dir/codes").select(col("vec_id"), col("code_lo"), col("code_hi"))
     }
-  }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
 
@@ -25,7 +24,7 @@ import graft.dedup.Dedup
   *      overwrite of `pairsDir/batch_id=N/`, and P commits as an
   *      overwrite of `storeDir/batch_id=N/` — the same per-batch-
   *      directory idempotent commit as [[IndexMaintenance.appendBatch]]
-  *      (foreachBatch is at-least-once; a replayed batch replaces its
+  *      (a micro-batch is at-least-once; a replayed batch replaces its
   *      own subtrees, and the store read is pinned to batch_id < N so a
   *      retry never pairs a batch against its own half-committed
   *      postings).
@@ -130,43 +129,10 @@ object DedupMaintenance {
     IndexMaintenance.parquetFileCount(spark, outDir)
   }
 
-  /** Stream documents-shaped parquet files from `srcDir`, flagging each
-    * micro-batch and folding it into the posting store via
-    * [[appendBatch]].
-    */
-  def streamDedup(
-      spark: SparkSession,
-      srcDir: String,
-      storeDir: String,
-      pairsDir: String,
-      checkpointDir: String,
-      n: Int = 3,
-      threshold: Double = 0.6,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    // schema from the caller when it knows what it shattered, else one
-    // footer read (r22)
-    spark.readStream
-      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), storeDir, pairsDir, batchId, n, threshold)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Run the whole maintenance cycle on a batch table: shatter `docs`
-    * into `nFiles` source files, stream them one file per micro-batch,
-    * and return the union of per-batch pair flags (id_a, id_b, jaccard)
-    * — by the equivalence contract, exactly the all-pairs near-dup set.
-    * Temp dirs (source copy, store, pairs, checkpoint) are deleted
-    * before returning.
+  /** Run the whole maintenance cycle on a batch table
+    * ([[StreamTwin.run]]) and return the union of per-batch pair flags
+    * (id_a, id_b, jaccard) — by the equivalence contract, exactly the
+    * all-pairs near-dup set.
     */
   def maintainFromBatch(
       spark: SparkSession,
@@ -178,28 +144,14 @@ object DedupMaintenance {
       nFiles: Int = 2,
       n: Int = 3,
       threshold: Double = 0.6): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_maint")
-    val srcDir = base.resolve("src").toString
-    val storeDir = base.resolve("store").toString
-    val pairsDir = base.resolve("pairs").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      // Source-side column pruning (guide §2.3): shingling consumes
-      // exactly (doc_id, text); lang/source/n_chars were dead bytes in
-      // the shatter write and every micro-batch read.
-      val src = docs.select(col("doc_id"), col("text"))
-      // deterministic hash shatter — no keyless-repartition pre-sort
-      // (r22, guide §2.5); the pair set is batching-invariant by contract
-      src.repartition(nFiles, xxhash64(col("doc_id"), col("text")))
-        .write.parquet(srcDir)
-      val q = streamDedup(spark, srcDir, storeDir, pairsDir, ckptDir, n, threshold,
-        schema = Some(IndexMaintenance.nullableSchema(src.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(spark.read.parquet(pairsDir)
-        .select(col("id_a"), col("id_b"), col("jaccard")))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // shingling consumes exactly (doc_id, text): the source projection
+    // and the hash-shatter key
+    val docCols = Seq(col("doc_id"), col("text"))
+    StreamTwin.run(spark, "graft_dedup_maint", docs.select(docCols: _*), nFiles, docCols) {
+      (dir, batch, batchId) =>
+        appendBatch(batch, s"$dir/store", s"$dir/pairs", batchId, n, threshold)
+    } { dir =>
+      spark.read.parquet(s"$dir/pairs").select(col("id_a"), col("id_b"), col("jaccard"))
     }
   }
 }

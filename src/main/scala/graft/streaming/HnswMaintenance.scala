@@ -3,9 +3,8 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 
 /** Incremental GRAPH-index maintenance — the streaming twin of the
@@ -26,8 +25,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * never read or written, so per-batch cost is
   * O(touched-segment size + batch · efConstruction), not O(index).
   *
-  * Retry semantics: foreachBatch is AT-LEAST-ONCE. A replayed batch
-  * re-reads the ALREADY-UPDATED store, finds its ids present, inserts
+  * Retry semantics: a micro-batch is AT-LEAST-ONCE ([[StreamTwin]]). A
+  * replayed batch re-reads the ALREADY-UPDATED store, finds its ids present, inserts
   * nothing, and swaps in content-identical segments — effectively
   * exactly once (a double-append in HnswMaintenanceSpec proves search
   * results and membership are unchanged). Segment swap is
@@ -198,37 +197,10 @@ object HnswMaintenance {
     fs.delete(new Path(staging), true)
   }
 
-  /** Stream embeddings-shaped parquet files from `srcDir`, folding
-    * each micro-batch into the segment store via [[appendBatch]].
-    */
-  def streamHnswAppend(
-      spark: SparkSession,
-      srcDir: String,
-      storeDir: String,
-      checkpointDir: String,
-      numGraphs: Int = 8,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    spark.readStream
-      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        appendBatch(batch.toDF(), storeDir, numGraphs)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Run the whole maintenance cycle on a batch table: shatter `emb`
-    * into `nFiles` source files, stream them one per micro-batch, and
-    * return the final segment store as a materialized (seg, vec_id,
-    * embedding, nbrs) frame — directly searchable by
-    * `Hnsw.searchIndex`. Temp dirs are deleted before returning.
+  /** Run the whole maintenance cycle on a batch table
+    * ([[StreamTwin.run]]) and return the final segment store as a
+    * materialized (seg, vec_id, embedding, nbrs) frame — directly
+    * searchable by `Hnsw.searchIndex`.
     */
   def maintainFromBatch(
       spark: SparkSession,
@@ -237,27 +209,15 @@ object HnswMaintenance {
       // batching in HnswMaintenanceSpec — same bench discipline as the
       // other streaming twins
       nFiles: Int = 2,
-      numGraphs: Int = 8): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_hnsw_maint")
-    val srcDir = base.resolve("src").toString
-    val storeDir = base.resolve("store").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      val src = emb.select(org.apache.spark.sql.functions.col("vec_id"),
-        org.apache.spark.sql.functions.col("embedding"))
-      // the shatter stays ROUND-ROBIN here on purpose (r22): HNSW
-      // adjacency depends on which batch each vector arrives in, so the
-      // split is part of the demonstrated graph — only the footer-read
-      // job is skipped (schema from the projected frame)
-      src.repartition(nFiles).write.parquet(srcDir)
-      val q = streamHnswAppend(spark, srcDir, storeDir, ckptDir, numGraphs,
-        schema = Some(IndexMaintenance.nullableSchema(src.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(spark.read.parquet(storeDir)
-        .select(col("seg"), col("vec_id"), col("embedding"), col("nbrs")))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      numGraphs: Int = 8): DataFrame =
+    // the shatter stays ROUND-ROBIN here on purpose (no shatter key):
+    // HNSW adjacency depends on which batch each vector arrives in, so
+    // the split is part of the demonstrated graph
+    StreamTwin.run(spark, "graft_hnsw_maint", emb.select(col("vec_id"), col("embedding")),
+      nFiles, Nil) {
+      (dir, batch, _) => appendBatch(batch, s"$dir/store", numGraphs)
+    } { dir =>
+      spark.read.parquet(s"$dir/store")
+        .select(col("seg"), col("vec_id"), col("embedding"), col("nbrs"))
     }
-  }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 
 /** Incremental ANN-index maintenance — the streaming twin of the IVF
@@ -20,9 +20,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * work is O(batch × k) with no shuffle wider than the batch and the
   * stream carries no state.
   *
-  * Retry semantics: foreachBatch is AT-LEAST-ONCE — a crash after the
-  * write commits but before the checkpoint batch commits re-runs the
-  * batch. The write is therefore an OVERWRITE of the batch's own
+  * Retry semantics: a micro-batch is AT-LEAST-ONCE ([[StreamTwin]]) — a
+  * crash after the write commits but before the checkpoint batch
+  * commits re-runs the batch. The write is therefore an OVERWRITE of the batch's own
   * `batch_id=N/` directory: a re-run of batch N replaces the whole
   * subtree it wrote the first time (the frozen codebook makes the
   * re-run's content identical), so the sink is effectively exactly-once
@@ -77,30 +77,17 @@ object IndexMaintenance {
     * it is broadcast into every batch's assignment join. batch_id is
     * retained so tests can prove the incremental path actually ran more
     * than one batch (and it is the idempotency key — see object doc).
+    * The stream schema is read from the source files' footers.
     */
   def streamIndexAppend(
       spark: SparkSession,
       srcDir: String,
       indexDir: String,
       checkpointDir: String,
-      centroids: DataFrame,
-      maxFilesPerTrigger: Int = 1,
-      glob: String = "*.parquet",
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    spark.readStream
-      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), centroids, indexDir, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      centroids: DataFrame): StreamingQuery =
+    StreamTwin.drain(spark, srcDir, checkpointDir, spark.read.parquet(srcDir).schema) {
+      (batch, batchId) => appendBatch(batch, centroids, indexDir, batchId)
+    }
 
   /** Fold the streamed index's batch history into a compacted
     * cell-partitioned table: one file per cell, batch_id dropped (WHICH
@@ -118,15 +105,6 @@ object IndexMaintenance {
     parquetFileCount(spark, outDir)
   }
 
-  /** All-nullable copy of a schema — what a parquet round-trip yields;
-    * used when the shatter writer declares the stream schema itself
-    * instead of paying a footer read (StructType.asNullable is
-    * private[sql]).
-    */
-  def nullableSchema(st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
-
   /** Parquet data files under a (possibly partitioned) table dir. */
   def parquetFileCount(spark: SparkSession, dir: String): Int = {
     val root = new Path(dir)
@@ -139,16 +117,11 @@ object IndexMaintenance {
     n
   }
 
-  /** Run the whole maintenance cycle on a batch table: shatter `emb`
-    * into `nFiles` source files under a temp dir, stream them through
-    * [[streamIndexAppend]] one file per micro-batch, and return the
-    * final (vec_id, cell, batch_id) assignments. The result is
-    * materialized off the temp files (localCheckpoint) and the temp dir
-    * — source copy, index, checkpoint — is deleted before returning, so
-    * repeated invocations (every bench round re-runs this) leave no
-    * disk residue. The caller projects away batch_id when determinism
-    * matters — WHICH batch a vector landed in depends on the
-    * repartition split; its cell does not.
+  /** Run the whole maintenance cycle on a batch table ([[StreamTwin.run]])
+    * and return the final (vec_id, cell, batch_id) assignments. The
+    * caller projects away batch_id when determinism matters — WHICH
+    * batch a vector landed in depends on the shatter split; its cell
+    * does not.
     */
   def maintainFromBatch(
       spark: SparkSession,
@@ -158,27 +131,12 @@ object IndexMaintenance {
       // contract IndexMaintenanceSpec proves across batchings), so two
       // batches exercise the append path at half the per-batch commit
       // cost of four
-      nFiles: Int = 2): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_idx_maint")
-    val srcDir = base.resolve("src").toString
-    val indexDir = base.resolve("index").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      // source projected to the consumed columns (guide §2.3, r21):
-      // coding/assignment reads (vec_id, embedding) only
-      val src = emb.select(col("vec_id"), col("embedding"))
-      // deterministic hash shatter — no keyless-repartition pre-sort
-      // (r22, guide §2.5); cell assignment is batching-invariant
-      src.repartition(nFiles, xxhash64(col("vec_id")))
-        .write.parquet(srcDir)
-      val q = streamIndexAppend(spark, srcDir, indexDir, ckptDir, centroids,
-        schema = Some(IndexMaintenance.nullableSchema(src.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(spark.read.parquet(indexDir)
-        .select(col("vec_id"), col("cell"), col("batch_id")))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      nFiles: Int = 2): DataFrame =
+    // source projected to the consumed columns, hash-shattered on vec_id
+    StreamTwin.run(spark, "graft_idx_maint", emb.select(col("vec_id"), col("embedding")),
+      nFiles, Seq(col("vec_id"))) {
+      (dir, batch, batchId) => appendBatch(batch, centroids, s"$dir/index", batchId)
+    } { dir =>
+      spark.read.parquet(s"$dir/index").select(col("vec_id"), col("cell"), col("batch_id"))
     }
-  }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.index.VectorStore
@@ -16,8 +16,8 @@ import graft.index.VectorStore
   * of the batch path (backup/swap/restore — VectorStoreSpec) holds
   * per micro-batch.
   *
-  * Retry semantics: foreachBatch is AT-LEAST-ONCE. One batch's
-  * delete+upsert is idempotent (re-deleting removes nothing, re-
+  * Retry semantics: a micro-batch is AT-LEAST-ONCE ([[StreamTwin]]). One
+  * batch's delete+upsert is idempotent (re-deleting removes nothing, re-
   * upserting replaces with the same rows), so a same-batch retry is
   * safe. A retry interleaved AFTER a later batch is safe only when
   * batches touch disjoint ids or carry monotone versions — the
@@ -51,30 +51,16 @@ object StoreMaintenance {
     if (!ups.isEmpty) store.upsert(name, ups)
   }
 
-  /** Stream CDC-shaped parquet files from `srcDir` into the named
-    * collection, one file per micro-batch (AvailableNow — drains the
-    * backlog and stops).
+  /** Stream CDC-shaped parquet files under `srcDir` into the named
+    * collection via [[applyCdcBatch]] ([[StreamTwin.drain]]).
     */
   def streamCdcApply(
       spark: SparkSession,
       srcDir: String,
       store: VectorStore,
       name: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Int = 1): StreamingQuery = {
-    spark.readStream
-      .schema(cdcSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        applyCdcBatch(store, name, batch.toDF())
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    StreamTwin.drain(spark, srcDir, checkpointDir, cdcSchema) {
+      (batch, _) => applyCdcBatch(store, name, batch)
+    }
 }

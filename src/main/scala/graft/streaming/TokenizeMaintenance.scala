@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.textual.Bpe
 
@@ -22,95 +20,26 @@ import graft.textual.Bpe
   * union of per-batch outputs equals the batch result REGARDLESS of
   * how docs were split into batches (batching-invariance — the
   * `bpe_stream_tokenize` CORRECTNESS row hash-matches the same oracle
-  * as the batch row). foreachBatch is at-least-once; each batch
+  * as the batch row). A micro-batch is at-least-once; each batch
   * overwrites its own `batch_id=N/` directory, so replays replace
   * rather than duplicate (the IndexMaintenance commit discipline).
   */
 object TokenizeMaintenance {
 
-  /** Generic frozen-tokenizer stream: each micro-batch of documents
-    * runs `perBatch` (a pure per-doc stats transform against a frozen
-    * vocabulary table) and appends to its own `batch_id=N/` directory —
-    * the shared machinery both tokenizer families (BPE merges, unigram
-    * LM) ride, so the streaming twins cannot drift from each other.
+  /** Commit one micro-batch's per-doc stats as a full overwrite of
+    * `outDir/batch_id=<batchId>/` (idempotent under micro-batch
+    * retries — see the object doc).
     */
-  def streamStats(
-      spark: SparkSession,
-      srcDir: String,
-      outDir: String,
-      checkpointDir: String,
-      perBatch: DataFrame => DataFrame,
-      maxFilesPerTrigger: Int = 1,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): StreamingQuery = {
-    // schema from the caller when it knows what it shattered (r22), else
-    // from the source files (one footer read): the shatter is projected
-    // to the consumed columns, and a frozen 5-column schema over
-    // 2-column files would resolve the rest to null
-    spark.readStream
-      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        perBatch(batch.toDF())
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  private def appendBatch(stats: DataFrame, outDir: String, batchId: Long): Unit =
+    stats.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
 
-  def streamTokenizeStats(
-      spark: SparkSession,
-      srcDir: String,
-      outDir: String,
-      checkpointDir: String,
-      vocab: DataFrame,
-      maxFilesPerTrigger: Int = 1): StreamingQuery =
-    streamStats(spark, srcDir, outDir, checkpointDir,
-      batch => Bpe.tokenizeStats(batch, "text", "doc_id", vocab),
-      maxFilesPerTrigger)
-
-  /** Shared shatter→stream→union cycle: write `docs` as `nFiles`
-    * source files, drain the AvailableNow stream through `perBatch`,
-    * return the unioned per-batch outputs projected to `outCols`.
-    * Temp dirs are deleted before returning.
+  /** Both tokenizer stats transforms consume exactly (doc_id, text):
+    * the source projection, and the hash-shatter key (tokenization is
+    * per-doc pure, so any split is equivalent).
     */
-  private def maintainWith(
-      spark: SparkSession,
-      docs: DataFrame,
-      perBatch: DataFrame => DataFrame,
-      outCols: Seq[String],
-      nFiles: Int): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_tok_maint")
-    val srcDir = base.resolve("src").toString
-    val outDir = base.resolve("out").toString
-    val ckptDir = base.resolve("ckpt").toString
-    try {
-      // Source-side column pruning (guide §2.3): both tokenizer stats
-      // transforms consume exactly (doc_id, text) — shattering the other
-      // document columns into the source files just made the write and
-      // every micro-batch read carry dead bytes.
-      val src = docs.select(col("doc_id"), col("text"))
-      // deterministic hash shatter — no keyless-repartition pre-sort
-      // (r22, guide §2.5); tokenization is per-doc pure
-      src.repartition(nFiles, xxhash64(col("doc_id"), col("text")))
-        .write.parquet(srcDir)
-      val q = streamStats(spark, srcDir, outDir, ckptDir, perBatch,
-        schema = Some(IndexMaintenance.nullableSchema(src.schema)))
-      try q.processAllAvailable() finally q.stop()
-      graft.operators.Materialize(spark.read.parquet(outDir)
-        .select(outCols.map(col): _*))
-    } finally {
-      val p = new Path(base.toString)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
+  private val docCols = Seq(col("doc_id"), col("text"))
 
-  /** Run the whole BPE cycle on a batch table: shatter `docs` into
-    * `nFiles` source files, stream them through the frozen vocab, and
+  /** Run the whole BPE cycle on a batch table ([[StreamTwin.run]]) and
     * return the unioned per-doc stats.
     */
   def maintainFromBatch(
@@ -121,9 +50,12 @@ object TokenizeMaintenance {
       // invariance holds by construction (spec-proven at 3 too) — two
       // batches exercise the append path at half the commit cost
       nFiles: Int = 2): DataFrame =
-    maintainWith(spark, docs,
-      batch => Bpe.tokenizeStats(batch, "text", "doc_id", vocab),
-      Seq("doc_id", "n_tokens", "n_subtokens"), nFiles)
+    StreamTwin.run(spark, "graft_tok_maint", docs.select(docCols: _*), nFiles, docCols) {
+      (dir, batch, batchId) =>
+        appendBatch(Bpe.tokenizeStats(batch, "text", "doc_id", vocab), s"$dir/out", batchId)
+    } { dir =>
+      spark.read.parquet(s"$dir/out").select(col("doc_id"), col("n_tokens"), col("n_subtokens"))
+    }
 
   /** The UNIGRAM twin: stream documents against the frozen word→pieces
     * segmentation table (Viterbi under the trained unigram LM —
@@ -139,7 +71,11 @@ object TokenizeMaintenance {
       docs: DataFrame,
       seg: DataFrame,
       nFiles: Int = 2): DataFrame =
-    maintainWith(spark, docs,
-      batch => graft.textual.UnigramLm.tokenizeStats(batch, "text", "doc_id", seg),
-      Seq("doc_id", "n_words", "n_pieces", "pieces_per_word"), nFiles)
+    StreamTwin.run(spark, "graft_tok_maint", docs.select(docCols: _*), nFiles, docCols) {
+      (dir, batch, batchId) => appendBatch(
+        graft.textual.UnigramLm.tokenizeStats(batch, "text", "doc_id", seg), s"$dir/out", batchId)
+    } { dir =>
+      spark.read.parquet(s"$dir/out")
+        .select(col("doc_id"), col("n_words"), col("n_pieces"), col("pieces_per_word"))
+    }
 }
