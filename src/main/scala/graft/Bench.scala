@@ -123,17 +123,7 @@ object Bench {
         bpool.awaitTermination(1, TimeUnit.HOURS)
       }
       serialNames.foreach(runOne)
-      // Gate-mutating ann_planner_*_multi queries run SERIALLY, mirroring
-      // Verify's prelude (r20 ADVICE): the batch-rewrite cost gate is a
-      // session conf, and a default-gated query planning inside another
-      // thread's open gate=0 window could get the batch-accelerated plan
-      // — its measured time would not reflect the pinned plan Verify
-      // grades. Costs ~1.5s wall per pass; buys interleaving-free timing.
-      val gateSerial = SparkEntry.gateMutatingQueries.toSeq.sorted
-        .filter(pooledNames.contains)
-      gateSerial.foreach(runOne)
-      val rest = pooledNames.filterNot(n =>
-        cacheBuilders.contains(n) || gateSerial.contains(n))
+      val rest = pooledNames.filterNot(cacheBuilders.contains)
       if (serial) rest.foreach(runOne)
       else {
         val pool = Executors.newFixedThreadPool(threads)

@@ -1007,34 +1007,6 @@ object SparkEntry {
     (materialize(df), fired)
   }
 
-  /** Serializes every batch-ANN cost-gate opt-in window (r19 ADVICE,
-    * high): the gate `spark.graft.ann.batchRewrite.minScanBytes` is a
-    * SESSION-GLOBAL conf, and Verify/Bench run queries on a shared
-    * session from a thread pool. Without the lock, two concurrent
-    * windows can interleave set("0")/restore so that (a) a sibling's
-    * restore lands mid-plan and its rewrite declines (a spurious
-    * rewrite_fired=false in graded parquet), or (b) the saved `prev`
-    * values cross and "0" leaks permanently into the session. The
-    * window covers plan + eager execution (pinnedAnn's localCheckpoint)
-    * of six small top-k queries — serializing them costs a few seconds
-    * and makes every graded rewrite_fired value interleaving-free.
-    */
-  private val annBatchGateLock = new Object
-
-  /** Opens the batch-rewrite cost gate for `body`, atomically
-    * (set/plan/execute/restore all under [[annBatchGateLock]]).
-    */
-  private def withBatchGate[A](s: SparkSession)(body: => A): A =
-    annBatchGateLock.synchronized {
-      val gate = "spark.graft.ann.batchRewrite.minScanBytes"
-      val prev = s.conf.getOption(gate)
-      s.conf.set(gate, "0")
-      try body finally prev match {
-        case Some(v) => s.conf.set(gate, v)
-        case None => s.conf.unset(gate)
-      }
-    }
-
   /** The queries that build a shared slot their dependents read:
     * dedup_ngram_jaccard the n-gram pair list, search_bm25 the postings
     * and BM25 idf, search_vsm_cosine the VSM doc-side frames,
@@ -1075,18 +1047,6 @@ object SparkEntry {
     "embed_tfidf", "quality_score", "lineitem_corr", "dedup_simhash",
     "doc_fingerprint", "events_sessionize", "q1_agg", "q5_region_revenue",
     "events_json_stats")
-
-  /** The queries whose plans run under [[withBatchGate]]'s session-conf
-    * opt-in. Verify runs these in its SERIAL PRELUDE (alongside the
-    * cache builders) so no pooled query ever plans inside an open gate
-    * window — the lock alone already prevents cross-window corruption,
-    * but the prelude additionally keeps the default-gated queries'
-    * plans byte-identical to a sequential run.
-    */
-  val gateMutatingQueries: Set[String] = Set(
-    "ann_planner_rewrite_multi", "ann_planner_filtered_multi",
-    "ann_planner_cosine_multi", "ann_planner_cosine_filtered_multi",
-    "ann_planner_ip_multi", "ann_planner_ip_filtered_multi")
 
   /** The agg-MV twin of [[pinnedAnn]]: fired == every fact path is gone
     * from the plan's scan leaves (the rewrite replaces the scan rather
@@ -5150,23 +5110,17 @@ object SparkEntry {
     // all five queries, and reduces the scan side to the candidate
     // union; the untouched window re-ranks exactly. The plan-time probe
     // is cost-gated on scan size (a real planner choice: at fixture
-    // scale the exact window plan is cheaper, so this query opts in by
-    // lowering spark.graft.ann.batchRewrite.minScanBytes around its own
-    // materialization only — every other KnnExact query in the session
-    // keeps its pinned plan). localCheckpoint executes UNDER the opt-in
-    // so rewrite_fired pins the accelerated plan in the hash honestly;
-    // withBatchGate serializes the session-conf window against the
-    // other batch queries (see annBatchGateLock).
+    // scale the exact window plan is cheaper, so this query's frame
+    // carries AnnIndexRewrite.batchOptIn's mark — every unmarked
+    // KnnExact query in the session keeps its exact plan, also when
+    // planned concurrently).
     "ann_planner_rewrite_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topK(q, emb, 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("dist"), 4).as("dist")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topK(q, emb, 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("dist"), 4).as("dist")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 
@@ -5185,13 +5139,10 @@ object SparkEntry {
     "ann_planner_filtered_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topK(q, emb.filter(col("label") === 3), 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("dist"), 4).as("dist")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topK(q, emb.filter(col("label") === 3), 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("dist"), 4).as("dist")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 
@@ -5207,13 +5158,10 @@ object SparkEntry {
     "ann_planner_cosine_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerCosineIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topKCosine(q, emb, 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("sim"), 4).as("sim")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topKCosine(q, emb, 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("sim"), 4).as("sim")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 
@@ -5225,13 +5173,10 @@ object SparkEntry {
     "ann_planner_cosine_filtered_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerCosineIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topKCosine(q, emb.filter(col("label") === 3), 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("sim"), 4).as("sim")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topKCosine(q, emb.filter(col("label") === 3), 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("sim"), 4).as("sim")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 
@@ -5286,13 +5231,10 @@ object SparkEntry {
     "ann_planner_ip_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerIpIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topKDot(q, emb, 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("ip"), 4).as("ip")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topKDot(q, emb, 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("ip"), 4).as("ip")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 
@@ -5305,13 +5247,10 @@ object SparkEntry {
     "ann_planner_ip_filtered_multi" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       sharedPlannerIpIndex(s, dir) // build+register once per (session, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      val (res, firedNow) = withBatchGate(s) {
-        pinnedAnn(() => KnnExact.topKDot(q, emb.filter(col("label") === 3), 10)
-          .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
-            round(col("ip"), 4).as("ip")))
-      }
+      val q = graft.plans.AnnIndexRewrite.batchOptIn(queryVectors(s, dir, 5))
+      val (res, firedNow) = pinnedAnn(() => KnnExact.topKDot(q, emb.filter(col("label") === 3), 10)
+        .select(col("qid"), col("vec_id"), col("rk").cast("long").as("rk"),
+          round(col("ip"), 4).as("ip")))
       res.withColumn("rewrite_fired", lit(firedNow)).orderBy("qid", "rk")
     }),
 

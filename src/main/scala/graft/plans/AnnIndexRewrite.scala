@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, MetadataBuilder}
 
 import graft.functions.{FloatVecDot, FloatVecL2Sq}
 
@@ -307,12 +307,26 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * off when it replaces a big scan — on a small table the exact
     * window top-k is already cheap and the probe would be pure
     * overhead. This is the planner behaving like a cost-based
-    * optimizer: same query shape, different plan by data size. Default
-    * 64 MiB; fixtures opt in per query by lowering it.
+    * optimizer: same query shape, different plan by data size. A query
+    * frame marked by [[batchOptIn]] skips the gate.
     */
-  private def batchMinScanBytes: BigInt =
-    BigInt(SQLConf.get.getConfString(
-      "spark.graft.ann.batchRewrite.minScanBytes", "67108864"))
+  private val BatchMinScanBytes = BigInt(64L << 20)
+
+  /** Column-metadata key of the [[batchOptIn]] mark. */
+  private val BatchProbeKey = "graft.ann.batchProbe"
+
+  /** Opts one batch query frame into the batch rewrite regardless of
+    * scan size: re-aliases `qEmbCol` with the [[BatchProbeKey]] mark.
+    * The mark rides the query embedding's attribute into the window's
+    * sort key, where the rule reads it, so the opt-in belongs to the
+    * plan and not to the session — concurrent plans of unmarked
+    * queries keep the cost gate. Output schemas that drop the query
+    * embedding (every top-k select) carry no trace of it.
+    */
+  def batchOptIn(queries: DataFrame, qEmbCol: String = "qemb"): DataFrame =
+    queries.withMetadata(qEmbCol, new MetadataBuilder()
+      .withMetadata(queries.schema(qEmbCol).metadata)
+      .putBoolean(BatchProbeKey, true).build())
 
   /** Log-once flag for the no-current-session decline (ADVICE r15: an
     * invisible perf cliff should at least log its first occurrence).
@@ -762,7 +776,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * (`KnnExact.topK`'s shape, and the reference's actual workload: 5
     * query vectors per run, chromadb_speed_experiment.py:651-657).
     * When the scanned side carries a registered index AND clears the
-    * [[batchMinScanBytes]] cost gate, the rule executes the query side
+    * [[BatchMinScanBytes]] cost gate (or the query embedding carries
+    * the [[batchOptIn]] mark), the rule executes the query side
     * (bounded by [[MaxBatchQueries]]), probes the stored index ONCE for
     * all queries, and reduces the scan side to the union of per-query
     * candidates:
@@ -858,10 +873,11 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   (scanSide, querySide) <- Seq((l, r), (r, l))
                   (fltOpt, leaf) = splitFilter(scanSide)
                   spec <- specOf(leaf, metric, cur).toSeq
-                  if leaf.stats.sizeInBytes >= batchMinScanBytes
                   embAttr <- Seq(x, y).find(a =>
                     scanSide.outputSet.contains(a) && a.name == spec.embCol).toSeq
                   qembAttr = if (embAttr eq x) y else x
+                  if qembAttr.metadata.contains(BatchProbeKey) ||
+                    leaf.stats.sizeInBytes >= BatchMinScanBytes
                   if querySide.outputSet.contains(qembAttr) &&
                     querySide.outputSet.contains(qid)
                   // the rule EXECUTES the query side several times at plan

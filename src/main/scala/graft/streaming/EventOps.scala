@@ -424,9 +424,12 @@ object EventOps {
     * bronze→silver merge pattern without a table format: each
     * micro-batch is reduced to one row per key (latest by event time,
     * event_id tie-break), then merged with the existing table by
-    * key anti-join + union and atomically swapped in. Without Delta/
-    * Iceberg the swap is directory-level (write new, replace); the
-    * batch-side logic is exactly what MERGE INTO compiles to.
+    * key anti-join + union and swapped in. Without Delta/Iceberg the
+    * swap is directory-level, with VectorStore's crash-safe sequence:
+    * live → `.bak`, stage → live, drop `.bak`; a batch that finds the
+    * live dir missing first restores a `.bak` stranded by a crash
+    * between the two renames. The batch-side logic is exactly what
+    * MERGE INTO compiles to.
     *
     * Keyed on user_id: the silver table holds each user's latest event.
     */
@@ -435,10 +438,9 @@ object EventOps {
       parquetDir: String,
       outDir: String,
       checkpointDir: String,
-      glob: String = "events.parquet",
-      maxFilesPerTrigger: Int = 1): StreamingQuery = {
+      glob: String = "events.parquet"): StreamingQuery = {
     val stream = graft.model.Tables.eventStream(spark, parquetDir, glob,
-      options = Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString))
+      options = Map("maxFilesPerTrigger" -> "1"))
     stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark2 = batch.sparkSession
@@ -448,7 +450,9 @@ object EventOps {
           .select(col("user_id"), col("m.ts").as("ts"), col("m.event_id").as("event_id"),
             col("m.event_type").as("event_type"), col("m.value").as("value"))
         val target = new org.apache.hadoop.fs.Path(outDir)
+        val bak = new org.apache.hadoop.fs.Path(outDir + ".bak")
         val fs = target.getFileSystem(spark2.sparkContext.hadoopConfiguration)
+        if (fs.exists(bak) && !fs.exists(target)) fs.rename(bak, target)
         val merged =
           if (!fs.exists(target)) latest
           else {
@@ -466,9 +470,10 @@ object EventOps {
           }
         val tmp = outDir + s"__stage_$batchId"
         merged.write.mode("overwrite").parquet(tmp)
-        val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-        if (fs.exists(target)) fs.delete(target, true)
-        fs.rename(tmpPath, target)
+        fs.delete(bak, true)
+        if (fs.exists(target)) fs.rename(target, bak)
+        fs.rename(new org.apache.hadoop.fs.Path(tmp), target)
+        fs.delete(bak, true)
         ()
       }
       .option("checkpointLocation", checkpointDir)

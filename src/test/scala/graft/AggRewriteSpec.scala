@@ -36,7 +36,7 @@ class AggRewriteSpec extends GraftSpec {
       .agg(count(lit(1)).as("n"), sum($"l_orderkey").as("sum_ok"),
         count($"l_orderkey").as("n_ok"),
         min($"l_quantity").as("min_qty"), max($"l_quantity").as("max_qty"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_aggmv_spec").toString
+    val tmp = GraftSpec.tempDir("graft_aggmv_spec").toString
     mv.write.mode("overwrite").parquet(tmp)
     val base = Map("n" -> (("count", "")), "sum_ok" -> (("sum", "l_orderkey")),
       "min_qty" -> (("min", "l_quantity")), "max_qty" -> (("max", "l_quantity")))
@@ -234,7 +234,7 @@ class AggRewriteSpec extends GraftSpec {
     finally view.unpersist(true)
     // structural pins on the refresh itself: the fact source is never
     // read (partials only), and a no-op dim update recomputes nothing
-    val base = java.nio.file.Files.createTempDirectory("graft_dimupd_spec")
+    val base = GraftSpec.tempDir("graft_dimupd_spec")
     try {
       val factDir = base.resolve("facts").toString
       val rollup = base.resolve("rollup").toString
@@ -334,7 +334,7 @@ class AggRewriteSpec extends GraftSpec {
       assert(got === direct, "the associative merge must equal the bulk groupBy")
     } finally view.unpersist(true)
     // compaction + retry idempotency on a private rollup dir
-    val base = java.nio.file.Files.createTempDirectory("graft_agg_compact")
+    val base = GraftSpec.tempDir("graft_agg_compact")
     try {
       val rollup = base.resolve("rollup").toString
       val one = li.limit(100)
@@ -372,7 +372,7 @@ class AggRewriteSpec extends GraftSpec {
       .groupBy($"o_orderpriority", $"l_linestatus")
       .agg(count(lit(1)).as("n"), sum($"l_linenumber").as("sum_ln"),
         count($"l_linenumber").as("n_ln"), max($"l_quantity").as("max_qty"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_joinmv_spec").toString
+    val tmp = GraftSpec.tempDir("graft_joinmv_spec").toString
     mv.write.mode("overwrite").parquet(tmp)
     AggRewrite.registerJoin(srcPath, s"$sfDir/orders.parquet",
       AggRewrite.JoinMvSpec(spark.read.parquet(tmp),
@@ -542,7 +542,7 @@ class AggRewriteSpec extends GraftSpec {
     // a COARSER sibling on the same path: returnflag only, ~3 rows
     val coarse = li.groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), max($"l_quantity").as("max_qty"))
-    val coarseTmp = java.nio.file.Files.createTempDirectory("graft_aggmv_coarse_spec").toString
+    val coarseTmp = GraftSpec.tempDir("graft_aggmv_coarse_spec").toString
     coarse.write.mode("overwrite").parquet(coarseTmp)
     AggRewrite.register(srcPath, AggRewrite.MvSpec(spark.read.parquet(coarseTmp),
       groupCols = Seq("l_returnflag"),
@@ -612,7 +612,7 @@ class AggRewriteSpec extends GraftSpec {
   test("source files mutated after registration: the MV self-heals stale") {
     AggRewrite.clear()
     // private source copy so the mutation cannot disturb other suites
-    val base = java.nio.file.Files.createTempDirectory("graft_aggmv_stale")
+    val base = GraftSpec.tempDir("graft_aggmv_stale")
     val srcCopy = base.resolve("lineitem.parquet").toString
     try {
       li.limit(200).write.parquet(srcCopy)

@@ -268,11 +268,16 @@ class AnnRewriteSpec extends GraftSpec {
     }
   }
 
-  private def batchPattern: DataFrame = {
-    val q = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qemb"))
-    graft.search.KnnExact.topK(q, emb, 10)
-  }
+  /** Five query vectors (ids 0-4) as a (qid, qemb) batch frame. */
+  private def plainQueries: DataFrame =
+    emb.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qemb"))
+
+  /** [[plainQueries]] opted into the batch rewrite: the fixture-sized
+    * scan sits far below the 64 MiB cost gate.
+    */
+  private def batchQueries: DataFrame = AnnIndexRewrite.batchOptIn(plainQueries)
+
+  private def batchPattern: DataFrame = graft.search.KnnExact.topK(batchQueries, emb, 10)
 
   private def collectBatch(df: DataFrame): Seq[(Long, Long, Int, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
@@ -290,7 +295,6 @@ class AnnRewriteSpec extends GraftSpec {
     val expected = collectBatch(batchPattern)
     assert(expected.size === 50, "fixture sanity: 5 queries x top-10")
     registerExhaustive()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatch.get()
@@ -302,7 +306,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(collectBatch(df) === expected,
         "batch acceleration must not change any query's exact top-k")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -312,15 +315,24 @@ class AnnRewriteSpec extends GraftSpec {
     // Probing at plan time costs real jobs; on a fixture-sized table
     // the exact window plan is cheaper, and the default 64 MiB gate
     // must decline — cost-based planner behavior, spec-pinned so the
-    // bench's incidental KnnExact queries keep their plans.
+    // bench's incidental KnnExact queries keep their plans. The opt-in
+    // is a mark on one query frame, not session state: in one session
+    // with one registration, only the marked copy carries the splice,
+    // before and after it is planned.
     VectorExpressions.ensureRegistered(spark)
     registerExhaustive()
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
+      def plainPlan = graft.search.KnnExact.topK(plainQueries, emb, 10)
+        .queryExecution.optimizedPlan
       val before = AnnIndexRewrite.firedBatch.get()
-      batchPattern.queryExecution.optimizedPlan
+      assert(candidateIns(plainPlan).isEmpty)
       assert(AnnIndexRewrite.firedBatch.get() === before,
         "default cost gate: fixture-sized scan stays on the exact plan")
+      assert(candidateIns(batchPattern.queryExecution.optimizedPlan).nonEmpty,
+        "the marked copy opts in")
+      assert(candidateIns(plainPlan).isEmpty,
+        "an unmarked plan after the marked one still declines")
     } finally {
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
@@ -429,11 +441,8 @@ class AnnRewriteSpec extends GraftSpec {
 
   // ---- batch × filtered ------------------------------------------------
 
-  private def batchFilteredPattern: DataFrame = {
-    val q = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qemb"))
-    graft.search.KnnExact.topK(q, emb.filter($"label" === 3), 10)
-  }
+  private def batchFilteredPattern: DataFrame =
+    graft.search.KnnExact.topK(batchQueries, emb.filter($"label" === 3), 10)
 
   test("batch x filtered pattern: one probe, per-query survivors, exact rows") {
     // Five query vectors x a metadata predicate through the ranking
@@ -446,7 +455,6 @@ class AnnRewriteSpec extends GraftSpec {
     val expected = collectBatch(batchFilteredPattern)
     assert(expected.size === 50, "fixture sanity: 5 queries x top-10 survive the filter")
     registerExhaustive()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatchFiltered.get()
@@ -459,7 +467,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(collectBatch(df) === expected,
         "batch-filtered acceleration must not change any query's exact filtered top-k")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -478,7 +485,6 @@ class AnnRewriteSpec extends GraftSpec {
     AnnIndexRewrite.register(srcPath,
       AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
         overfetch = 1, filteredOverfetch = 1, exhaustiveProbe = true))
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val fallbacksBefore = AnnIndexRewrite.batchFilteredFallbacks.get()
@@ -492,7 +498,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(AnnIndexRewrite.firedBatchFiltered.get() === firedBefore)
       assert(collectBatch(df) === expected, "fallback keeps the exact rows")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -500,11 +505,8 @@ class AnnRewriteSpec extends GraftSpec {
 
   // ---- batch × cosine --------------------------------------------------
 
-  private def batchCosinePattern: DataFrame = {
-    val q = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qemb"))
-    graft.search.KnnExact.topKCosine(q, emb, 10)
-  }
+  private def batchCosinePattern: DataFrame =
+    graft.search.KnnExact.topKCosine(batchQueries, emb, 10)
 
   test("batch cosine pattern: one normalized probe, exact rows") {
     // topKCosine's attr-vs-attr negsim key routes to the metric="cosine"
@@ -515,7 +517,6 @@ class AnnRewriteSpec extends GraftSpec {
     val expected = collectBatch(batchCosinePattern)
     assert(expected.size === 50, "fixture sanity: 5 queries x top-10")
     registerCosine()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatch.get()
@@ -527,7 +528,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(collectBatch(df) === expected,
         "batch cosine acceleration must not change any query's exact top-k")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -537,7 +537,6 @@ class AnnRewriteSpec extends GraftSpec {
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     registerExhaustive() // ONLY metric = "l2"
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatch.get()
@@ -545,7 +544,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(AnnIndexRewrite.firedBatch.get() === before,
         "a cosine key must not probe an L2 index")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -558,14 +556,13 @@ class AnnRewriteSpec extends GraftSpec {
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     registerCosine()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val zeroed = emb.select($"vec_id",
         when($"vec_id" === 2L, array_repeat(lit(0.0f), 64).cast("array<float>"))
           .otherwise($"embedding").as("embedding"))
-      val q = zeroed.filter($"vec_id" < 5)
-        .select($"vec_id".as("qid"), $"embedding".as("qemb"))
+      val q = AnnIndexRewrite.batchOptIn(zeroed.filter($"vec_id" < 5)
+        .select($"vec_id".as("qid"), $"embedding".as("qemb")))
       val before = AnnIndexRewrite.firedBatch.get()
       val df = graft.search.KnnExact.topKCosine(q, emb, 10)
       val plan = df.queryExecution.optimizedPlan
@@ -573,7 +570,6 @@ class AnnRewriteSpec extends GraftSpec {
         "zero-norm query vector: the batch cosine rewrite must decline")
       assert(candidateIns(plan).isEmpty)
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -586,13 +582,11 @@ class AnnRewriteSpec extends GraftSpec {
     // batch-filtered path with the metric threaded through.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
-    val q = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qemb"))
-    def pat: DataFrame = graft.search.KnnExact.topKCosine(q, emb.filter($"label" === 3), 10)
+    def pat: DataFrame =
+      graft.search.KnnExact.topKCosine(batchQueries, emb.filter($"label" === 3), 10)
     val expected = collectBatch(pat)
     assert(expected.size === 50, "fixture sanity: 5 queries x top-10 survive the filter")
     registerCosine()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatchFiltered.get()
@@ -604,7 +598,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(collectBatch(df) === expected,
         "the full composition must not change any query's exact filtered top-k")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }
@@ -620,7 +613,7 @@ class AnnRewriteSpec extends GraftSpec {
     // it changes.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stale_src").toString
+    val tmp = GraftSpec.tempDir("graft_stale_src").toString
     emb.write.mode("overwrite").parquet(tmp)
     val snap = spark.read.parquet(tmp)
     val cent = IvfIndex.seedCentroids(snap, 4)
@@ -694,7 +687,7 @@ class AnnRewriteSpec extends GraftSpec {
       // BOTH patterns accelerated and the same exact rows
       AnnIndexRewrite.clear()
       val cent = IvfIndex.seedCentroids(emb, 4)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_annidx_spec").toString
+      val tmp = GraftSpec.tempDir("graft_annidx_spec").toString
       Hnsw.buildRoutedIndex(spark, emb, cent)
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
       AnnIndexRewrite.register(srcPath,
@@ -823,13 +816,10 @@ class AnnRewriteSpec extends GraftSpec {
   test("batch ip pattern: one zero-augmented probe, exact rows") {
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
-    val q = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qemb"))
-    def batchIp = graft.search.KnnExact.topKDot(q, emb, 10)
+    def batchIp = graft.search.KnnExact.topKDot(batchQueries, emb, 10)
     val expected = collectBatch(batchIp)
     assert(expected.size === 50, "fixture sanity: 5 queries x top-10")
     registerIp()
-    spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val before = AnnIndexRewrite.firedBatch.get()
@@ -841,7 +831,6 @@ class AnnRewriteSpec extends GraftSpec {
       assert(collectBatch(df) === expected,
         "batch ip acceleration must not change any query's exact top-k")
     } finally {
-      spark.conf.unset("spark.graft.ann.batchRewrite.minScanBytes")
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
     }

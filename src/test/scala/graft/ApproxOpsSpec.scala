@@ -45,7 +45,7 @@ class ApproxOpsSpec extends GraftSpec {
   }
 
   test("compaction merges small files without changing rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact")
+    val base = GraftSpec.tempDir("graft_compact")
     val shattered = base.resolve("in").toString
     events.repartition(20).write.parquet(shattered)
     val inFiles = new java.io.File(shattered).listFiles().count(_.getName.endsWith(".parquet"))
@@ -58,7 +58,7 @@ class ApproxOpsSpec extends GraftSpec {
 
   test("surgical delete rewrites only the affected key buckets") {
     import org.apache.spark.sql.functions.{pmod, xxhash64, lit}
-    val base = java.nio.file.Files.createTempDirectory("graft_delete")
+    val base = GraftSpec.tempDir("graft_delete")
     val dir = base.resolve("t").toString
     Maintenance.writeKeyBucketed(events.select($"event_id", $"user_id"), dir, "user_id", 8)
     val total = spark.read.parquet(dir).count()
@@ -90,7 +90,7 @@ class ApproxOpsSpec extends GraftSpec {
   }
 
   test("sorted-by-key write produces disjoint per-file key ranges") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sorted")
+    val base = GraftSpec.tempDir("graft_sorted")
     val out = base.resolve("out").toString
     Maintenance.writeSortedByKey(events.select($"event_id", $"user_id"), out, "event_id", 4)
     // per-file min/max must not overlap (this is what row-group skipping uses)

@@ -4,68 +4,66 @@ import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import org.apache.spark.sql.Row
 
-/** The batch-ANN cost-gate opt-in window under concurrency (r19 ADVICE
-  * high + verdict #4). Six `ann_planner_*_multi` queries open the
-  * session-global conf gate `spark.graft.ann.batchRewrite.minScanBytes`
-  * around their own plan+execute; Verify and Bench run queries 4-way
-  * concurrently on ONE shared session, so before `withBatchGate`'s lock
-  * the windows could interleave — a sibling's restore landing mid-plan
-  * declines its rewrite (a spurious rewrite_fired=false in GRADED
-  * parquet), and crossed save/restore pairs could leak "0" into every
-  * later plan. This spec drives the real query closures from competing
-  * threads — each thread's window holds gate=0 while the others sit at
-  * the session default, i.e. concurrent planning under OPPOSITE gate
-  * values — and pins that (a) every row of every run still carries
-  * rewrite_fired=true, and (b) the session conf always comes back to
-  * its pre-query value, whether that value was absent or an explicit
-  * sentinel.
+/** The batch-ANN opt-in under concurrency. Six `ann_planner_*_multi`
+  * queries opt their query frame into the batch rewrite with
+  * `AnnIndexRewrite.batchOptIn`; four siblings run the same ranking
+  * window over the same registered table without the mark, so the
+  * 64 MiB scan-size gate keeps them exact. Verify and Bench run queries
+  * from a thread pool on ONE shared session, so the opt-in must belong
+  * to each plan: this spec runs both groups interleaved on a 4-thread
+  * pool and pins that every opt-in row carries rewrite_fired=true, that
+  * no sibling plan carries the candidate-id splice, and that every
+  * query's rows equal a sequential run's.
   */
 class BatchGateSpec extends GraftSpec {
 
-  private val gate = "spark.graft.ann.batchRewrite.minScanBytes"
-  // Driven from the PRODUCTION set (r20 ADVICE: a hand-copied list had
-  // drifted to 4 of the 6 gate-mutating queries, leaving two windows
-  // untested under contention) — the spec cannot fall behind SparkEntry.
-  private val names = SparkEntry.gateMutatingQueries.toSeq.sorted
+  private val optIn = Seq(
+    "ann_planner_rewrite_multi", "ann_planner_filtered_multi",
+    "ann_planner_cosine_multi", "ann_planner_cosine_filtered_multi",
+    "ann_planner_ip_multi", "ann_planner_ip_filtered_multi")
+  private val siblings = Seq(
+    "knn_exact_multi", "ann_filtered_top10", "knn_cosine_top10", "knn_dot_top10")
 
-  private def runConcurrently(): Unit = {
+  /** The query's rows, and whether its optimized plan carries the ANN
+    * candidate-id splice (the opt-in queries materialize eagerly, so
+    * their plans read as already executed: their own pin is the
+    * rewrite_fired column).
+    */
+  private def run(n: String): (Seq[Row], Boolean) = {
+    val df = SparkEntry.queries(n)(spark, sfDir)
+    val spliced = graft.plans.PlannerPin.annSpliced("vec_id")(df.queryExecution.optimizedPlan)
+    (df.collect().toSeq, spliced)
+  }
+
+  test("opt-in batch queries and their unmarked siblings plan concurrently as they do sequentially") {
     // the shared test session has no GraftSession extensions — install
     // the ANN rule for the duration (the PlannerPinSpec pattern)
     spark.experimental.extraOptimizations = Seq(graft.plans.AnnIndexRewrite)
     val pool = Executors.newFixedThreadPool(4)
     try {
-      val futures = (0 until 2).flatMap(_ => names).map { n =>
-        pool.submit(new Callable[(String, Array[Row])] {
-          def call(): (String, Array[Row]) =
-            (n, SparkEntry.queries(n)(spark, sfDir).collect())
+      // the opt-in queries run first, so the L2, cosine and ip planner
+      // indexes are all registered before any sibling plans
+      val sequential = (optIn ++ siblings).map(n => n -> run(n)._1).toMap
+      val interleaved = optIn.zipAll(siblings, "", "")
+        .flatMap { case (a, b) => Seq(a, b) }.filter(_.nonEmpty)
+      val futures = (interleaved ++ interleaved).map { n =>
+        pool.submit(new Callable[(String, (Seq[Row], Boolean))] {
+          def call(): (String, (Seq[Row], Boolean)) = (n, run(n))
         })
       }
       futures.foreach { f =>
-        val (n, rows) = f.get(10, TimeUnit.MINUTES)
+        val (n, (rows, spliced)) = f.get(10, TimeUnit.MINUTES)
         assert(rows.nonEmpty, s"$n: produced rows")
-        assert(rows.forall(_.getAs[Boolean]("rewrite_fired")),
-          s"$n: every row pins rewrite_fired=true under concurrent gate windows")
+        if (optIn.contains(n))
+          assert(rows.forall(_.getAs[Boolean]("rewrite_fired")),
+            s"$n: every row pins rewrite_fired=true while siblings plan concurrently")
+        else
+          assert(!spliced, s"$n: an unmarked sibling keeps the exact plan")
+        assert(rows === sequential(n), s"$n: concurrent rows equal the sequential run's")
       }
     } finally {
       pool.shutdownNow()
       spark.experimental.extraOptimizations = Nil
     }
-  }
-
-  test("concurrent batch planner queries all pin; an UNSET gate stays unset") {
-    spark.conf.unset(gate)
-    runConcurrently()
-    assert(spark.conf.getOption(gate).isEmpty,
-      "every opt-in window restored the absent gate (no leaked \"0\")")
-  }
-
-  test("concurrent batch planner queries all pin; a SET gate is restored verbatim") {
-    val sentinel = "123456789"
-    spark.conf.set(gate, sentinel)
-    try {
-      runConcurrently()
-      assert(spark.conf.get(gate) === sentinel,
-        "interleaved save/restore must not cross: the sentinel survives")
-    } finally spark.conf.unset(gate)
   }
 }

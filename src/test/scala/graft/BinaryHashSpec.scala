@@ -67,7 +67,7 @@ class BinaryHashSpec extends GraftSpec {
         "micro-batch split must not change any code (per-row pure function)")
     } finally streamed.unpersist(true)
     // retry idempotency: committing the same batch twice leaves one copy
-    val base = java.nio.file.Files.createTempDirectory("graft_bin_retry")
+    val base = GraftSpec.tempDir("graft_bin_retry")
     try {
       val dir = base.resolve("codes").toString
       val one = emb.limit(10)

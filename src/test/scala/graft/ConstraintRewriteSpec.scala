@@ -68,7 +68,7 @@ class ConstraintRewriteSpec extends GraftSpec {
         ordPath, "o_orderkey")
     }
     // a dangling key is refused: dim = {1,2,3}, fact carries 999
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fk_spec").toString
+    val tmp = GraftSpec.tempDir("graft_fk_spec").toString
     Seq(1L, 2L, 3L).toDF("k").write.mode("overwrite").parquet(s"$tmp/dim")
     Seq(1L, 2L, 999L).toDF("fk").write.mode("overwrite").parquet(s"$tmp/fact")
     ConstraintRewrite.registerUnique(spark, s"$tmp/dim", "k")
@@ -375,7 +375,7 @@ class ConstraintRewriteSpec extends GraftSpec {
       assert(nAggs(nonUnique) === 2, "no claim on l_orderkey: dedup must stay")
       // decline: a unique-but-NULLABLE key — NULL keys may repeat, and
       // DISTINCT collapses them, so the identity claim does not hold
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pk_nulls").toString
+      val tmp = GraftSpec.tempDir("graft_pk_nulls").toString
       Seq(Some(1L), Some(2L), None, None).toDF("k")
         .withColumn("v", lit("x")).write.mode("overwrite").parquet(tmp)
       ConstraintRewrite.registerUnique(spark, tmp, "k") // passes: non-NULLs unique
@@ -459,7 +459,7 @@ class ConstraintRewriteSpec extends GraftSpec {
 
   test("staleness: a changed dim listing drops every claim on it") {
     ConstraintRewrite.clear()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fk_stale").toString
+    val tmp = GraftSpec.tempDir("graft_fk_stale").toString
     Tables.customer(spark, sfDir).write.mode("overwrite").parquet(tmp)
     ConstraintRewrite.registerUnique(spark, tmp, "c_custkey")
     spark.experimental.extraOptimizations = Seq(ConstraintRewrite)
@@ -499,7 +499,7 @@ class ConstraintRewriteSpec extends GraftSpec {
     val mv = Tables.lineitem(spark, sfDir)
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(count(lit(1)).as("n"), max($"l_quantity").as("max_qty"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fk_chain_mv").toString
+    val tmp = GraftSpec.tempDir("graft_fk_chain_mv").toString
     mv.write.mode("overwrite").parquet(tmp)
     AggRewrite.register(liPath, AggRewrite.MvSpec(spark.read.parquet(tmp),
       groupCols = Seq("l_returnflag", "l_linestatus"),

@@ -23,7 +23,7 @@ class DedupMaintenanceSpec extends GraftSpec {
   }
 
   test("replaying a committed batch is idempotent and never self-pairs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_retry")
+    val base = GraftSpec.tempDir("graft_dedup_retry")
     val storeDir = base.resolve("store").toString
     val pairsDir = base.resolve("pairs").toString
     val half0 = docs.filter(col("doc_id") % 2 === 0)
@@ -44,7 +44,7 @@ class DedupMaintenanceSpec extends GraftSpec {
   }
 
   test("compacted store has fewer files and flags a new batch identically") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_compact")
+    val base = GraftSpec.tempDir("graft_dedup_compact")
     val storeDir = base.resolve("store").toString
     val pairsDir = base.resolve("pairs").toString
     val outDir = base.resolve("compact").toString
@@ -65,7 +65,7 @@ class DedupMaintenanceSpec extends GraftSpec {
   }
 
   test("store holds one posting set per batch and the union covers the corpus") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_store")
+    val base = GraftSpec.tempDir("graft_dedup_store")
     val storeDir = base.resolve("store").toString
     val pairsDir = base.resolve("pairs").toString
     DedupMaintenance.appendBatch(docs.filter(col("doc_id") < 250),

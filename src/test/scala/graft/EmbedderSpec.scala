@@ -22,7 +22,7 @@ class EmbedderSpec extends GraftSpec {
     val out2 = TfIdfEmbedder.fit(docs, "text", 64).embed(docs, "text", "emb")
     assert(out.select("doc_id", "emb").except(out2.select("doc_id", "emb")).count() === 0)
     // persisted model reloads and reproduces the same embeddings (M1)
-    val path = java.nio.file.Files.createTempDirectory("graft_emb").toString + "/model"
+    val path = GraftSpec.tempDir("graft_emb").toString + "/model"
     m.save(path)
     val reloaded = graft.embed.TfIdfEmbedderModel.load(path)
     val out3 = reloaded.embed(docs, "text", "emb")

@@ -21,7 +21,7 @@ class EndToEndSpec extends GraftSpec {
 
   test("files -> pages -> base table -> prefix collections -> search -> recall") {
     // 1. a tiny corpus of multi-page "documents"
-    val dir = Files.createTempDirectory("graft_e2e")
+    val dir = GraftSpec.tempDir("graft_e2e")
     val docsDir = dir.toString
     (0 until 6).foreach { i =>
       val pages = (0 until 4).map(p => s"doc$i page$p " + ("tok" + (i % 3) + " ") * 20)

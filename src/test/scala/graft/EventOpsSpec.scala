@@ -180,18 +180,14 @@ class EventOpsSpec extends GraftSpec {
     assert(emitted.except(expected).count() === 0 && expected.except(emitted).count() === 0)
   }
 
-  test("foreachBatch upsert converges to latest-per-user across micro-batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft_upsert")
-    // shatter the fixture into several files -> maxFilesPerTrigger=1
-    // forces multiple micro-batches, so the merge path actually runs
-    val srcDir = base.resolve("src").toString
-    events.repartition(3).write.parquet(srcDir)
-    val out = base.resolve("silver").toString
-    val ckpt = base.resolve("ckpt").toString
+  private def drainUpsert(srcDir: String, out: String, ckpt: String): Unit = {
     val q = EventOps.streamUpsertLatestByUser(spark, srcDir, out, ckpt,
       glob = "*.parquet")
     q.processAllAvailable()
     q.stop()
+  }
+
+  private def assertLatestPerUser(out: String): Unit = {
     val silver = spark.read.parquet(out)
     val expected = events
       .groupBy($"user_id")
@@ -202,8 +198,38 @@ class EventOpsSpec extends GraftSpec {
     assert(silver.except(expected).count() === 0 && expected.except(silver).count() === 0)
   }
 
+  test("foreachBatch upsert converges to latest-per-user across micro-batches") {
+    val base = GraftSpec.tempDir("graft_upsert")
+    // shatter the fixture into several files -> maxFilesPerTrigger=1
+    // forces multiple micro-batches, so the merge path actually runs
+    val srcDir = base.resolve("src").toString
+    events.repartition(3).write.parquet(srcDir)
+    val out = base.resolve("silver").toString
+    drainUpsert(srcDir, out, base.resolve("ckpt").toString)
+    assertLatestPerUser(out)
+  }
+
+  test("foreachBatch upsert restores a silver table stranded in .bak by a crashed swap") {
+    // A crash between the swap's two renames leaves the live dir gone
+    // and the previous table in `.bak`. The next batch must restore it
+    // before merging, or the silver table would hold only that batch.
+    val base = GraftSpec.tempDir("graft_upsert_bak")
+    val srcDir = base.resolve("src").toString
+    val late = $"event_id" % 5 === 0
+    events.filter(!late).repartition(2).write.parquet(srcDir)
+    val out = base.resolve("silver").toString
+    val ckpt = base.resolve("ckpt").toString
+    drainUpsert(srcDir, out, ckpt)
+    java.nio.file.Files.move(java.nio.file.Paths.get(out),
+      java.nio.file.Paths.get(out + ".bak"))
+    events.filter(late).coalesce(1).write.mode("append").parquet(srcDir)
+    drainUpsert(srcDir, out, ckpt)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out + ".bak")))
+    assertLatestPerUser(out)
+  }
+
   test("streaming parquet sink lands exactly the batch rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sink")
+    val base = GraftSpec.tempDir("graft_sink")
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
     val q = EventOps.streamEventsToParquet(spark, sfDir, out, ckpt)

@@ -22,7 +22,7 @@ class ExperimentSpec extends GraftSpec {
     .filter($"vec_id" < 2).select($"vec_id".as("qid"), $"embedding".as("qemb")).cache()
 
   test("E1 speed experiment: timings per (collection, query, run) + stats + sinks") {
-    val out = Files.createTempDirectory("graft_speed").toString
+    val out = GraftSpec.tempDir("graft_speed").toString
     val timings = SpeedExperiment.run(spark, base, queries, step = 250, topK = 5, numRuns = 2)
     // 2 collections x 2 queries x 2 runs
     assert(timings.count() === 8)
@@ -66,7 +66,7 @@ class ExperimentSpec extends GraftSpec {
   }
 
   test("experiment sidecar artifacts: JSON/CSV/parquet sinks + the four reference PNGs") {
-    val out = Files.createTempDirectory("graft_artifacts").toString
+    val out = GraftSpec.tempDir("graft_artifacts").toString
     val (perQuery, perColl, recallStats) = graft.bench.ExperimentArtifacts
       .writeAll(spark, sfDir, out, maxVectors = 400, nQueries = 2, numRuns = 2)
     // 400 vectors / step 100 = 4 collections; 2 queries each
@@ -95,7 +95,7 @@ class ExperimentSpec extends GraftSpec {
   }
 
   test("E3 build: checkpointed base table, resume point, plan, skip-existing") {
-    val out = Files.createTempDirectory("graft_base").toString + "/base"
+    val out = GraftSpec.tempDir("graft_base").toString + "/base"
     val docs = Tables.documents(spark, sfDir).limit(120)
     val embedder = TfIdfEmbedder.fit(docs, "text", 32)
     val built = CollectionBuilder.buildBase(spark, docs, embedder, out)

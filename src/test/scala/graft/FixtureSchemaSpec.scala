@@ -78,7 +78,7 @@ class FixtureSchemaSpec extends GraftSpec {
     val rows = micros.zipWithIndex.map { case (us, i) =>
       (i.toLong, us, i.toLong * 7, s"t$i", i * 1.5, s"""{"k":$i}""")
     }
-    val base = java.nio.file.Files.createTempDirectory("graft_enc")
+    val base = GraftSpec.tempDir("graft_enc")
     def dirFor(name: String): String = {
       val d = base.resolve(name); java.nio.file.Files.createDirectory(d); d.toString
     }

@@ -16,7 +16,7 @@ class FormatsSpec extends GraftSpec {
     .select($"event_id", $"user_id", $"event_type", $"value").cache()
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    GraftSpec.tempDir(prefix).toString
 
   test("ORC round-trip preserves rows and schema") {
     val dir = tmp("graft_orc")

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,23 +14,30 @@ trait GraftSpec extends AnyFunSuite {
 
 object GraftSpec {
 
-  /** Built once per test JVM, with one warehouse temp dir that a
-    * shutdown hook deletes (tests run in a forked JVM, so the hook runs
-    * when the suites are done).
+  private val tempDirs = new ConcurrentLinkedQueue[java.io.File]()
+
+  // Tests run in a forked JVM, so the hook runs when the suites are done.
+  Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    tempDirs.forEach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d))
+  }))
+
+  /** A fresh temp dir, deleted with everything in it when the test JVM
+    * exits.
     */
-  lazy val session: SparkSession = {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_warehouse").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      org.apache.hadoop.fs.FileUtil.fullyDelete(warehouse)
-      ()
-    }))
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
+
+  /** Built once per test JVM, over a [[tempDir]] warehouse. */
+  lazy val session: SparkSession =
     SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_warehouse").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-  }
 }

@@ -46,7 +46,7 @@ class HnswMaintenanceSpec extends GraftSpec {
   }
 
   test("replayed batch is idempotent: membership and search unchanged") {
-    val base = java.nio.file.Files.createTempDirectory("graft_hnsw_replay")
+    val base = GraftSpec.tempDir("graft_hnsw_replay")
     val storeDir = base.resolve("store").toString
     try {
       val first = emb.filter(col("vec_id") < 300)
@@ -75,7 +75,7 @@ class HnswMaintenanceSpec extends GraftSpec {
     // in (the pre-fix delete+rename sequence loses the segment here).
     // The replayed append must restore the backup and keep every
     // previously stored id.
-    val base = java.nio.file.Files.createTempDirectory("graft_hnsw_crash")
+    val base = GraftSpec.tempDir("graft_hnsw_crash")
     val storeDir = base.resolve("store").toString
     try {
       val first = emb.filter(col("vec_id") < 300)
@@ -104,7 +104,7 @@ class HnswMaintenanceSpec extends GraftSpec {
     // value would migrate only touched segments and duplicate ids. The
     // store persists (numGraphs, m, efConstruction) on first write and
     // every later append must match.
-    val base = java.nio.file.Files.createTempDirectory("graft_hnsw_meta")
+    val base = GraftSpec.tempDir("graft_hnsw_meta")
     val storeDir = base.resolve("store").toString
     try {
       HnswMaintenance.appendBatch(emb.filter(col("vec_id") < 100), storeDir,
@@ -126,7 +126,7 @@ class HnswMaintenanceSpec extends GraftSpec {
   }
 
   test("append touches only the routed segments") {
-    val base = java.nio.file.Files.createTempDirectory("graft_hnsw_touch")
+    val base = GraftSpec.tempDir("graft_hnsw_touch")
     val storeDir = base.resolve("store").toString
     try {
       HnswMaintenance.appendBatch(emb, storeDir)

@@ -261,7 +261,7 @@ class HnswSpec extends GraftSpec {
     val fromIdx = Hnsw.searchRoutedIndex(spark, queries, idx, cent, k = 10, nprobe = 2)
     assert(fromIdx.exceptAll(oneShot).isEmpty && oneShot.exceptAll(fromIdx).isEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_ridx").toString
+    val dir = GraftSpec.tempDir("graft_hnsw_ridx").toString
     try {
       idx.write.mode("overwrite").partitionBy("cell").parquet(dir)
       val stored = spark.read.parquet(dir)
@@ -301,7 +301,7 @@ class HnswSpec extends GraftSpec {
     val fromIdx = Hnsw.searchIndex(spark, queries, idx, 10)
     assert(fromIdx.exceptAll(oneShot).isEmpty && oneShot.exceptAll(fromIdx).isEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_idx").toString
+    val dir = GraftSpec.tempDir("graft_hnsw_idx").toString
     try {
       idx.write.mode("overwrite").parquet(dir)
       val persisted = Hnsw.searchIndex(spark, queries, spark.read.parquet(dir), 10)
@@ -315,7 +315,7 @@ class HnswSpec extends GraftSpec {
   // ---- resident serving -------------------------------------------------
 
   private def withTempDir[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = GraftSpec.tempDir(prefix).toString
     try body(dir)
     finally {
       val p = new org.apache.hadoop.fs.Path(dir)

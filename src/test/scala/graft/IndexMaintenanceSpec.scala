@@ -26,7 +26,7 @@ class IndexMaintenanceSpec extends GraftSpec {
   }
 
   test("re-running against the same checkpoint does not duplicate rows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idx_idem")
+    val base = GraftSpec.tempDir("graft_idx_idem")
     val srcDir = base.resolve("src").toString
     val indexDir = base.resolve("index").toString
     val ckptDir = base.resolve("ckpt").toString
@@ -44,7 +44,7 @@ class IndexMaintenanceSpec extends GraftSpec {
     // foreachBatch retries re-run a batch AFTER its write committed; the
     // per-batch directory overwrite keyed on batch_id must replace, not
     // append. Simulate the retry by invoking the batch writer twice.
-    val indexDir = java.nio.file.Files.createTempDirectory("graft_idx_retry").toString
+    val indexDir = GraftSpec.tempDir("graft_idx_retry").toString
     val half = emb.filter(col("vec_id") % 2 === 0)
     IndexMaintenance.appendBatch(half, cent, indexDir, batchId = 0L)
     IndexMaintenance.appendBatch(emb.filter(col("vec_id") % 2 === 1), cent, indexDir, batchId = 1L)
@@ -59,7 +59,7 @@ class IndexMaintenanceSpec extends GraftSpec {
   }
 
   test("compacted index has fewer files and answers probes identically") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idx_compact")
+    val base = GraftSpec.tempDir("graft_idx_compact")
     val srcDir = base.resolve("src").toString
     val indexDir = base.resolve("index").toString
     val ckptDir = base.resolve("ckpt").toString

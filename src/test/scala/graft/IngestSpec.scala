@@ -11,7 +11,7 @@ class IngestSpec extends GraftSpec {
   import spark.implicits._
 
   test("S4: binaryFile scan -> page extraction -> posexplode with reference id scheme") {
-    val dir = Files.createTempDirectory("graft_pdf")
+    val dir = GraftSpec.tempDir("graft_pdf")
     Files.writeString(Paths.get(dir.toString, "paper1.txt"),
       "page one text\n\npage two text\n\n   \n\npage three")
     Files.writeString(Paths.get(dir.toString, "paper2.txt"), "only page")

@@ -56,7 +56,7 @@ class MaterializeSpec extends GraftSpec {
   }
 
   test("reliable strategy checkpoints to the configured dir and survives release") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mat_spec").toString
+    val dir = GraftSpec.tempDir("graft_mat_spec").toString
     spark.conf.set("spark.graft.materialize", "reliable")
     spark.conf.set("spark.graft.materialize.dir", dir)
     try {

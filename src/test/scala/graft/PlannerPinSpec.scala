@@ -40,7 +40,7 @@ class PlannerPinSpec extends GraftSpec {
   private def withFlakySource[A](name: String)(body: (String, DataFrame) => A): A = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.flaky.impl", classOf[FlakyFs].getName)
-    val base = java.nio.file.Files.createTempDirectory(name)
+    val base = GraftSpec.tempDir(name)
     try {
       val local = base.resolve("src.parquet").toString
       val seed = Tables.embeddings(spark, sfDir)
@@ -117,7 +117,7 @@ class PlannerPinSpec extends GraftSpec {
     AggRewrite.clear()
     withFlakySource("graft_pin_agg") { (src, emb) =>
       val mv = emb.groupBy($"label").agg(count(lit(1)).as("n"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pin_agg_mv").toString
+      val tmp = GraftSpec.tempDir("graft_pin_agg_mv").toString
       mv.write.mode("overwrite").parquet(tmp)
       AggRewrite.register(src, AggRewrite.MvSpec(spark.read.parquet(tmp),
         groupCols = Seq("label"), measures = Map("n" -> (("count", ""))),
@@ -163,7 +163,7 @@ class PlannerPinSpec extends GraftSpec {
     // pinned() never needs its retry arm.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
-    val base = java.nio.file.Files.createTempDirectory("graft_pin_cold")
+    val base = GraftSpec.tempDir("graft_pin_cold")
     try {
       val src = base.resolve("src.parquet").toString
       val seed = Tables.embeddings(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ class ReproShuffleSpec extends GraftSpec {
 
   test("write: one directory per shard, maxRecordsPerFile bounds every file") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_shuffle").toString
+    val dir = GraftSpec.tempDir("graft_shuffle").toString
     ReproShuffle.write(docs, "doc_id", 4, dir, maxRecordsPerFile = 50L)
     val back = spark.read.parquet(dir)
     assert(back.count() == docs.count())

@@ -66,7 +66,7 @@ class SearchSpec extends GraftSpec {
   }
 
   test("LSH model persists and reloads with identical results (M4)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_lsh").toString + "/model"
+    val out = GraftSpec.tempDir("graft_lsh").toString + "/model"
     val idx = LshIndex.fit(emb, numHashTables = 4, bucketLength = 2.0)
     idx.model.write.overwrite().save(out)
     val reloaded = org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel.load(out)
@@ -77,7 +77,7 @@ class SearchSpec extends GraftSpec {
   }
 
   test("IVF partitioned index: probe prunes partitions, results match in-memory IVF") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/index"
+    val out = GraftSpec.tempDir("graft_ivf").toString + "/index"
     val cent = IvfIndex.seedCentroids(emb, 8)
     val assigned = IvfIndex.assign(emb, cent)
     IvfIndex.writePartitioned(assigned, out)

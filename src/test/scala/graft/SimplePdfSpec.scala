@@ -194,7 +194,7 @@ class SimplePdfSpec extends GraftSpec {
   }
 
   test("ingestDirectory over real .pdf files yields reference-scheme page rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdfs")
+    val dir = GraftSpec.tempDir("graft_pdfs")
     java.nio.file.Files.write(dir.resolve("paper1.pdf"),
       makePdf(Seq(Seq("alpha one"), Seq("alpha two"))))
     java.nio.file.Files.write(dir.resolve("paper2.pdf"),

@@ -91,7 +91,7 @@ class SourceSnapshotSpec extends GraftSpec {
     */
   private def withFlakySource[A](body: (String, JPath, DataFrame) => A): A = {
     spark.sparkContext.hadoopConfiguration.set("fs.flaky.impl", classOf[FlakyFs].getName)
-    val base = Files.createTempDirectory("graft_snap_src")
+    val base = GraftSpec.tempDir("graft_snap_src")
     try {
       val local = base.resolve("src.parquet")
       val seed = Tables.embeddings(spark, sfDir)
@@ -166,7 +166,7 @@ class SourceSnapshotSpec extends GraftSpec {
 
   test("Agg join view: a data file added to the second source alone drops the view") {
     AggRewrite.clear()
-    val base = Files.createTempDirectory("graft_snap_join")
+    val base = GraftSpec.tempDir("graft_snap_join")
     val liDir = base.resolve("lineitem.parquet")
     val ordDir = base.resolve("orders.parquet")
     val mvDir = base.resolve("mv").toString

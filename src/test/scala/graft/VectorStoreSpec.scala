@@ -31,7 +31,7 @@ class VectorStoreSpec extends GraftSpec {
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("client lifecycle: create / add / count / list / delete") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val wh = GraftSpec.tempDir("graft_store").toString
     val store = new VectorStore(spark, wh)
     assert(store.listCollections() === Seq.empty)
 
@@ -52,7 +52,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("query returns self at rank 1 with documents attached") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_q").toString
+    val wh = GraftSpec.tempDir("graft_store_q").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 30))
     val queries = Seq((3L, Array(3.0f, 6.0f)), (7L, Array(7.0f, 14.0f)))
@@ -66,7 +66,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("approximate query recall against the exact result") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_ann").toString
+    val wh = GraftSpec.tempDir("graft_store_ann").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 50))
     val queries = Seq((5L, Array(5.0f, 10.0f))).toDF("qid", "qemb")
@@ -79,7 +79,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("where-filtered query, get by ids, and peek") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val wh = GraftSpec.tempDir("graft_store").toString
     val store = new VectorStore(spark, wh)
     store.getOrCreateCollection("col_w")
     store.add("col_w", records(0 until 10))
@@ -98,7 +98,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("delete(where/ids) and upsert: copy-on-write semantics, exact final state") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_mut").toString
+    val wh = GraftSpec.tempDir("graft_store_mut").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 20))
     // predicate delete returns the removed count and keeps the rest
@@ -123,7 +123,7 @@ class VectorStoreSpec extends GraftSpec {
     // Two rows for one id in a single upsert would leave which-wins to
     // row order; the reference client errors on duplicate ids in one
     // request, so the facade does too — and the collection is untouched.
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_dup").toString
+    val wh = GraftSpec.tempDir("graft_store_dup").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 5))
     val dup = records(3 to 3).withColumn("document", lit("first"))
@@ -136,7 +136,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("rewrite crash between renames: backup restores the full collection") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_crash").toString
+    val wh = GraftSpec.tempDir("graft_store_crash").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 12))
     // simulate the worst crash point: live renamed to .bak, staging
@@ -156,7 +156,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("streaming CDC apply: >1 micro-batch drained, per-batch replay is idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("graft_store_cdc")
+    val base = GraftSpec.tempDir("graft_store_cdc")
     val store = new VectorStore(spark, base.resolve("wh").toString)
     store.add("c", records(0 until 20))
     val srcDir = base.resolve("src").toString
@@ -183,7 +183,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("upsert is crash-atomic: a failure before the swap loses nothing") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_atomic").toString
+    val wh = GraftSpec.tempDir("graft_store_atomic").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 10))
     // A records frame whose evaluation throws mid-write: under a
@@ -201,7 +201,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("delete(where): NULL predicate rows are KEPT, not deleted") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_null").toString
+    val wh = GraftSpec.tempDir("graft_store_null").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 3))
     // a row with null metadata: any metadata predicate is NULL for it
@@ -216,7 +216,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("deleteCollection purges crash scratch; list hides .bak/.staging") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_scratch").toString
+    val wh = GraftSpec.tempDir("graft_store_scratch").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 4))
     val conf = spark.sparkContext.hadoopConfiguration
@@ -239,7 +239,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("add without a metadata column stores null metadata") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_nm").toString
+    val wh = GraftSpec.tempDir("graft_store_nm").toString
     val store = new VectorStore(spark, wh)
     val bare = Seq(("p0", "doc 0", Array(1.0f, 2.0f)))
       .toDF("id", "document", "embedding")
@@ -250,7 +250,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("query against an empty collection returns no rows") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_empty").toString
+    val wh = GraftSpec.tempDir("graft_store_empty").toString
     val store = new VectorStore(spark, wh)
     store.getOrCreateCollection("void")
     val queries = Seq((1L, Array(1.0f, 2.0f))).toDF("qid", "qemb")
@@ -263,7 +263,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("collection declares the schema every stored file carries") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_schema").toString
+    val wh = GraftSpec.tempDir("graft_store_schema").toString
     val store = new VectorStore(spark, wh)
     // mergeSchema reads every footer, so a file written with any other
     // type would surface here (or fail the merge)
@@ -280,7 +280,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("resolving a collection starts no Spark job") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_read").toString
+    val wh = GraftSpec.tempDir("graft_store_read").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 10))
     assert(jobsOf(store.collection("c")) === 0)
@@ -289,7 +289,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("add on an existing collection starts only its append write's jobs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_store_addjobs")
+    val base = GraftSpec.tempDir("graft_store_addjobs")
     val store = new VectorStore(spark, base.resolve("wh").toString)
     store.add("c", records(0 until 10))
     val batch = records(10 until 20)
@@ -301,7 +301,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("add casts a LONG metadata.page_num to the declared INT, values equal") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_cast").toString
+    val wh = GraftSpec.tempDir("graft_store_cast").toString
     val store = new VectorStore(spark, wh)
     val longMeta = StructType(Seq(
       StructField("pdf_name", StringType), StructField("page_num", LongType),
@@ -320,7 +320,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("upsert leaves no persisted RDD beyond those present before it") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_rdds").toString
+    val wh = GraftSpec.tempDir("graft_store_rdds").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 10))
     val before = persisted
@@ -336,7 +336,7 @@ class VectorStoreSpec extends GraftSpec {
   }
 
   test("upsert rejects a null or duplicate id; the collection's files stay unchanged") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_store_reject").toString
+    val wh = GraftSpec.tempDir("graft_store_reject").toString
     val store = new VectorStore(spark, wh)
     store.add("c", records(0 until 5))
     val before = files(s"$wh/c")
