@@ -35,7 +35,7 @@ class BatchGateSpec extends GraftSpec {
     (df.collect().toSeq, spliced)
   }
 
-  test("opt-in batch queries and their unmarked siblings plan concurrently as they do sequentially") {
+  test("concurrent opt-in and unmarked batch queries match a sequential run") {
     // the shared test session has no GraftSession extensions — install
     // the ANN rule for the duration (the PlannerPinSpec pattern)
     spark.experimental.extraOptimizations = Seq(graft.plans.AnnIndexRewrite)
