@@ -11,7 +11,7 @@ import graft.index.CollectionCatalog
 import graft.ingest.DocumentIngest
 import graft.model.Tables
 import graft.multimodal.Multimodal
-import graft.operators.SharedFrames
+import graft.operators.{Materialize, SharedFrames}
 import graft.search.{IvfIndex, KnnExact, LshIndex, RpLsh, TextSearch}
 import graft.streaming.EventOps
 import graft.textual.TextAnalysis
@@ -46,7 +46,7 @@ object SparkEntry {
         length(trim(col("text"))) > 0)
       .filter(col("quality_score") >= 0.8)
       .select(col("doc_id"), col("quality_score"))
-      .transform(materialize)
+      .transform(Materialize(_))
     val dropped = Clusters.connectedComponents(sharedNgramPairs(s, dir))
       .filter(col("id") =!= col("label"))
       .select(col("id").as("doc_id"))
@@ -110,13 +110,14 @@ object SparkEntry {
     * [[sharedCoPairs]]' self-join reads — ALSO the source of
     * source_overlap_matrix's (source, shingle) postings (r22), which
     * previously re-ran the whole HashedShingles corpus scan to derive
-    * the same shingles with a coarser key. Blocks are registered in
-    * Dedup's checkpoint queue (released by Dedup.releaseCheckpoints in
-    * clearCaches, surviving Bench's between-pass transient release —
-    * the persisted pair cache recomputes FROM this frame if its own
-    * blocks are evicted), so the slot itself releases nothing.
+    * the same shingles with a coarser key. The frame is untracked and
+    * the slot releases it (`Materialize.releaseOne`, on clearCaches):
+    * it must live for the session, surviving Bench's between-pass
+    * transient release, because the persisted pair cache recomputes
+    * FROM this frame if its own blocks are evicted.
     */
-  private val ngramPostings = SharedFrames.slot[DataFrame]("ngramPostings")
+  private val ngramPostings =
+    SharedFrames.slot[DataFrame]("ngramPostings", Materialize.releaseOne)
   private def sharedNgramPostings(spark: SparkSession, dir: String): DataFrame =
     ngramPostings(spark, dir)(Dedup.materializedPostings(Tables.documents(spark, dir), 3))
   private def sharedNgramPairs(spark: SparkSession, dir: String): DataFrame =
@@ -125,7 +126,7 @@ object SparkEntry {
   /** One computation of the winnowed-fingerprint co-occurrence PAIR list
     * (doc_a, doc_b, shared ≥ 2), shared by dedup_winnow_candidates and
     * dedup_winnow_clusters — the same build-the-pair-graph-once shape as
-    * [[sharedNgramPairs]]. The postings are localCheckpointed once (the
+    * [[sharedNgramPairs]]. The postings are materialized once (the
     * df-cap and both join sides reference them; an unmaterialized winnow
     * frame would re-run the char-level gram hashing up to 4×, measured
     * ~4s → ~1s at sf0.1), the df ≤ 64 cap is the dedup family's
@@ -142,7 +143,7 @@ object SparkEntry {
         // session-lifetime pin: the cached pair frame recomputes FROM
         // this checkpoint if its persisted blocks are evicted, so it
         // must survive Bench's between-pass transient release (r22)
-        .transform(graft.operators.Materialize.pin)
+        .transform(Materialize.pin)
       val rare = post.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") <= 64)
       val kept = post.join(rare, Seq("h"))
@@ -162,8 +163,7 @@ object SparkEntry {
     */
   def clearCaches(): Unit = {
     SharedFrames.clear()
-    graft.operators.Materialize.releaseAll()
-    Dedup.releaseCheckpoints()
+    Materialize.releaseAll()
     graft.search.Hnsw.releaseResident()
   }
 
@@ -199,7 +199,7 @@ object SparkEntry {
   private val hnsw8 = SharedFrames.slot[DataFrame]("hnsw8")
   private def sharedHnsw8(spark: SparkSession, dir: String): DataFrame =
     hnsw8(spark, dir) {
-      graft.operators.Materialize.pin(
+      Materialize.pin(
         graft.search.Hnsw.buildIndex(spark, Tables.embeddings(spark, dir),
           numGraphs = 8))
     }
@@ -414,7 +414,7 @@ object SparkEntry {
     }
 
   private val bpe = SharedFrames.slot[(Seq[graft.textual.Bpe.Merge], DataFrame)]("bpe",
-    b => graft.textual.Bpe.unpersistCheckpoint(b._2))
+    b => Materialize.releaseOne(b._2))
   private def sharedBpe(spark: SparkSession, dir: String)
       : (Seq[graft.textual.Bpe.Merge], DataFrame) =
     bpe(spark, dir)(graft.textual.Bpe.trainMerges(spark, Tables.documents(spark, dir),
@@ -887,15 +887,15 @@ object SparkEntry {
     // the per-segment HNSW build+search) would be re-evaluated per
     // iteration. The edge list is k·n rows — bounded — so stage it once,
     // the same discipline the DCT and winnow rows apply.
-    val edgesM = graft.operators.Materialize.materializeOnly(edges)
+    val edgesM = Materialize.materializeOnly(edges)
     val deg = edgesM.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // edgeDeg's eager checkpoint materializes the join, after which the
     // raw edge checkpoint is dead weight — release both caches as soon
     // as their last consumer has materialized (try/finally, the repo's
     // unpersist discipline) instead of leaking them for the session.
     val edgeDeg =
-      try graft.operators.Materialize.materializeOnly(edgesM.join(deg, Seq("src")))
-      finally graft.textual.Bpe.unpersistCheckpoint(edgesM)
+      try Materialize.materializeOnly(edgesM.join(deg, Seq("src")))
+      finally Materialize.releaseOne(edgesM)
     try {
       val base = 1000000000000L / n
       var ranks = nodes.select(col("id"), lit(base).as("r"))
@@ -925,7 +925,7 @@ object SparkEntry {
       val spark = nodes.sparkSession
       import spark.implicits._
       rows.toDF("vec_id", "rank_fp")
-    } finally graft.textual.Bpe.unpersistCheckpoint(edgeDeg)
+    } finally Materialize.releaseOne(edgeDeg)
   }
 
   /** The literal-query cosine-distance column the cosine planner rows
@@ -961,19 +961,6 @@ object SparkEntry {
       (n, v1, l1, v2, l2, graft.operators.Pca.trace(m))
     }
 
-  /** Register a result-owning materialized frame for clearCaches
-    * release (delegates to the central [[graft.operators.Materialize]]
-    * registry — r22: one tracking point, LogicalRDD-level release).
-    */
-  private def trackCheckpoint(df: DataFrame): DataFrame =
-    graft.operators.Materialize.track(df)
-
-  /** Materialize an intermediate once (conf-switched strategy, tracked
-    * for release) — see [[graft.operators.Materialize]].
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    graft.operators.Materialize(df)
-
   /** Materialize a NARROW expensive pipeline once, then globally sort
     * it (r21, guide §1/§7.2): a global `orderBy` plans as a
     * RangePartitioning exchange whose partitioner SAMPLES its child —
@@ -988,7 +975,7 @@ object SparkEntry {
     * vs two executions of the dominant map work.
     */
   private def materializeThenSort(df: DataFrame, cols: String*): DataFrame =
-    materialize(df).orderBy(cols.map(col): _*)
+    Materialize(df).orderBy(cols.map(col): _*)
 
   /** The rewrite_fired pin for the planner rows, r18 protocol
     * ([[graft.plans.PlannerPin]]): build → inspect the optimized plan
@@ -1004,7 +991,7 @@ object SparkEntry {
     val (df, fired) = graft.plans.PlannerPin.pinned(build,
       graft.plans.PlannerPin.annSpliced("vec_id"),
       () => graft.plans.AnnIndexRewrite.resetPlanCaches())
-    (materialize(df), fired)
+    (Materialize(df), fired)
   }
 
   /** The queries that build a shared slot their dependents read:
@@ -1057,7 +1044,7 @@ object SparkEntry {
     val (df, fired) = graft.plans.PlannerPin.pinned(build,
       graft.plans.PlannerPin.aggSpliced(factPaths),
       () => graft.plans.AggRewrite.resetPlanCaches())
-    (materialize(df), fired)
+    (Materialize(df), fired)
   }
 
   /** The join-elimination twin of [[pinnedAgg]]: fired == every dim
@@ -1070,7 +1057,7 @@ object SparkEntry {
     val (df, fired) = graft.plans.PlannerPin.pinned(build,
       graft.plans.PlannerPin.aggSpliced(dimPaths),
       () => graft.plans.ConstraintRewrite.resetPlanCaches())
-    (materialize(df), fired)
+    (Materialize(df), fired)
   }
 
   /** The lineitem rollup measure algebra for the AggMaintenance twins
@@ -1463,7 +1450,7 @@ object SparkEntry {
         .select(col("qid"), col("rk").cast("long").as("rk"), col("id"),
           col("document"), round(col("dist"), 4).as("dist"))
         .orderBy("qid", "rk")
-        .transform(materialize)
+        .transform(Materialize(_))
       store.deleteCollection("docs")
       res
     }),
@@ -1497,7 +1484,7 @@ object SparkEntry {
         .select(col("qid"), col("rk").cast("long").as("rk"), col("id"),
           col("document"), round(col("dist"), 4).as("dist"), lit(n).as("n_total"))
         .orderBy("qid", "rk")
-        .transform(materialize)
+        .transform(Materialize(_))
       store.deleteCollection("docs")
       res
     }),
@@ -1544,7 +1531,7 @@ object SparkEntry {
         .select(col("qid"), col("rk").cast("long").as("rk"), col("id"),
           col("document"), round(col("dist"), 4).as("dist"), lit(n).as("n_total"))
         .orderBy("qid", "rk")
-        .transform(materialize)
+        .transform(Materialize(_))
       store.deleteCollection("docs")
       res
     }),
@@ -1595,7 +1582,7 @@ object SparkEntry {
         .join(emb.select(col("vec_id"), col("embedding").as("cemb")), Seq("vec_id"))
         .select(col("qid"), col("vec_id"), col("cemb"),
           floor(col("sim") * lit(1000000.0) + lit(0.5)).cast("long").as("relfp"))
-        .transform(materialize) // 24 rows; the pair frame references it twice
+        .transform(Materialize(_)) // 24 rows; the pair frame references it twice
       val pair = cand.as("a").join(cand.as("b"), Seq("qid"))
         .filter(col("a.vec_id") =!= col("b.vec_id"))
         .select(col("qid"), col("a.vec_id").as("da"), col("b.vec_id").as("db"),
@@ -1951,7 +1938,7 @@ object SparkEntry {
         .agg(round(decOfFpSum(sum(revenueMicros), 1000000), 2).cast("double").as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("o_orderpriority")
-        .transform(materialize)
+        .transform(Materialize(_))
       s.sql(s"DROP TABLE IF EXISTS $liT")
       s.sql(s"DROP TABLE IF EXISTS $ordT")
       val p = new org.apache.hadoop.fs.Path(tmp)
@@ -2383,7 +2370,7 @@ object SparkEntry {
       // the write and every micro-batch read carry dead bytes (the
       // sentinel builder is schema-derived, so any (user_id, ts) layout
       // works)
-      trackCheckpoint(EventOps.streamSessionizeFromBatch(s,
+      Materialize.track(EventOps.streamSessionizeFromBatch(s,
         Tables.events(s, dir).select(col("user_id"), col("ts"), col("value"))))
         .orderBy(col("user_id"), col("session_start_sec"))),
 
@@ -2801,7 +2788,7 @@ object SparkEntry {
       // DistributedRank's quantile + bucket-count driver actions and
       // both rank passes would otherwise re-derive the quality + LM
       // pipelines ~5× (measured 6s -> ~1.5s at sf0.1)
-      val joined = q.join(lp, Seq("doc_id")).transform(materialize)
+      val joined = q.join(lp, Seq("doc_id")).transform(Materialize(_))
       // BOTH ranks in one driver-action pass (r22): one multi-column
       // quantile + one joint bucket count replace two sequential rank
       // passes whose second pair of actions re-executed the first
@@ -2840,7 +2827,7 @@ object SparkEntry {
       // feeds THREE consumers (sizes, both self-join sides) — the same
       // triple-recompute the plan showed before (3 shingle scans then,
       // 3 join+distinct passes after the posting reuse).
-      val posts = materialize(sharedNgramPostings(s, dir)
+      val posts = Materialize(sharedNgramPostings(s, dir)
         .select(col("id").as("doc_id"), col("s").as("sh"))
         .join(broadcast(Tables.documents(s, dir).select(col("doc_id"), col("source"))),
           Seq("doc_id"))
@@ -3348,7 +3335,7 @@ object SparkEntry {
     "binary_stream_codes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val thr = binaryThresholds(s, dir)
-      trackCheckpoint(
+      Materialize.track(
         graft.streaming.BinaryCodeMaintenance.maintainFromBatch(s, emb, thr))
         .orderBy("vec_id")
     }),
@@ -3557,7 +3544,7 @@ object SparkEntry {
       // join sides
       val hashes = graft.multimodal.Multimodal.dHash64(s, media)
         .filter(col("is_image")).select(col("id"), col("dhash"))
-        .transform(materialize)
+        .transform(Materialize(_))
       graft.dedup.Dedup.dhashPairs(hashes, maxHamming = 6)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -3806,7 +3793,7 @@ object SparkEntry {
             |        * element_at(a, cast((uv % 8) * 8 + (k % 8) + 1 as int))
             |        * element_at(px, k + 1))
             |  / element_at(qm, uv + 1) + 0.5D) as bigint))""".stripMargin))
-        .transform(materialize)
+        .transform(Materialize(_))
       staged
         .withColumn("recon", expr(
           """transform(sequence(0, 63), k ->
@@ -3816,7 +3803,7 @@ object SparkEntry {
             |          * element_at(a, cast((uv % 8) * 8 + (k % 8) + 1 as int))
             |          * cast(element_at(qc, uv + 1) * element_at(qm, uv + 1) as double))
             |    + 0.5D) as bigint), cast(0 as bigint)), cast(255 as bigint)))""".stripMargin))
-        .transform(materialize)
+        .transform(Materialize(_))
         .select(col("doc_id"),
           expr("cast(size(filter(qc, c -> c != 0)) as bigint)").as("n_nonzero"),
           expr("aggregate(sequence(0, 63), cast(0 as bigint), (acc, k) -> " +
@@ -3991,7 +3978,7 @@ object SparkEntry {
       // localCheckpoint materializes the partial once; everything after
       // runs over |distinct (doc, bigram)| rows, never the corpus.
       val perDocTf = bg.groupBy("doc_id", "a", "b").agg(count(lit(1)).as("tf"))
-        .transform(materialize)
+        .transform(Materialize(_))
       val big = perDocTf.groupBy("a", "b").agg(sum(col("tf")).as("c_ab"))
       val uni = perDocTf.groupBy("a").agg(sum(col("tf")).as("c_a"))
       val perDoc = perDocTf
@@ -4052,7 +4039,7 @@ object SparkEntry {
       // without (the re-derived legs read the cheap materialized token
       // arrays, and AQE picks the join strategy from runtime sizes).
       val docs = docsRaw.select(col("doc_id"), col("is_train"), col("toks"))
-        .transform(materialize)
+        .transform(Materialize(_))
       val tri = docs
         .withColumn("tg", explode(when(size(col("toks")) < 3,
           expr("cast(array() as array<struct<a:string,b:string,c:string>>)"))
@@ -5270,7 +5257,7 @@ object SparkEntry {
       graft.functions.VectorExpressions.ensureRegistered(s)
       val emb = Tables.embeddings(s, dir)
       val thr = binaryThresholds(s, dir)
-      val codes = materialize(emb.select(col("vec_id"),
+      val codes = Materialize(emb.select(col("vec_id"),
         BinaryHash.codeWord("embedding", thr, 0).as("lo"),
         BinaryHash.codeWord("embedding", thr, 32).as("hi")))
       val qcodes = codes.filter(col("vec_id") < 5)
@@ -5309,7 +5296,7 @@ object SparkEntry {
       import graft.search.BinaryHash
       val aug = plantedEmbeddings(s, dir)
       val thr = BinaryHash.thresholds(aug, "embedding", 64)
-      val codes = materialize(aug.select(col("vec_id"),
+      val codes = Materialize(aug.select(col("vec_id"),
         BinaryHash.codeWord("embedding", thr, 0).as("lo"),
         BinaryHash.codeWord("embedding", thr, 32).as("hi"))) // banding + both verify sides read it
       val bands = codes.select(col("vec_id"), posexplode(array((0 until 8).map { k =>
@@ -5378,7 +5365,7 @@ object SparkEntry {
       import graft.search.BinaryHash
       val aug = plantedEmbeddings(s, dir)
       val thr = BinaryHash.thresholds(aug, "embedding", 64)
-      val codes = materialize(aug.select(col("vec_id"),
+      val codes = Materialize(aug.select(col("vec_id"),
         BinaryHash.codeWord("embedding", thr, 0).as("lo"),
         BinaryHash.codeWord("embedding", thr, 32).as("hi")))
       def bandKey(k: Int) = {
@@ -5742,7 +5729,7 @@ object SparkEntry {
         () => graft.plans.AggRewrite.resetPlanCaches())
       val coarseUsed = graft.plans.PlannerPin.scansPath(
         df.queryExecution.optimizedPlan, coarsePath)
-      materialize(df)
+      Materialize(df)
         .withColumn("rewrite_fired", lit(firedNow))
         .withColumn("coarse_mv", lit(coarseUsed))
         .orderBy("l_returnflag")
@@ -5784,7 +5771,7 @@ object SparkEntry {
         () => graft.plans.AggRewrite.resetPlanCaches())
       val coarseUsed = graft.plans.PlannerPin.scansPath(
         df.queryExecution.optimizedPlan, coarsePath)
-      materialize(df)
+      Materialize(df)
         .withColumn("rewrite_fired", lit(firedNow))
         .withColumn("coarse_mv", lit(coarseUsed))
         .orderBy("l_returnflag")
@@ -5805,7 +5792,7 @@ object SparkEntry {
       val li = Tables.lineitem(s, dir).select(
         col("l_returnflag"), col("l_linestatus"),
         col("l_orderkey"), col("l_quantity"))
-      trackCheckpoint(graft.streaming.AggMaintenance.maintainFromBatch(
+      Materialize.track(graft.streaming.AggMaintenance.maintainFromBatch(
         s, li, Seq("l_returnflag", "l_linestatus"),
         lineitemMeasures("l_orderkey", "sum_ok")))
         .select(col("l_returnflag"), col("l_linestatus"),
@@ -6006,7 +5993,7 @@ object SparkEntry {
             max(col("o_totalprice")).as("max_price")),
         graft.plans.PlannerPin.singleAggregate,
         () => graft.plans.ConstraintRewrite.resetPlanCaches())
-      materialize(res)
+      Materialize(res)
         .withColumn("rewrite_fired", lit(firedNow)).orderBy("o_orderpriority")
     }),
 
@@ -6024,7 +6011,7 @@ object SparkEntry {
             count(lit(1)).as("n")),
         graft.plans.PlannerPin.noDistinctAggregate,
         () => graft.plans.ConstraintRewrite.resetPlanCaches())
-      materialize(res)
+      Materialize(res)
         .withColumn("rewrite_fired", lit(firedNow)).orderBy("o_orderpriority")
     }),
 
@@ -6054,7 +6041,7 @@ object SparkEntry {
       val plan = df.queryExecution.optimizedPlan
       val joinGone = !graft.plans.PlannerPin.scansPath(plan, ord)
       val mvFired = !graft.plans.PlannerPin.scansPath(plan, li)
-      materialize(df)
+      Materialize(df)
         .withColumn("join_eliminated", lit(joinGone))
         .withColumn("mv_fired", lit(mvFired))
         .orderBy("l_returnflag", "l_linestatus")
@@ -6086,7 +6073,7 @@ object SparkEntry {
       val plan = df.queryExecution.optimizedPlan
       val joinGone = !graft.plans.PlannerPin.scansPath(plan, ord)
       val mvFired = !graft.plans.PlannerPin.scansPath(plan, li)
-      materialize(df)
+      Materialize(df)
         .withColumn("join_eliminated", lit(joinGone))
         .withColumn("mv_fired", lit(mvFired))
         .orderBy("l_returnflag", "l_linestatus")
@@ -6102,7 +6089,7 @@ object SparkEntry {
       // the fact stream is pre-projected to the consumed columns —
       // source-side column pruning, exactly what the parquet scan of a
       // real stream would push down
-      trackCheckpoint(graft.streaming.AggMaintenance.maintainJoinFromBatch(
+      Materialize.track(graft.streaming.AggMaintenance.maintainJoinFromBatch(
         s, Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linestatus"),
           col("l_linenumber"), col("l_quantity")),
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority")),
@@ -6125,7 +6112,7 @@ object SparkEntry {
       val dimV2 = dimV1.withColumn("o_orderpriority",
         when(col("o_orderkey") % 97 === 0, lit("9-RECLASSIFIED"))
           .otherwise(col("o_orderpriority")))
-      trackCheckpoint(graft.streaming.AggMaintenance.maintainJoinWithDimUpdate(
+      Materialize.track(graft.streaming.AggMaintenance.maintainJoinWithDimUpdate(
         s, Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linestatus"),
           col("l_linenumber"), col("l_quantity")),
         dimV1, dimV2,

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Duplicate-cluster assignment: connected components over a near-dup
   * pair list — the step that turns any pairwise dedup output (n-gram
   * Jaccard, MinHash, SimHash, embedding-cosine) into "keep one document
@@ -31,27 +33,16 @@ import org.apache.spark.sql.functions._
   * point, at which every node's sole smaller neighbor IS its
   * component's minimum — the label.
   *
-  * Scale notes: `localCheckpoint` truncates the per-round lineage growth
-  * (on a multi-executor cluster prefer `Dataset.checkpoint` with a
-  * reliable checkpoint dir — localCheckpoint pins blocks to executors
-  * and does not survive executor loss). Tiny graphs (the common case: a
-  * near-dup pair list is high-threshold filter output) short-circuit to
-  * driver union-find below `maxDriverEdges` — zero iterative jobs.
+  * Scale notes: a [[Materialize]] cut per round truncates the lineage
+  * growth, and each round's copy is released as the next lands (without
+  * that every round would pin one full edge-set copy for the session).
+  * The cut follows `spark.graft.materialize`: `local` pins blocks to
+  * executors and does not survive executor loss; on a multi-executor
+  * cluster set `reliable`. Tiny graphs (the common case: a near-dup
+  * pair list is high-threshold filter output) short-circuit to driver
+  * union-find below `maxDriverEdges` — zero iterative jobs.
   */
 object Clusters {
-
-  /** The RDD a localCheckpointed Dataset pins to executor block
-    * managers. Dataset.localCheckpoint offers no unpersist seam of its
-    * own, so without this every iterative round would leak one full
-    * edge-set copy for the life of the session (r5 advice) — O(log n)
-    * pinned copies per connectedComponents call.
-    */
-  private def unpersistCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Per-vertex component labels: (id, label) with label = min vertex id
     * reachable in the pair graph. Only vertices that appear in at least
@@ -69,7 +60,7 @@ object Clusters {
     val noSelf = pairs.filter(col(idA) =!= col(idB))
     val edges = noSelf.select(col(idA).as("src"), col(idB).as("dst"))
       .union(noSelf.select(col(idB).as("src"), col(idA).as("dst")))
-      .localCheckpoint()
+      .transform(Materialize.materializeOnly(_))
     // Hybrid: a near-dup edge list is usually TINY relative to the corpus
     // (it's the output of a high-threshold filter), so below the cutoff
     // solve it with driver union-find — zero iterative jobs. The
@@ -87,7 +78,7 @@ object Clusters {
       val spark = pairs.sparkSession
       import spark.implicits._
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      unpersistCheckpoint(edges)
+      Materialize.releaseOne(edges)
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -127,8 +118,8 @@ object Clusters {
       .select(greatest(col("src"), col("dst")).as("hi"),
         least(col("src"), col("dst")).as("lo"))
       .distinct()
-      .localCheckpoint()
-    unpersistCheckpoint(symEdges)
+      .transform(Materialize.materializeOnly(_))
+    Materialize.releaseOne(symEdges)
     var curCount = cur.count()
     var converged = false
     var iter = 0
@@ -154,7 +145,7 @@ object Clusters {
         .union(withM.filter(col("lo") =!= col("m"))
           .select(col("lo").as("hi"), col("m").as("lo")))
         .distinct()
-        .localCheckpoint(eager = false)
+        .transform(Materialize.materializeOnly(_, eager = false))
       // Fixed point: a union of min-centered stars maps to itself under
       // both operations, so next == cur terminates. Both are distinct
       // sets, so equal counts + empty one-sided difference ⇔ equality;
@@ -162,7 +153,7 @@ object Clusters {
       // that changed the edge count skip the anti-join outright.
       val nextCount = next.count()
       converged = nextCount == curCount && next.exceptAll(cur).isEmpty
-      unpersistCheckpoint(cur)
+      Materialize.releaseOne(cur)
       cur = next
       curCount = nextCount
       iter += 1
@@ -196,10 +187,10 @@ object Clusters {
     val noSelf = pairs.filter(col(idA) =!= col(idB))
     val edges = noSelf.select(col(idA).as("src"), col(idB).as("dst"))
       .union(noSelf.select(col(idB).as("src"), col(idA).as("dst")))
-      .localCheckpoint()
+      .transform(Materialize.materializeOnly(_))
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint()
+      .transform(Materialize.materializeOnly(_))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -211,16 +202,16 @@ object Clusters {
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        .localCheckpoint(eager = false)
+        .transform(Materialize.materializeOnly(_, eager = false))
       converged = next
         .join(labels.withColumnRenamed("label", "prev"), "id")
         .filter(col("label") < col("prev"))
         .isEmpty
-      unpersistCheckpoint(labels)
+      Materialize.releaseOne(labels)
       labels = next
       iter += 1
     }
-    unpersistCheckpoint(edges)
+    Materialize.releaseOne(edges)
     if (!converged) {
       throw new IllegalStateException(
         s"minLabelPropagation did not converge within $maxIter rounds")

@@ -1,12 +1,11 @@
 package graft.dedup
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.operators.Materialize
 
 /** Deduplication operators for a training-data pipeline: exact, n-gram
   * Jaccard, MinHash-LSH, SimHash, and embedding-cosine near-dup.
@@ -18,40 +17,6 @@ import graft.functions.VectorFunctions
   * correctness oracle at fixture scale.
   */
 object Dedup {
-
-  /** Checkpointed intermediates (postings/signature frames materialized
-    * once per operator run — see coOccurrence/minHash/simHash) registered
-    * for deterministic release: [[graft.SparkEntry.clearCaches]] calls
-    * [[releaseCheckpoints]] on teardown so a long-lived host never pins
-    * them past the suite (the CacheLifecycleSpec contract; unreferenced
-    * frames are also ContextCleaner-collectable, this just makes release
-    * deterministic).
-    */
-  private val transientCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def tracked(df: DataFrame): DataFrame = {
-    transientCheckpoints.add(df)
-    df
-  }
-
-  /** Unpersist every registered checkpointed intermediate. A plain
-    * DataFrame.unpersist is a CacheManager no-op for localCheckpoint
-    * frames — the persisted object is the UNDERLYING RDD behind the
-    * LogicalRDD leaf, so that is what gets unpersisted (the
-    * Bpe.unpersistCheckpoint technique).
-    */
-  def releaseCheckpoints(): Unit = {
-    var df = transientCheckpoints.poll()
-    while (df != null) {
-      try df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case NonFatal(_) => () }
-      df = transientCheckpoints.poll()
-    }
-  }
 
   /** Exact dedup: keep the lowest id per normalized-text hash. One
     * shuffle, partial-aggregated; at 100 TB this is a plain groupBy on a
@@ -221,8 +186,8 @@ object Dedup {
       .filter(col("jac") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
 
-  /** The (id, sz, s) posting frame of [[coOccurrence]], MATERIALIZED and
-    * registered for [[releaseCheckpoints]] — exposed (r22) so one
+  /** The (id, sz, s) posting frame of [[coOccurrence]], MATERIALIZED
+    * and untracked (the caller owns its release) — exposed (r22) so one
     * shingling pass can serve consumers beyond the pair join
     * (SparkEntry shares it with source_overlap_matrix, which previously
     * re-shingled the whole corpus to derive its (source, shingle)
@@ -242,8 +207,8 @@ object Dedup {
     graft.functions.HashedShingles.ensureRegistered(docs.sparkSession)
     val sh = docs
       .select(col(idCol).as("id"), graft.functions.HashedShingles(col(textCol), n).as("sh"))
-    tracked(graft.operators.Materialize.materializeOnly(
-      sh.select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))))
+    Materialize.materializeOnly(
+      sh.select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s")))
   }
 
   /** [[coOccurrenceMinOverlap]] over an already-built posting frame
@@ -269,7 +234,7 @@ object Dedup {
       textCol: String,
       maxDocFrequency: Long): DataFrame =
     coOccurrenceFromPostings(
-      materializedPostings(docs, n, idCol, textCol), maxDocFrequency)
+      Materialize.track(materializedPostings(docs, n, idCol, textCol)), maxDocFrequency)
 
   /** The posting self-join half of [[coOccurrence]]. */
   private def coOccurrenceFromPostings(
@@ -345,8 +310,8 @@ object Dedup {
     // pushed-down size() filter re-evaluated the expression in its own
     // condition. Checkpoint BEFORE the filter so the condition reads the
     // materialized column.
-    val sh = tracked(graft.operators.Materialize.materializeOnly(docs
-      .select(col(idCol).as("id"), graft.functions.HashedShingles(col(textCol), n).as("sh"))))
+    val sh = Materialize(docs
+      .select(col(idCol).as("id"), graft.functions.HashedShingles(col(textCol), n).as("sh")))
       .filter(size(col("sh")) > 0)
     val exploded = sh
       .select(col("id"), explode(col("sh")).as("s"))
@@ -401,8 +366,7 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     // signatures materialized once: the banded self-join otherwise runs
     // the per-row SimHash64 native expression on BOTH sides (r21)
-    val sigs = tracked(graft.operators.Materialize.materializeOnly(
-      simHashSignatures(docs, idCol, textCol)))
+    val sigs = Materialize(simHashSignatures(docs, idCol, textCol))
     val chunks = array((0 until 4).map { b =>
       struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("chunk"))
     }: _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
+import graft.operators.Materialize
 import graft.search.{KnnExact, LshIndex}
 
 /** Named-collection client facade — the reference's user workflow
@@ -221,11 +222,11 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     */
   def delete(name: String, ids: DataFrame): Long = {
     val del = ids.select(col("id").cast("string").as("id"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize.materializeOnly(_))
     try {
       val (before, after) = rewrite(name)(_.join(del, Seq("id"), "left_anti"))
       before - after
-    } finally graft.textual.Bpe.unpersistCheckpoint(del) // was leaked per call (r22)
+    } finally Materialize.releaseOne(del) // was leaked per call (r22)
   }
 
   /** collection.upsert(records): replace existing ids, insert new ones —
@@ -242,7 +243,7 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     // state with the old versions deleted but the new rows not yet
     // appended. The new rows are materialized before the swap so a lazy
     // read can never observe the collection mid-rewrite.
-    val newRows = normalized(records).localCheckpoint(true)
+    val newRows = Materialize.materializeOnly(normalized(records))
     try {
       // The reference client REJECTS duplicate ids within one upsert
       // request (a duplicated id would otherwise leave two live rows
@@ -260,7 +261,7 @@ class VectorStore(spark: SparkSession, warehouse: String) {
           "deduplicate the batch before upserting")
       rewrite(name)(
         _.join(newRows.select(col("id")), Seq("id"), "left_anti").unionByName(newRows))
-    } finally graft.textual.Bpe.unpersistCheckpoint(newRows)
+    } finally Materialize.releaseOne(newRows)
   }
 
   /** list_collections(): filesystem metadata, no Spark job. Rewrite

@@ -51,7 +51,7 @@ object Coreset {
     // running min distance to the selected set, updated one pick a time
     var mind = emb.select(col(idCol), col(embCol),
         distFp(typedLit(lastVec), col(embCol)).as("md"))
-      .localCheckpoint(true)
+      .transform(Materialize.materializeOnly(_))
     try {
       for (step <- 1L until k.toLong) {
         val cand = mind.filter(!col(idCol).isin(picks.map(_.vecId).toSeq: _*))
@@ -64,11 +64,11 @@ object Coreset {
         val prev = mind
         mind = mind.select(col(idCol), col(embCol),
             least(col("md"), distFp(typedLit(lastVec), col(embCol))).as("md"))
-          .localCheckpoint(true)
-        graft.textual.Bpe.unpersistCheckpoint(prev)
+          .transform(Materialize.materializeOnly(_))
+        Materialize.releaseOne(prev)
       }
       picks.toSeq
-    } finally graft.textual.Bpe.unpersistCheckpoint(mind)
+    } finally Materialize.releaseOne(mind)
   }
 
   /** The oracle's quantized distance, in memory: left-to-right double

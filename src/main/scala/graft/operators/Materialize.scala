@@ -2,17 +2,17 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The ONE materialization point for "compute this intermediate once,
-  * then read it from N consumers" (r22, closing r21 VERDICT items 1+2):
-  * every pipeline-severing checkpoint in the engine routes through
-  * [[apply]], so (a) the scale posture is a CONFIGURATION, not a
-  * hard-coded `localCheckpoint` scattered across ~20 call sites, and
-  * (b) every materialized frame is REGISTERED and deterministically
-  * releasable — the r21 tails leaked MEMORY_AND_DISK blocks across
-  * bench passes because `materializeThenSort` and the inline LM-count
-  * checkpoints were never tracked.
+  * then read it from N consumers": every lineage checkpoint in the
+  * engine is made by [[materializeOnly]] (directly, or through [[apply]]
+  * and [[pin]]) and released by [[releaseOne]], [[releaseTransients]] or
+  * [[releaseAll]], so (a) the scale posture is a CONFIGURATION, not a
+  * hard-coded `localCheckpoint` scattered across the operators, and
+  * (b) the release technique lives in one place.
   *
   * Strategies (`spark.graft.materialize` session conf):
   *
@@ -27,15 +27,21 @@ import org.apache.spark.sql.DataFrame
   *    long-running jobs on preemptible executors: survives executor
   *    loss at the cost of writing the intermediate to reliable storage.
   *
+  * Lifetimes: an untracked frame ([[materializeOnly]]) is released by
+  * its caller with [[releaseOne]] (the iterative operators free each
+  * round's copy as the next lands); a tracked transient ([[apply]],
+  * [[track]]: per-query intermediates such as Dedup's shingle and
+  * signature frames) lives until [[releaseTransients]] — Bench calls it
+  * between suite passes so 5 passes do not stack ~20 checkpoints each;
+  * a pinned frame ([[pin]]) lives for the session. `SparkEntry.clearCaches`
+  * calls [[releaseAll]] next to `SharedFrames.clear`.
+  *
   * Release: a plain `DataFrame.unpersist` is a CacheManager no-op for
   * checkpointed frames — the persisted object is the RDD behind the
-  * LogicalRDD leaf, so that is what gets unpersisted (the technique
-  * `Dedup.releaseCheckpoints` established). `SparkEntry.clearCaches`
-  * calls `releaseAll` next to `SharedFrames.clear`; Bench calls
-  * `releaseTransients` between suite passes so 5 passes do not stack ~20
-  * checkpoints each.
+  * LogicalRDD leaf, so that is what gets unpersisted. A failed release
+  * (e.g. the session already stopped) is logged at WARN and skipped.
   */
-object Materialize {
+object Materialize extends Logging {
 
   private val tracked =
     java.util.Collections.newSetFromMap(
@@ -52,15 +58,17 @@ object Materialize {
       new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
 
   /** Materialize `df` eagerly under the configured strategy and
-    * register it for [[releaseAll]].
+    * register it as a transient ([[releaseTransients]]).
     */
   def apply(df: DataFrame): DataFrame = track(materializeOnly(df))
 
   /** Materialize without tracking — for frames the caller releases
     * itself (pair with [[releaseOne]]) or whose lifetime ends with the
-    * temp session.
+    * temp session. `eager = false` marks the cut and leaves its
+    * materialization to the caller's next action (the iterative rounds
+    * whose following `count()` is that job).
     */
-  def materializeOnly(df: DataFrame): DataFrame = {
+  def materializeOnly(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.materialize").getOrElse("local") match {
       case "reliable" =>
@@ -70,12 +78,12 @@ object Materialize {
               .createTempDirectory("graft_reliable_ckpt").toString)
           spark.sparkContext.setCheckpointDir(dir)
         }
-        df.checkpoint(eager = true)
-      case _ => df.localCheckpoint(eager = true)
+        df.checkpoint(eager)
+      case _ => df.localCheckpoint(eager)
     }
   }
 
-  /** Register an already-materialized frame for [[releaseAll]]. */
+  /** Register an already-materialized frame as a transient. */
   def track(df: DataFrame): DataFrame = {
     tracked.add(df)
     df
@@ -97,25 +105,18 @@ object Materialize {
     */
   def releaseOne(df: DataFrame): Unit = {
     tracked.remove(df)
-    try df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case NonFatal(_) => () } // session may already be stopped
+    unpersistLeaves(df)
   }
 
-  private def drain(set: java.util.Set[DataFrame]): Unit = {
-    val it = set.iterator()
-    while (it.hasNext) {
-      val df = it.next()
-      it.remove()
-      try df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case NonFatal(_) => () }
-    }
-  }
+  private def drain(set: java.util.Set[DataFrame]): Unit =
+    set.forEach(df => if (set.remove(df)) unpersistLeaves(df))
+
+  /** The one release loop: unpersist the RDD behind each LogicalRDD leaf. */
+  private def unpersistLeaves(df: DataFrame): Unit =
+    try df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    } catch { case NonFatal(t) => logWarning("materialize: release failed", t) }
 
   /** Unpersist every PER-QUERY tracked frame (Bench's between-pass
     * hygiene — N passes must not stack N copies of every transient).

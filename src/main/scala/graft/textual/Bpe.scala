@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Materialize
 
 /** Byte-Pair-Encoding tokenizer TRAINING as a distributed operator —
   * the subword-vocabulary step every LM data pipeline runs before
@@ -38,18 +39,6 @@ object Bpe {
 
   final case class Merge(step: Int, lhs: String, rhs: String, pairCount: Long)
 
-  /** Unpersist the RDD a localCheckpointed frame pins to executor block
-    * managers (same discipline as Clusters: without it every merge
-    * round leaks one vocab copy for the life of the session). Also the
-    * seam callers use to release the returned final-word table.
-    */
-  private[graft] def unpersistCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Word-frequency table over whitespace tokens (TextFunctions.tokens
     * semantics — the suite's shared tokenizer). Words carrying the
     * delimiter control chars are excluded on BOTH engines (none exist
@@ -67,8 +56,10 @@ object Bpe {
     * final encoded-word table (word, freq, enc) — the word→subword
     * mapping, which is ALSO the tokenizer: applying BPE to a corpus is
     * a join against it ([[tokenizeStats]]). The per-iteration
-    * localCheckpoint keeps the 2·nMerges actions from re-deriving an
-    * ever-growing lineage; the frame is vocab-sized.
+    * [[Materialize]] cut keeps the 2·nMerges actions from re-deriving an
+    * ever-growing lineage; the frame is vocab-sized. Each round's copy
+    * is released as the next lands; the caller releases the returned
+    * table with `Materialize.releaseOne`.
     */
   def trainMerges(spark: SparkSession, docs: DataFrame, textCol: String,
       nMerges: Int): (Seq[Merge], DataFrame) = {
@@ -76,7 +67,7 @@ object Bpe {
     var words = wordFrequencies(docs, textCol)
       .withColumn("enc",
         regexp_replace(col("word"), "(.)", SymStart + "$1" + SymEnd))
-      .localCheckpoint(eager = true)
+      .transform(Materialize.materializeOnly(_))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var step = 1
     var exhausted = false
@@ -101,8 +92,8 @@ object Bpe {
           org.apache.spark.sql.functions.replace(col("enc"),
             lit(SymStart + a + SymStart + b),
             lit(SymStart + a.stripSuffix(SymEnd) + b)))
-          .localCheckpoint(eager = true)
-        unpersistCheckpoint(prev) // each round's copy dies as the next lands
+          .transform(Materialize.materializeOnly(_))
+        Materialize.releaseOne(prev) // each round's copy dies as the next lands
         step += 1
       }
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Materialize
 
 /** Unigram-LM subword tokenizer TRAINING (Kudo, ACL'18 — the
   * SentencePiece algorithm; the OTHER real tokenizer family next to
@@ -128,7 +129,7 @@ object UnigramLm {
   def train(spark: SparkSession, docs: DataFrame, textCol: String,
       vocabSize: Int, seedMaxLen: Int = 6, seedSize: Int = 512,
       emIters: Int = 2): Vocab = {
-    val words = wordFrequencies(docs, textCol).localCheckpoint(true)
+    val words = Materialize.materializeOnly(wordFrequencies(docs, textCol))
     try {
       var vocab = seedVocab(spark, words, seedMaxLen, seedSize)
       for (it <- 1 to emIters) {
@@ -147,7 +148,7 @@ object UnigramLm {
         }.toMap)
       }
       vocab
-    } finally Bpe.unpersistCheckpoint(words)
+    } finally Materialize.releaseOne(words)
   }
 
   /** Viterbi segmentation of one word — pure BIGINT path scores; on a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.dedup.Dedup
+import graft.operators.Materialize
 import graft.search.{IvfIndex, KnnExact, RpLsh}
 
 /** Reproduce the reference's qualitative curves (BASELINE.md):
@@ -274,7 +275,7 @@ object Curves {
         val tokMs = onceMs {
           graft.textual.Bpe.tokenizeStats(c, "text", "doc_id", words).count()
         }
-        graft.textual.Bpe.unpersistCheckpoint(words)
+        Materialize.releaseOne(words)
         // trainMs includes the count pass it starts from; report the
         // rounds-only residual so the flat part is visible
         println(f"| $label%s | $nd%d | $vocab%d | $countMs%.0f | ${math.max(trainMs - countMs, 0)}%.0f | $tokMs%.0f |")
@@ -287,7 +288,7 @@ object Curves {
       // 8. The scale claim to verify: per-merge cost stays FLAT as the
       // merge count grows — each round is one vocab-sized pair-count
       // shuffle + a 1-row TakeOrdered argmax, independent of how many
-      // rounds preceded it (the localCheckpoint per round prevents
+      // rounds preceded it (the Materialize cut per round prevents
       // lineage growth from re-deriving earlier rounds).
       val base = graft.model.Tables.documents(spark, sfDir).select($"doc_id", $"text")
       // the raw fixture's pair vocabulary exhausts in the low hundreds
@@ -310,7 +311,7 @@ object Curves {
           val t0 = System.nanoTime()
           val (ms, words) = graft.textual.Bpe.trainMerges(spark, docs, "text", m)
           val wall = (System.nanoTime() - t0) / 1e9
-          graft.textual.Bpe.unpersistCheckpoint(words)
+          Materialize.releaseOne(words)
           val marginal = prev.map { case (pm, pw) => (wall - pw) / (ms.length - pm) }
           println(f"| $m | ${ms.length} | $wall%.1f | ${wall / math.max(ms.length, 1)}%.3f " +
             s"| ${marginal.map(x => f"$x%.3f").getOrElse("-")} |")
@@ -379,10 +380,8 @@ object Curves {
 
       // compaction fan-out: stored-index search latency at 8 vs 2
       // segments (same k, same exhaustive-enough ef)
-      val idx8 = graft.search.Hnsw.buildIndex(spark, base, numGraphs = 8)
-        .localCheckpoint(true)
-      val idx2 = graft.search.Hnsw.compactIndex(spark, idx8, toGraphs = 2)
-        .localCheckpoint(true)
+      val idx8 = Materialize.materializeOnly(graft.search.Hnsw.buildIndex(spark, base, numGraphs = 8))
+      val idx2 = Materialize.materializeOnly(graft.search.Hnsw.compactIndex(spark, idx8, toGraphs = 2))
       def searchMs(idx: org.apache.spark.sql.DataFrame, n: Int) = timeMs {
         graft.search.Hnsw.searchIndex(spark, queries1, idx, k = 10, numGraphs = n)
           .write.format("noop").mode("overwrite").save()
@@ -433,7 +432,7 @@ object Curves {
         .select($"doc_id".as("vec_id"),
           org.apache.spark.sql.functions.transform($"emb",
             x => (x / nrm).cast("float")).as("embedding"))
-        .localCheckpoint(true)
+        .transform(Materialize.materializeOnly(_))
       val nDocs = demb.count()
       val qs = demb.filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qemb"))

@@ -30,6 +30,23 @@ class CacheLifecycleSpec extends GraftSpec {
     SparkEntry.clearCaches()
   }
 
+  test("the shared n-gram postings outlive releaseTransients and die with clearCaches") {
+    SparkEntry.clearCaches()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir).count()
+    // the checkpointed posting frame, not the persisted pair list
+    val postings = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !before.contains(id) && rdd.isCheckpointed }.keySet
+    assert(postings.nonEmpty, "the shared postings should be checkpointed while in use")
+    graft.operators.Materialize.releaseTransients()
+    assert(postings.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
+      "the pair cache recomputes from the postings, so they must survive transient release")
+    assert(SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir).count() > 0)
+    SparkEntry.clearCaches()
+    val left = spark.sparkContext.getPersistentRDDs.keySet intersect postings
+    assert(left.isEmpty, s"clearCaches must release the shared postings, left: $left")
+  }
+
   test("clearCaches releases the search, chunk, winnow and planner builds") {
     // the six shared planner builds each write one temp dir
     val plannerDirs = Set("graft_annidx", "graft_annidx_cos", "graft_annidx_ip",

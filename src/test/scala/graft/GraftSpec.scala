@@ -17,9 +17,13 @@ object GraftSpec {
   private val tempDirs = new ConcurrentLinkedQueue[java.io.File]()
 
   // Tests run in a forked JVM, so the hook runs when the suites are done.
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
+  // It releases the shared builds first (each planner slot deletes its
+  // temp dir), at a priority above the SparkContext's own shutdown hook
+  // (40), so the releases run while the session is still up.
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+    SparkEntry.clearCaches()
     tempDirs.forEach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d))
-  }))
+  }, 50)
 
   /** A fresh temp dir, deleted with everything in it when the test JVM
     * exits.

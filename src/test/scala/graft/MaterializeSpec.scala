@@ -55,6 +55,17 @@ class MaterializeSpec extends GraftSpec {
     Materialize.releaseOne(b)
   }
 
+  test("Dedup.minHash's shingle checkpoint is a transient") {
+    Materialize.releaseTransients()
+    val before = persistedIds
+    graft.dedup.Dedup.minHash(graft.model.Tables.documents(spark, sfDir), 3, 0.6).count()
+    val mine = persistedIds -- before
+    assert(mine.nonEmpty, "minHash must checkpoint its shingle sets")
+    Materialize.releaseTransients()
+    assert((persistedIds intersect mine).isEmpty,
+      s"releaseTransients must unpersist minHash's checkpoint, left: ${persistedIds intersect mine}")
+  }
+
   test("reliable strategy checkpoints to the configured dir and survives release") {
     val dir = GraftSpec.tempDir("graft_mat_spec").toString
     spark.conf.set("spark.graft.materialize", "reliable")
