@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   *   line of defense against data skew; graft.operators.Salting is the
   *   second, for aggregation skew AQE can't touch);
   * - 128 MiB file split targets so scan partitions fit executor memory
-  *   at high compression ratios.
+  *   at high compression ratios;
+  * - ANSI mode pinned on (Spark 4's default), so the fixed-point long
+  *   accumulators of the money queries raise on overflow instead of
+  *   wrapping to a wrong sum.
   */
 object GraftSession {
   def builder(appName: String, cores: Int): SparkSession.Builder =
@@ -28,5 +31,6 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "true")
       .config("spark.ui.enabled", "false")
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, FloatType, MetadataBuilder}
+import org.apache.spark.sql.types.{ArrayType, FloatType, Metadata, MetadataBuilder}
 
 import graft.functions.{FloatVecDot, FloatVecL2Sq}
 
@@ -312,6 +312,17 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     */
   private val BatchMinScanBytes = BigInt(64L << 20)
 
+  /** Whether the batch rewrite's gate lets a window top-k over `leaf`
+    * through: the query embedding (metadata `qemb`) carries the
+    * [[batchOptIn]] mark, or `leaf` is a file scan of at least
+    * [[BatchMinScanBytes]]. `KnnExact.topKBy` ranks on the driver only
+    * when the gate is shut for every leaf of its plan, so every window the
+    * rewrite could fire on keeps its shape.
+    */
+  private[graft] def batchGateOpen(qemb: Metadata, leaf: LogicalPlan): Boolean =
+    qemb.contains(BatchProbeKey) ||
+      (SourceSnapshots.pathOf(leaf).isDefined && leaf.stats.sizeInBytes >= BatchMinScanBytes)
+
   /** Column-metadata key of the [[batchOptIn]] mark. */
   private val BatchProbeKey = "graft.ann.batchProbe"
 
@@ -520,7 +531,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * job, answered with the hits themselves.
     */
   private def probe(spec: IndexSpec, queries: Array[(Long, Array[Float])],
-      k: Int): Array[graft.search.Hnsw.Hit] =
+      k: Int): Array[graft.search.TopK.Hit] =
     graft.search.Hnsw.searchRouted(queries, spec.index, spec.centroidRows, k,
       spec.nprobe, m = 16, efConstruction = 100, efSearch = spec.efSearch,
       idCol = spec.idCol, embCol = spec.embCol)
@@ -876,8 +887,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   embAttr <- Seq(x, y).find(a =>
                     scanSide.outputSet.contains(a) && a.name == spec.embCol).toSeq
                   qembAttr = if (embAttr eq x) y else x
-                  if qembAttr.metadata.contains(BatchProbeKey) ||
-                    leaf.stats.sizeInBytes >= BatchMinScanBytes
+                  if batchGateOpen(qembAttr.metadata, leaf)
                   if querySide.outputSet.contains(qembAttr) &&
                     querySide.outputSet.contains(qid)
                   // the rule EXECUTES the query side several times at plan

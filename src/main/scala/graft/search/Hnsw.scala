@@ -9,13 +9,14 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import TopK.{Hit, frameOf, topKOnDriver}
 
 /** HNSW graph ANN (Malkov & Yashunin, TPAMI'18) — the index family the
   * reference actually queries (chromadb builds HNSW implicitly at
@@ -32,7 +33,7 @@ import org.apache.spark.storage.StorageLevel
   * of vectors beyond the one partitioning exchange), every segment
   * answers each broadcast query from its local graph, and the global
   * answer is a per-query top-k over the `numGraphs · k` candidate rows,
-  * merged on the driver in the same job ([[topKOnDriver]] — no shuffle;
+  * merged on the driver in the same job ([[TopK.topKOnDriver]] — no shuffle;
   * the driver holds O(k · |Q|) rows, never O(N)). At 100 TB: segments
   * are the parallelism unit, graph build cost is linear-ish per segment
   * (each insert touches ~efConstruction nodes), query fan-out is one
@@ -312,62 +313,6 @@ object Hnsw {
       }
       .rdd
     frameOf(spark, topKOnDriver(candidates, k), qidCol, idCol)
-  }
-
-  /** One row of a search answer: query, vector id, 1-based rank, L2². */
-  private[graft] final case class Hit(qid: Long, id: Long, rk: Int, dist: Double)
-
-  /** The (dist, id) order every answer is ranked by. It equals Spark
-    * SQL's ascending order (NaN last) because an L2² sum is never -0.0,
-    * the one value on which the two orders differ.
-    */
-  private val byDistThenVecId: Ordering[(Double, Long)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-
-  /** The global top-k every search here ends with, shaped like
-    * `RDD.takeOrdered` but per query: each task keeps at most k of its
-    * (qid, id, dist) candidates per qid in a bounded heap, and one `fold`
-    * merges the tasks' lists on the driver as they finish. One job, no
-    * shuffle; the driver holds O(|Q| · k) rows plus one task's result,
-    * never all candidates. An RDD with no partitions (every cell pruned)
-    * folds to no rows. Hits come ordered by (qid, rk).
-    */
-  private def topKOnDriver(candidates: RDD[(Long, Long, Double)], k: Int): Array[Hit] = {
-    if (k <= 0) return Array.empty
-    type Ranked = Map[Long, Array[(Double, Long)]]
-    val perTask = candidates.mapPartitions { it =>
-      val heaps = mutable.HashMap.empty[Long, mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { case (qid, id, d) =>
-        // max-heap: the head is the worst candidate kept so far
-        val h = heaps.getOrElseUpdate(qid, mutable.PriorityQueue.empty(byDistThenVecId))
-        if (h.size < k) h.enqueue((d, id))
-        else if (byDistThenVecId.lt((d, id), h.head)) { h.dequeue(); h.enqueue((d, id)) }
-      }
-      Iterator.single[Ranked](
-        heaps.iterator.map { case (qid, h) => qid -> h.toArray.sorted(byDistThenVecId) }.toMap)
-    }
-    val merged = perTask.fold(Map.empty) { (a, b) =>
-      b.foldLeft(a) { case (acc, (qid, xs)) =>
-        acc.updated(qid, acc.get(qid).fold(xs)(ys => (ys ++ xs).sorted(byDistThenVecId).take(k)))
-      }
-    }
-    merged.toArray.sortBy(_._1).flatMap { case (qid, ranked) =>
-      ranked.zipWithIndex.map { case ((d, id), i) => Hit(qid, id, i + 1, d) }
-    }
-  }
-
-  /** Hits as the search frame every caller gets: (qid, id, rk, dist), all
-    * non-null — the schema of a row_number top-k over the candidates.
-    */
-  private def frameOf(spark: SparkSession, hits: Array[Hit], qidCol: String,
-      idCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(qidCol, LongType, nullable = false),
-      StructField(idCol, LongType, nullable = false),
-      StructField("rk", IntegerType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(hits.map(h => Row(h.qid, h.id, h.rk, h.dist)): _*), schema)
   }
 
   /** The query vectors, on the driver. Queries are point-lookup-bounded
@@ -692,7 +637,7 @@ object Hnsw {
       qidCol, idCol)
 
   /** Answer `queries` from rehydrated graphs: one narrow task per
-    * partition walks that partition's graphs, then [[topKOnDriver]]. With
+    * partition walks that partition's graphs, then [[TopK.topKOnDriver]]. With
     * `routes` (cell → qids) a graph answers only the queries routed to
     * it and partitions holding no routed cell are pruned away; without
     * it every graph answers every query. Each walk over-fetches by the

@@ -1,32 +1,59 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Inline, Literal}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanOps
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorFunctions._
+import graft.plans.AnnIndexRewrite
 
 /** Exact k-nearest-neighbor search — the reference's brute-force oracle
   * (`brute_force_search`, chromadb_acc_experiment.py:508-537): L2 distance
   * from the query to every collection row, take top-k.
   *
-  * Spark-first shape (SURVEY.md §2.3 J1): the tiny query side is
-  * broadcast and cross-joined against the collection (Catalyst plans a
-  * BroadcastNestedLoopJoin — no shuffle of the big side), distance is a
-  * codegen'd column expression, and top-k per query is a ranking window.
-  * Spark ≥3.5 pushes the `row_number <= k` filter into the window exchange
-  * (WindowGroupLimit), so only ~k rows per input partition are shuffled —
-  * this is what keeps the operator viable on a 1000-executor cluster:
-  * shuffle volume is O(k · partitions), not O(N).
+  * Spark-first shape (SURVEY.md §2.3 J1): every (query, row) pair is
+  * scored by a codegen'd column expression in one pass over the
+  * collection — the big side is never shuffled — and the per-query top-k
+  * takes one of two plans:
+  *
+  *  - **Driver path** (the usual case): the query side, at most
+  *    [[MaxDriverQueries]] rows, is collected and joined to the collection
+  *    as an exploded literal, and [[TopK.topKOnDriver]] keeps a bounded
+  *    heap per query in each task and merges the heaps on the driver. One
+  *    job, no broadcast, no shuffle; the answer is a local frame, computed
+  *    when this is called.
+  *  - **Window path**: the query side is broadcast and cross-joined
+  *    (BroadcastNestedLoopJoin), and top-k per query is a `row_number`
+  *    window. Spark ≥3.5 pushes the `row_number <= k` filter into the
+  *    window exchange (WindowGroupLimit), so only ~k rows per input
+  *    partition are shuffled: O(k · partitions), not O(N). This is the
+  *    plan `AnnIndexRewrite`'s batch rewrite matches, so it is kept
+  *    whenever that rewrite's gate is open ([[AnnIndexRewrite.batchGateOpen]]),
+  *    for a query side over the row bound, and for streaming frames.
+  *
+  * Both plans score with the same expressions and rank by Spark SQL's
+  * ascending (score, id) order, so they answer with the same rows, schema
+  * and score bits.
   *
   * For a single query vector, `ORDER BY dist LIMIT k` plans as
   * TakeOrderedAndProject (per-partition heap + driver merge, no shuffle).
   */
 object KnnExact {
 
+  /** Most query rows the driver path collects and ranks; a larger query
+    * side keeps the window plan.
+    */
+  private[graft] val MaxDriverQueries = 1024
+
   /** Batch form: one row per (query, neighbor), `rk` 1..k per query.
     *
-    * @param queries    small DataFrame of (qidCol, qEmbCol) — broadcast.
+    * @param queries    small DataFrame of (qidCol, qEmbCol).
     * @param collection large DataFrame of (idCol, embCol).
     * @param scoreAsc   ascending scoring column builder, e.g. L2 distance
     *                   (ascending = nearer first).
@@ -42,19 +69,47 @@ object KnnExact {
       embCol: String = "embedding",
       scoreName: String = "dist",
       pairFilter: Column = lit(true)): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(collection.sparkSession)
-    val scored = broadcast(queries)
-      .crossJoin(collection)
-      .filter(pairFilter)
-      .withColumn(scoreName, scoreAsc(col(qEmbCol), col(embCol)))
-    // Deterministic tie-break on id: numpy argsort in the reference is
-    // stable; Spark sort is not — (score, id) ordering keeps both engines
-    // and the DuckDB oracle in agreement (SURVEY.md §7.4).
-    val w = Window.partitionBy(col(qidCol)).orderBy(col(scoreName).asc, col(idCol).asc)
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col(qidCol), col(idCol), col("rk"), col(scoreName))
+    val spark = collection.sparkSession
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    def scored(pairs: DataFrame): DataFrame =
+      pairs.filter(pairFilter).withColumn(scoreName, scoreAsc(col(qEmbCol), col(embCol)))
+    driverQueries(queries, collection, qEmbCol) match {
+      case Some(qrows) =>
+        // the query rows as a literal whose fields keep their column names,
+        // so `pairFilter` and `scoreAsc` resolve as over the cross join
+        val qs = Literal(new GenericArrayData(qrows.toArray[Any]),
+          ArrayType(queries.schema, containsNull = false))
+        val ranked = scored(collection.select(PlanOps.column(Inline(qs)), col("*")))
+          .select(col(qidCol), col(idCol), col(scoreName))
+        val s = ranked.schema
+        TopK.frameOf(spark,
+          StructType(Seq(s(0), s(1), StructField("rk", IntegerType, nullable = false), s(2))),
+          TopK.topKOnDriver(ranked.queryExecution.toRdd, s, k))
+      case None =>
+        // Deterministic tie-break on id: numpy argsort in the reference is
+        // stable; Spark sort is not — (score, id) ordering keeps both engines
+        // and the DuckDB oracle in agreement (SURVEY.md §7.4).
+        val w = Window.partitionBy(col(qidCol)).orderBy(col(scoreName).asc, col(idCol).asc)
+        scored(broadcast(queries).crossJoin(collection))
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= k)
+          .select(col(qidCol), col(idCol), col("rk"), col(scoreName))
+    }
+  }
+
+  /** The query rows, when the driver path may rank them: the batch
+    * rewrite's gate is shut for every leaf of both sides, neither side
+    * streams, and the query side has at most [[MaxDriverQueries]] rows
+    * (a local query side collects without a job).
+    */
+  private def driverQueries(queries: DataFrame, collection: DataFrame,
+      qEmbCol: String): Option[Array[InternalRow]] = {
+    val qemb = queries.schema.find(f => SQLConf.get.resolver(f.name, qEmbCol))
+    val leaves = Seq(queries, collection).flatMap(_.queryExecution.analyzed.collectLeaves())
+    if (queries.isStreaming || collection.isStreaming ||
+        qemb.forall(f => leaves.exists(AnnIndexRewrite.batchGateOpen(f.metadata, _)))) None
+    else Some(queries.limit(MaxDriverQueries + 1).queryExecution.executedPlan.executeCollect())
+      .filter(_.length <= MaxDriverQueries)
   }
 
   /** L2 top-k (the reference's metric). */
@@ -98,7 +153,7 @@ object KnnExact {
   /** Cosine top-k restricted by a per-pair predicate over (query cols ×
     * collection cols) — e.g. hard-negative mining, where the candidate
     * must NOT share the query's class. The predicate runs between the
-    * broadcast expansion and the ranking window, so excluded pairs never
+    * (query, row) expansion and the ranking, so excluded pairs never
     * reach the top-k heaps.
     */
   def topKCosineWhere(

@@ -44,8 +44,22 @@ class PlanSpec extends GraftSpec {
       s"both RRF scorer rankings must be group-limited, saw $hits WindowGroupLimit nodes")
   }
 
-  test("knn_exact_multi: query side broadcast, window group limit partial") {
+  test("knn_exact_multi: ranked on the driver, no broadcast, window or hash exchange") {
+    // an unmarked 5-query kNN under the batch rewrite's scan-size gate is
+    // ranked when it is built: the answer is a local frame
     val p = plan("knn_exact_multi")
+    assert(p.contains("LocalTableScan"), "the answer must be the driver-ranked rows")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("Window") &&
+      !p.contains("Exchange hashpartitioning"), "no broadcast, window or shuffle remains")
+  }
+
+  test("knn_exact_multi opted in: query side broadcast, window group limit partial") {
+    // the batch-rewrite opt-in keeps the window plan the rewrite matches
+    spark.catalog.clearCache()
+    val emb = model.Tables.embeddings(spark, sfDir)
+    val q = plans.AnnIndexRewrite.batchOptIn(emb.filter(emb("vec_id") < 5)
+      .select(emb("vec_id").as("qid"), emb("embedding").as("qemb")))
+    val p = search.KnnExact.topK(q, emb, 10).queryExecution.executedPlan.toString
     assert(p.contains("BroadcastNestedLoopJoin"), "query side must broadcast")
     assert(p.contains("WindowGroupLimit"), "per-partition top-k pre-shuffle limit")
     assert(p.contains("PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,"),

@@ -532,6 +532,23 @@ class PropertySpec extends GraftSpec {
     assert(bad === 0L, "fixed-point revenue micros must match the decimal product")
   }
 
+  test("property: a fixed-point long sum raises on overflow under ANSI, never wraps") {
+    // GraftSession pins spark.sql.ansi.enabled; the test session runs on
+    // Spark 4's default, which is the same
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    // revenue micros built like SparkEntry's fpCents × (10⁴ − fpBp) at the
+    // largest decimal(14,2) price: ~9.5e17 per row, so 10 rows pass 2⁶³
+    val price = lit(BigDecimal("999999999999.99")).cast("decimal(14,2)")
+    val disc = lit(BigDecimal("0.05")).cast("decimal(6,4)")
+    val micros = (price * lit(100)).cast("long") *
+      (lit(10000L) - (disc * lit(10000)).cast("long"))
+    val rows = spark.range(0, 100, 1, 2).select(micros.as("m"))
+    assert(rows.agg(max(col("m"))).head().getLong(0) === 949999999999990500L,
+      "one row's micros fit a long")
+    val e = intercept[ArithmeticException](rows.agg(sum(col("m"))).collect())
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
+  }
+
   test("property: q1's fixed-point reconstructs equal the decimal-sum doubles bit-for-bit") {
     // the r22 revenue-family sweep: every graded q1 column from LONG
     // sums must be BIT identical to the decimal-sum form per group —
