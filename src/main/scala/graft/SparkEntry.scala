@@ -931,8 +931,8 @@ object SparkEntry {
   /** The literal-query cosine-distance column the cosine planner rows
     * share: `1 − dot(qv, embedding) / (‖embedding‖ · ‖qv‖)` with the
     * query vector pinned to vec_id 0 and its norm precomputed
-    * driver-side (a foldable positive factor — exactly the shape
-    * `AnnIndexRewrite.matchCosine` destructures).
+    * driver-side (a foldable positive factor — the literal operand's
+    * norm in the cosine shape `AnnIndexRewrite.distanceKey` destructures).
     */
   private def plannerCosineDist(emb: DataFrame): org.apache.spark.sql.Column = {
     val qv = emb.filter(col("vec_id") === 0)

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -38,8 +39,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Release: a plain `DataFrame.unpersist` is a CacheManager no-op for
   * checkpointed frames — the persisted object is the RDD behind the
-  * LogicalRDD leaf, so that is what gets unpersisted. A failed release
-  * (e.g. the session already stopped) is logged at WARN and skipped.
+  * LogicalRDD leaf, so that is what gets unpersisted; a reliable
+  * checkpoint's `rdd-*` dir is deleted with it (Spark's own cleaner
+  * leaves checkpoint files unless `spark.cleaner.referenceTracking.
+  * cleanCheckpoints` is on). A failed release (e.g. the session already
+  * stopped) is logged at WARN and skipped.
   */
 object Materialize extends Logging {
 
@@ -100,8 +104,8 @@ object Materialize extends Logging {
 
   /** Unpersist ONE materialized frame now (localCheckpoint blocks are
     * executor memory — free them the moment the last consumer is done
-    * rather than at suite teardown). Safe on reliable-checkpoint and
-    * never-checkpointed frames (no LogicalRDD leaf → no-op).
+    * rather than at suite teardown; a reliable checkpoint's files go with
+    * them). Safe on never-checkpointed frames (no LogicalRDD leaf → no-op).
     */
   def releaseOne(df: DataFrame): Unit = {
     tracked.remove(df)
@@ -111,10 +115,17 @@ object Materialize extends Logging {
   private def drain(set: java.util.Set[DataFrame]): Unit =
     set.forEach(df => if (set.remove(df)) unpersistLeaves(df))
 
-  /** The one release loop: unpersist the RDD behind each LogicalRDD leaf. */
+  /** The one release loop: unpersist the RDD behind each LogicalRDD leaf
+    * and delete its reliable checkpoint dir, if it has one.
+    */
   private def unpersistLeaves(df: DataFrame): Unit =
     try df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val dir = new Path(f)
+          dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(dir, true)
+        }
       case _ => ()
     } catch { case NonFatal(t) => logWarning("materialize: release failed", t) }
 

@@ -4,9 +4,11 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.PlanOps
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, FloatType, Metadata, MetadataBuilder}
 
@@ -63,7 +65,11 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   * AUGMENTED vectors [x, sqrt(M²−‖x‖²)] and probed with [q, 0]
   * (Shrivastava & Li '14: augmented L2 is monotone in −q·x for any q),
   * then re-ranks by the true dot expression. One source path may carry
-  * one index per metric.
+  * one index per metric. A query vector with no ranking under its
+  * metric — zero-norm or NaN under cosine, a NaN component under ip —
+  * keeps the exact plan; for a zero-norm cosine query that plan raises
+  * DIVIDE_BY_ZERO under the ANSI mode `GraftSession` pins, rather than
+  * ranking it NaN.
   *
   * FILTERED variant (metadata-filtered vector search — the most common
   * real-world query shape; the reference's collection metadata,
@@ -102,19 +108,29 @@ import graft.functions.{FloatVecDot, FloatVecL2Sq}
   * the accelerated plan reuses conceptually — both are O(candidates),
   * replacing an O(n) scan.
   *
+  * ONE PIPELINE: the 3 metrics × single query or batch × filtered or
+  * not are twelve shapes, and every one passes the same five steps —
+  * match the sort key ([[distanceKey]]); take the query vectors, from
+  * the literal or from the batch query side collected once
+  * ([[queryVectors]]); prepare each probe vector ([[probeVector]]);
+  * probe and count survivors ([[candidates]]); splice the candidate-id
+  * predicate. The shapes differ only in what a sort-key operand may be
+  * and where the scan side sits.
+  *
   * PLAN-TIME PURITY: every rewrite runs real (bounded) Spark jobs
   * inside the optimizer. Every `Dataset` re-plans, and `.explain()`
   * re-plans again — so probe results AND declined decisions are
-  * memoized per (index, query vector / query-side plan, canonicalized
-  * filter, k). A repeat plan of the same shape splices the cached
+  * memoized per (index, query vector / query-side plan, filter text,
+  * k). A repeat plan of the same shape splices the cached
   * candidate ids (or declines from cache) without touching the
   * cluster; the caches clear whenever the registry changes.
   *
   * Every shape guards idempotence structurally: a candidate-id IN/INSET
   * conjunct on the id column marks an already-rewritten Filter. The
-  * unfiltered match needs the Project DIRECTLY on the scan, so its own
-  * output (Project → Filter(id IN …) → Scan) can only re-enter as the
-  * filtered shape, which the marker declines. A user's own literal
+  * unfiltered match needs no Filter between the Project and the scan
+  * (column-pruning Projects aside), so its own output (Project →
+  * Filter(id IN …) → Scan) can only re-enter as the filtered shape,
+  * which the marker declines. A user's own literal
   * id-IN predicate also matches the marker — such queries keep the
   * exact plan, never a double probe. A probe with no candidates splices
   * nothing: the exact plan answers.
@@ -391,6 +407,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       }
     }
 
+  // ---- 1. the sort key ---------------------------------------------------
+
   private def stripCasts(e: Expression): Expression = e match {
     case c: Cast => stripCasts(c.child)
     case other => other
@@ -401,33 +419,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** literal-vs-column squared L2, under any monotone wrapper (casts,
-    * sqrt) — a monotone transform preserves the ascending ranking the
-    * probe answers.
-    */
-  private def matchL2(e0: Expression): Option[(Array[Float], AttributeReference)] = {
-    val e = stripCasts(e0) match {
-      case Sqrt(inner) => stripCasts(inner)
-      case other => other
-    }
-    e match {
-      case FloatVecL2Sq(l, a: AttributeReference) => litVec(l).map((_, a))
-      case FloatVecL2Sq(a: AttributeReference, l) => litVec(l).map((_, a))
-      case _ => None
-    }
-  }
-
-  /** literal-vs-column COSINE distance: `c − sim` (any foldable c — a
-    * constant shift keeps the ordering) or `−sim`, where
-    * `sim = dot(q, e) / (qn · sqrt(dot(e, e)))` and qn is any positive
-    * foldable factor (the query-side norm `sqrt(dot(q, q))` is foldable
-    * and may or may not already be constant-folded when the rule runs —
-    * both shapes must match, since this rule shares a fixed-point batch
-    * with ConstantFolding).
-    */
   /** The attribute whose self-norm `sqrt(dot(a, a))` the expression is
-    * (under any cast wrapper) — the one destructuring matchCosine and
-    * cosinePair both need to recognize a cosine denominator factor.
+    * (under any cast wrapper) — a cosine denominator factor.
     */
   private def selfNormAttr(e: Expression): Option[AttributeReference] =
     stripCasts(e) match {
@@ -439,91 +432,218 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def matchCosine(e0: Expression): Option[(Array[Float], AttributeReference)] = {
-    def constPos(e: Expression): Boolean = e.foldable && {
-      e.eval(null) match {
-        case n: java.lang.Number => n.doubleValue() > 0.0
-        case _ => false
-      }
-    }
-    def sim(e: Expression): Option[(Array[Float], AttributeReference)] =
-      stripCasts(e) match {
-        case Divide(num, den, _) =>
-          val numPair = stripCasts(num) match {
-            case FloatVecDot(l, a: AttributeReference) => litVec(l).map((_, a))
-            case FloatVecDot(a: AttributeReference, l) => litVec(l).map((_, a))
-            case _ => None
-          }
-          numPair.filter { case (_, attr) =>
-            stripCasts(den) match {
-              case Multiply(x, y, _) =>
-                (selfNormAttr(x).exists(_.exprId == attr.exprId) && constPos(y)) ||
-                  (selfNormAttr(y).exists(_.exprId == attr.exprId) && constPos(x))
-              case _ => false
-            }
-          }
-        case _ => None
-      }
-    stripCasts(e0) match {
-      case Subtract(c, s, _) if c.foldable => sim(s)
-      case UnaryMinus(s, _) => sim(s)
-      case _ => None
-    }
-  }
-
-  /** literal-vs-column INNER-PRODUCT sort key: `−dot(q, e)` or
-    * `c − dot(q, e)` (foldable c) — ascending negated dot is descending
-    * inner product, the MIPS shape. The metric = "ip" index must be
-    * built over AUGMENTED vectors [x, sqrt(M² − ‖x‖²)] (M = max corpus
-    * norm; Shrivastava & Li, NeurIPS'14): probing it with [q, 0] makes
-    * augmented L2 distance ‖q‖² + M² − 2·q·x — monotone in −q·x for ANY
-    * q — so the exhaustive probe's candidates are the true top-K′ by
-    * inner product and the original Sort re-ranks them by the true dot
-    * expression.
+  /** A sort key resolved to the expression it names through the
+    * Project's aliases.
     */
-  private def matchIp(e0: Expression): Option[(Array[Float], AttributeReference)] = {
-    def ip(e: Expression): Option[(Array[Float], AttributeReference)] =
-      stripCasts(e) match {
-        case FloatVecDot(l, a: AttributeReference) => litVec(l).map((_, a))
-        case FloatVecDot(a: AttributeReference, l) => litVec(l).map((_, a))
-        case _ => None
-      }
-    stripCasts(e0) match {
-      case Subtract(c, s, _) if c.foldable => ip(s)
-      case UnaryMinus(s, _) => ip(s)
-      case _ => None
-    }
-  }
-
-  /** Resolve the first sort key to the expression it names (through the
-    * Project's aliases), then destructure the literal-vs-column
-    * distance pattern. Returns the PROBE vector (L2-normalized for the
-    * cosine metric — the cosine index stores normalized vectors;
-    * zero-augmented for the ip metric — the ip index stores augmented
-    * vectors, see [[matchIp]]), the embedding attribute, and the
-    * metric.
-    */
-  private def queryVectorOf(
-      key: Expression,
-      projList: Seq[NamedExpression]): Option[(Array[Float], AttributeReference, String)] = {
-    val resolved = key match {
+  private def aliased(key: Expression, projList: Seq[NamedExpression]): Option[Expression] =
+    key match {
       case a: AttributeReference =>
         projList.collectFirst { case al: Alias if al.exprId == a.exprId => al.child }
       case e => Some(e)
     }
-    resolved.flatMap { e =>
-      matchL2(e).map { case (qv, a) => (qv, a, "l2") }
-        .orElse(matchCosine(e).flatMap { case (qv, a) =>
-          val n = math.sqrt(qv.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
-          if (n == 0.0 || n.isNaN) None // zero/NaN query vector: cosine undefined, keep exact
-          else Some((qv.map(x => (x / n).toFloat), a, "cosine"))
-        })
-        .orElse(matchIp(e).flatMap { case (qv, a) =>
-          if (qv.exists(_.isNaN)) None // NaN dot has no defined ranking, keep exact
-          else Some((qv :+ 0.0f, a, "ip")) // probe vector is [q, 0] over the augmented index
-        })
+
+  /** The metric and the two vector operands `(metric, a, b)` of an
+    * ascending distance sort key — the one destructuring every shape
+    * shares:
+    *
+    *  - "l2": `l2sq(a, b)` under any monotone wrapper (casts, sqrt) — a
+    *    monotone transform preserves the ascending ranking the probe
+    *    answers;
+    *  - "ip": `−dot(a, b)` or `c − dot(a, b)` (any foldable c — a
+    *    constant shift keeps the ordering): ascending negated dot is
+    *    descending inner product, the MIPS shape (`KnnExact.topKDot`'s
+    *    negip);
+    *  - "cosine": the same two forms over
+    *    `sim = dot(a, b) / (na · nb)` (`KnnExact.topKCosine`'s negsim):
+    *    ascending negated similarity is descending similarity.
+    *
+    * A cosine norm factor counts for an ATTRIBUTE operand when it is
+    * that attribute's self-norm; for any other operand (the
+    * single-query shape's literal) it may be any positive foldable — the
+    * query-side norm `sqrt(dot(q, q))` is foldable and may or may not
+    * already be constant-folded when the rule runs, since the rule
+    * shares a fixed-point batch with ConstantFolding. What an operand
+    * may BE is the shape's business: one literal vector and one
+    * attribute for a single query, two distinct attributes for a batch.
+    */
+  private def distanceKey(e: Expression): Option[(String, Expression, Expression)] = {
+    def constPos(f: Expression): Boolean = f.foldable && (f.eval(null) match {
+      case n: java.lang.Number => n.doubleValue() > 0.0
+      case _ => false
+    })
+    def isNorm(f: Expression, operand: Expression): Boolean = operand match {
+      case a: AttributeReference => selfNormAttr(f).exists(_.exprId == a.exprId)
+      case _ => constPos(f)
+    }
+    def negated(s: Expression) = stripCasts(s) match {
+      case FloatVecDot(a, b) => Some(("ip", a, b))
+      case Divide(num, den, _) => (stripCasts(num), stripCasts(den)) match {
+        case (FloatVecDot(a, b), Multiply(x, y, _))
+            if (isNorm(x, a) && isNorm(y, b)) || (isNorm(x, b) && isNorm(y, a)) =>
+          Some(("cosine", a, b))
+        case _ => None
+      }
+      case _ => None
+    }
+    stripCasts(e) match {
+      case Sqrt(inner) => stripCasts(inner) match {
+        case FloatVecL2Sq(a, b) => Some(("l2", a, b))
+        case _ => None
+      }
+      case FloatVecL2Sq(a, b) => Some(("l2", a, b))
+      case Subtract(c, s, _) if c.foldable => negated(s)
+      case UnaryMinus(s, _) => negated(s)
+      case _ => None
     }
   }
+
+  /** The single-query shape's operands: a literal query vector against
+    * a column.
+    */
+  private def literalVsColumn(a: Expression,
+      b: Expression): Option[(Array[Float], AttributeReference)] = (a, b) match {
+    case (l, col: AttributeReference) => litVec(l).map((_, col))
+    case (col: AttributeReference, l) => litVec(l).map((_, col))
+    case _ => None
+  }
+
+  // ---- 2. the scan side --------------------------------------------------
+
+  /** Strip attribute-only (column-pruning) Projects off a scan side —
+    * plain attrs keep their exprIds through them, so anything resolved
+    * against the side's output stays bound below.
+    */
+  private def leafThroughProjects(p: LogicalPlan): LogicalPlan = p match {
+    case Project(cols, inner) if cols.forall(_.isInstanceOf[AttributeReference]) =>
+      leafThroughProjects(inner)
+    case other => other
+  }
+
+  /** Split a scan side into (optional metadata Filter, scan leaf),
+    * looking through column-pruning Projects on both sides of the
+    * Filter.
+    */
+  private def splitFilter(p: LogicalPlan): (Option[Filter], LogicalPlan) =
+    leafThroughProjects(p) match {
+      case f @ Filter(_, c) => (Some(f), leafThroughProjects(c))
+      case other => (None, other)
+    }
+
+  /** True when `cond` already carries a literal id-IN/INSET conjunct on
+    * the scan's id column — the structural idempotence marker (and the
+    * conservative skip for user-written literal id lists).
+    */
+  private def hasCandidateIn(cond: Expression, id: Attribute): Boolean =
+    cond.exists {
+      case In(a: AttributeReference, vs)
+          if a.exprId == id.exprId && vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) => true
+      case InSet(a: AttributeReference, _) if a.exprId == id.exprId => true
+      case _ => false
+    }
+
+  /** A scan side the probe can splice into: the subtree `plan` (the
+    * single query's Project child, or one side of the batch join), its
+    * scan `leaf`, optional metadata `filter`, registered `spec`, the
+    * embedding operand `emb` it outputs and its `id` attribute.
+    */
+  private final case class ScanSide(plan: LogicalPlan, leaf: LogicalPlan,
+      filter: Option[Filter], spec: IndexSpec, emb: AttributeReference, id: Attribute)
+
+  /** `plan` as a [[ScanSide]] for `metric`: its leaf carries a live
+    * registration, it outputs one of `operands` as the registered
+    * embedding column and the id column, and its filter (if any) is
+    * deterministic and not already spliced. Attrs resolve against
+    * `plan`'s output: column-pruning Projects below it pass plain attrs
+    * through with unchanged exprIds, so the spliced In stays bound.
+    */
+  private def scanSide(plan: LogicalPlan, metric: String, operands: Seq[AttributeReference],
+      cur: Option[SparkSession]): Option[ScanSide] = {
+    val (filter, leaf) = splitFilter(plan)
+    for {
+      spec <- specOf(leaf, metric, cur)
+      emb <- operands.find(a => plan.outputSet.contains(a) && a.name == spec.embCol)
+      id <- plan.output.find(_.name == spec.idCol)
+      if filter.forall(f => f.condition.deterministic && !hasCandidateIn(f.condition, id))
+    } yield ScanSide(plan, leaf, filter, spec, emb, id)
+  }
+
+  /** Whether `side` may serve its shape: a filtered shape's
+    * survivors ≥ k check only implies exactness over an
+    * `exhaustiveProbe` registration (see the class doc). A filtered
+    * single query over an approximate one is counted in
+    * [[filteredSkippedApprox]].
+    */
+  private def exhaustiveEnough(side: ScanSide, batch: Boolean): Boolean =
+    side.filter.isEmpty || side.spec.exhaustiveProbe || {
+      if (!batch) {
+        filteredSkippedApprox.incrementAndGet()
+        logInfo("graft ANN filtered rewrite: registration is not " +
+          "exhaustiveProbe — survivors >= k would not imply exactness; " +
+          "keeping the exact plan")
+      }
+      false
+    }
+
+  // ---- 3. the probe vectors ----------------------------------------------
+
+  /** The vector the `metric` index is probed with for query `qv`, or
+    * None when `qv` has no ranking under the metric (the exact plan
+    * answers):
+    *
+    *  - "l2": `qv` itself;
+    *  - "cosine": `qv` L2-normalized, as the index stores normalized
+    *    vectors (the same float rounding as the index build); a zero-norm
+    *    or NaN vector has no cosine ranking;
+    *  - "ip": `[qv, 0]` — the ip index stores AUGMENTED vectors
+    *    [x, sqrt(M² − ‖x‖²)] (M = max corpus norm; Shrivastava & Li,
+    *    NeurIPS'14), so the augmented L2 distance ‖q‖² + M² − 2·q·x is
+    *    monotone in −q·x for ANY q and the exhaustive probe's candidates
+    *    are the true top-K′ by inner product; a NaN component has no
+    *    dot ranking.
+    *
+    * A null vector (a null `qemb` row) has no ranking either.
+    */
+  private def probeVector(metric: String, qv: Array[Float]): Option[Array[Float]] =
+    Option(qv).flatMap { v =>
+      metric match {
+        case "cosine" =>
+          val n = math.sqrt(v.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
+          if (n == 0.0 || n.isNaN) None else Some(v.map(x => (x / n).toFloat))
+        case "ip" => if (v.exists(_.isNaN)) None else Some(v :+ 0.0f)
+        case _ => Some(v)
+      }
+    }
+
+  /** Most query rows the batch rewrite will route at plan time — the
+    * reference workload is a handful of query vectors per run; a
+    * larger-than-this query side means the "small broadcast side"
+    * assumption is wrong and the exact plan is kept.
+    */
+  private val MaxBatchQueries = 1024
+
+  /** The batch query side's probe vectors, numbered by row. `qemb` is
+    * collected ONCE, at most [[MaxBatchQueries]] + 1 rows, and that one
+    * array gives the bound, the query set and the vectors, so plan time
+    * sees one answer of the query side. None — the exact plan — past
+    * the bound, or when any query has no ranking ([[probeVector]]):
+    * candidates spliced for the others would change that query's rows.
+    */
+  private def queryVectors(spec: IndexSpec, querySide: LogicalPlan,
+      qemb: Attribute): Option[Array[(Long, Array[Float])]] = {
+    val spark = spec.index.sparkSession
+    import spark.implicits._
+    val rows = PlanOps.ofRows(spark, Project(Seq(qemb), querySide))
+      .limit(MaxBatchQueries + 1).as[Array[Float]].collect()
+    val probes = rows.map(probeVector(spec.metric, _))
+    if (rows.length > MaxBatchQueries) None
+    else if (probes.contains(None)) {
+      logInfo("graft batch ANN rewrite: a degenerate query vector " +
+        s"(null, zero-norm cosine or NaN ${spec.metric}) has no ranking; keeping the exact plan")
+      None
+    } else Some(probes.flatten.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+  }
+
+  // ---- 4. probe and count survivors ---------------------------------------
 
   /** The registered index's candidate probe for `queries`: routed on
     * the driver against the registration's centroids, walked over the
@@ -540,243 +660,113 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
   private def candidateIn(id: Attribute, candIds: IndexedSeq[Any]): In =
     In(id, candIds.map(v => Literal.create(v, id.dataType)))
 
-  /** Rewrite one `Sort(dist ASC) → Project → Scan` subtree (already
-    * known to sit under a Limit k) into
-    * `Sort(dist ASC) → Project → Filter(id IN probe ids) → Scan`, or None
-    * if the shape / registration / sort key doesn't qualify.
+  /** The candidate ids to splice for `queries` — (number, probe vector)
+    * pairs; a single query is the one-row case `(0L, qv)` — or None to
+    * keep the exact plan. One probe of k · overfetch candidates per
+    * query, times filteredOverfetch under a `filter`, and every query
+    * must get at least one: a query with no candidates would re-rank
+    * over the others' candidates, not its own neighbors (and no
+    * candidates at all leave nothing to splice). Under a
+    * `filter`, one narrow collect of the candidate ids that survive it,
+    * and every query must keep ≥ k distinct surviving ids — one short
+    * query would silently lose neighbors, so it is all-or-nothing for
+    * the shared plan.
     */
-  private def rewriteSort(srt: Sort, k: Int,
-      cur: Option[SparkSession]): Option[Sort] =
-    try rewriteSortUnsafe(srt, k, cur)
-    catch {
-      // The planner contract: a failed ACCELERATION attempt (corrupt
-      // index files, a mid-flight dropped registration, an unexpected
-      // literal shape) must never fail the QUERY — log and keep the
-      // exact plan.
-      case e: Exception =>
-        logWarning(s"graft ANN rewrite failed; keeping the exact plan: ${e.getMessage}")
-        None
-    }
-
-  /** True when `cond` already carries a literal id-IN/INSET conjunct on
-    * the scan's id column — the filtered rewrite's structural
-    * idempotence marker (and the conservative skip for user-written
-    * literal id lists).
-    */
-  private def hasCandidateIn(cond: Expression, id: Attribute): Boolean =
-    cond.exists {
-      case In(a: AttributeReference, vs)
-          if a.exprId == id.exprId && vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) => true
-      case InSet(a: AttributeReference, _) if a.exprId == id.exprId => true
-      case _ => false
-    }
-
-  /** The FILTERED pattern's adaptive rewrite: probe with the enlarged
-    * candidate set, count the filter's survivors at plan time, splice
-    * the candidate-id predicate only when survivors ≥ k (else the exact
-    * plan — the recall-safety fallback, counter-observable). Requires
-    * `exhaustiveProbe` on the registration (see the class doc); both
-    * the probe and the decline are memoized per plan shape.
-    */
-  private def rewriteFiltered(
-      srt: Sort, p: Project, flt: Filter, projList: Seq[NamedExpression],
-      key: Expression, k: Int, cur: Option[SparkSession]): Option[Sort] = {
-    // attrs are resolved against the Filter's child (which may be a
-    // column-pruning Project over the scan — plain attrs pass through
-    // it with unchanged exprIds, so the spliced In stays bound)
-    val below = flt.child
-    val scanLeaf = leafThroughProjects(below)
-    queryVectorOf(key, projList).flatMap { case (qv, embAttr, metric) =>
-      specOf(scanLeaf, metric, cur).flatMap { spec =>
-          below.output.find(_.name == spec.idCol) match {
-            case Some(leftId)
-                if below.outputSet.contains(embAttr) && embAttr.name == spec.embCol &&
-                  flt.condition.deterministic && !hasCandidateIn(flt.condition, leftId) =>
-              if (!spec.exhaustiveProbe) {
-                filteredSkippedApprox.incrementAndGet()
-                logInfo("graft ANN filtered rewrite: registration is not " +
-                  "exhaustiveProbe — survivors >= k would not imply exactness; " +
-                  "keeping the exact plan")
-                None
-              } else {
-                val spark = spec.index.sparkSession
-                val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
-                  math.max(spec.filteredOverfetch, 1)
-                val cacheKey = s"${specCacheKey(spec)}|flt|$metric|k=$k|" +
-                  // keyed on the condition's SQL text, not its
-                  // canonicalized tree: Expression.canonicalized retains
-                  // attr exprIds, so a FRESH Dataset of the same shape
-                  // would always miss; the filtered pattern only matches
-                  // conditions over the scan's own columns, for which the
-                  // text is a faithful semantic key (the spec identity is
-                  // already in the key, so same text on another table
-                  // cannot collide)
-                  s"qv=${qv.mkString(",")}|cond=${flt.condition.sql}"
-                val decision = memoProbe(cacheKey)({
-                  val candIds = probe(spec, Array((0L, qv)), kp).map(h => h.id: Any).toIndexedSeq
-                  // one narrow job: the ≤ kp surviving ids themselves
-                  val survivors = org.apache.spark.sql.graft.PlanOps
-                    .ofRows(spark, Project(Seq(leftId),
-                      Filter(And(flt.condition, candidateIn(leftId, candIds)), below)))
-                    .collect().length
-                  if (survivors < k) {
-                    logInfo(s"graft ANN filtered rewrite: only $survivors of " +
-                      s"${candIds.length} probe candidates survive the filter (< k=$k); " +
-                      "keeping the exact plan")
-                    None
-                  } else {
-                    logInfo(s"graft ANN filtered rewrite: Sort+Limit($k) over filtered " +
-                      s"${spec.idCol}-indexed scan → candidate-id predicate " +
-                      s"(${candIds.length} candidates, $survivors filter survivors)")
-                    Some(candIds)
-                  }
-                })
-                decision match {
-                  case None =>
-                    filteredFallbacks.incrementAndGet()
-                    None
-                  case Some(candIds) =>
-                    firedFiltered.incrementAndGet()
-                    Some(srt.copy(child = p.copy(child =
-                      flt.copy(condition = And(flt.condition, candidateIn(leftId, candIds))))))
-                }
-              }
-            case _ => None
-          }
+  private def candidates(spec: IndexSpec, queries: Array[(Long, Array[Float])], k: Int,
+      filter: Option[Filter]): Option[IndexedSeq[Any]] = {
+    val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
+      filter.fold(1)(_ => math.max(spec.filteredOverfetch, 1))
+    val hits = probe(spec, queries, kp)
+    val perQuery = hits.groupBy(_.qid).map { case (q, hs) => q -> hs.map(h => h.id: Any).distinct }
+    val ids = hits.map(h => h.id: Any).distinct.toIndexedSeq
+    if (ids.isEmpty || !queries.forall(q => perQuery.contains(q._1))) {
+      logInfo(s"graft ANN rewrite (${spec.metric}): a query produced zero probe " +
+        "candidates; keeping the exact plan")
+      None
+    } else filter.fold(Option(ids)) { flt =>
+      flt.child.output.find(_.name == spec.idCol).flatMap { id =>
+        val survived = PlanOps.ofRows(spec.index.sparkSession,
+            Project(Seq(id), Filter(And(flt.condition, candidateIn(id, ids)), flt.child)))
+          .collect().map(_.get(0)).toSet
+        val least = perQuery.values.map(_.count(survived.contains)).min
+        if (least < k) {
+          logInfo(s"graft ANN filtered rewrite: a query keeps only $least of its " +
+            s"probe candidates after the filter (< k=$k); keeping the exact plan")
+          None
+        } else Some(ids)
       }
     }
   }
 
-  private def rewriteSortUnsafe(srt: Sort, k: Int,
-      cur: Option[SparkSession]): Option[Sort] = srt match {
-    case Sort(SortOrder(key, Ascending, _, _) +: _, true,
-        p @ Project(projList, flt @ Filter(_, _)), _) =>
-      rewriteFiltered(srt, p, flt, projList, key, k, cur)
-    case Sort(SortOrder(key, Ascending, _, _) +: _, true,
-        p @ Project(projList, leaf), _) =>
-      queryVectorOf(key, projList).flatMap { case (qv, embAttr, metric) =>
-        specOf(leaf, metric, cur).flatMap { spec =>
-          leaf.output.find(_.name == spec.idCol) match {
-            case Some(leftId)
-                if leaf.outputSet.contains(embAttr) && embAttr.name == spec.embCol =>
-              val cacheKey = s"${specCacheKey(spec)}|knn|$metric|k=$k|qv=${qv.mkString(",")}"
-              val decision = memoProbe(cacheKey)({
-                val candIds = probe(spec, Array((0L, qv)),
-                  math.max(k, 1) * math.max(spec.overfetch, 1)).map(h => h.id: Any).toIndexedSeq
-                // no candidates leaves nothing to splice: the exact plan answers
-                if (candIds.isEmpty) None else Some(candIds)
-              })
-              decision.map { candIds =>
-                fired.incrementAndGet()
-                logInfo(s"graft ANN rewrite ($metric): Sort+Limit($k) over " +
-                  s"${spec.idCol}-indexed scan → candidate-id predicate " +
-                  s"(${candIds.length} probe candidates)")
-                srt.copy(child = p.copy(child = Filter(candidateIn(leftId, candIds), leaf)))
-              }
-            case _ => None
-          }
-        }
-      }
-    case _ => None
+  /** The memo key of one probe decision: the index, k, the query (its
+    * probe vector, or the batch query side's canonicalized plan) and
+    * the filter. The filter is keyed on its condition's SQL text, not
+    * its canonicalized tree: Expression.canonicalized retains attr
+    * exprIds, so a FRESH Dataset of the same shape would always miss;
+    * the filtered shapes only match conditions over the scan side's
+    * own columns, for which the text is a faithful semantic key (the
+    * spec identity is already in the key, so the same text on another
+    * table cannot collide).
+    */
+  private def memoKey(spec: IndexSpec, k: Int, query: String, filter: Option[Filter]): String =
+    s"${specCacheKey(spec)}|${spec.metric}|k=$k|q=$query|" +
+      s"cond=${filter.fold("")(_.condition.sql)}"
+
+  // ---- 5. splice ------------------------------------------------------------
+
+  /** Count the plan event — each shape increments exactly one counter:
+    * a fire, or (filtered shapes) a decline after probing — and pass
+    * the decision on.
+    */
+  private def counted(side: ScanSide, k: Int, batch: Boolean)(
+      decision: Option[IndexedSeq[Any]]): Option[IndexedSeq[Any]] = {
+    val filtered = side.filter.isDefined
+    val (fire, decline) = (batch, filtered) match {
+      case (false, false) => (fired, None)
+      case (false, true) => (firedFiltered, Some(filteredFallbacks))
+      case (true, false) => (firedBatch, None)
+      case (true, true) => (firedBatchFiltered, Some(batchFilteredFallbacks))
+    }
+    decision match {
+      case Some(ids) =>
+        fire.incrementAndGet()
+        logInfo(s"graft ANN rewrite (${if (batch) "batch" else "single"}" +
+          s"${if (filtered) ", filtered" else ""}, ${side.spec.metric}): top-$k over " +
+          s"${side.spec.idCol}-indexed scan → candidate-id predicate (${ids.length} candidates)")
+      case None => decline.foreach(_.incrementAndGet())
+    }
+    decision
   }
 
-  /** The (x, y) attribute pair of an L2 sort key — the raw squared
-    * distance or any monotonic wrapper of it (sqrt, casts), since a
-    * monotonic transform preserves the ranking the probe answers.
+  /** `side` with `id IN (ids)` spliced: into its metadata Filter, or as
+    * a new Filter over it.
     */
-  private def l2Pair(e: Expression): Option[(AttributeReference, AttributeReference)] =
-    stripCasts(e) match {
-      case FloatVecL2Sq(x: AttributeReference, y: AttributeReference) => Some((x, y))
-      case Sqrt(inner) => stripCasts(inner) match {
-        case FloatVecL2Sq(x: AttributeReference, y: AttributeReference) => Some((x, y))
-        case _ => None
-      }
+  private def splice(side: ScanSide, ids: IndexedSeq[Any]): LogicalPlan = side.plan match {
+    case f: Filter => f.copy(condition = And(f.condition, candidateIn(side.id, ids)))
+    case other => Filter(candidateIn(side.id, ids), other)
+  }
+
+  // ---- the two plan shapes ----------------------------------------------------
+
+  /** The single-query shapes under a Limit k,
+    * `Sort(dist ASC) → Project → [Filter(meta)] → Scan`, with a literal
+    * query vector in the sort key.
+    */
+  private def rewriteSort(srt: Sort, k: Int, cur: Option[SparkSession]): Option[Sort] =
+    srt match {
+      case Sort(SortOrder(key, Ascending, _, _) +: _, true, p @ Project(projList, child), _) =>
+        for {
+          (metric, a, b) <- aliased(key, projList).flatMap(distanceKey)
+          (qv, col) <- literalVsColumn(a, b)
+          pv <- probeVector(metric, qv)
+          side <- scanSide(child, metric, Seq(col), cur)
+          if exhaustiveEnough(side, batch = false)
+          ids <- counted(side, k, batch = false)(
+            memoProbe(memoKey(side.spec, k, pv.mkString(","), side.filter))(
+              candidates(side.spec, Array((0L, pv)), k, side.filter)))
+        } yield srt.copy(child = p.copy(child = splice(side, ids)))
       case _ => None
     }
-
-  /** The (x, y) attribute pair of an attr-vs-attr COSINE sort key —
-    * the BATCH twin of [[matchCosine]], where the query vector is a
-    * column of the (executed-at-plan-time) query side rather than a
-    * literal: `−sim` or `c − sim` (foldable c) with
-    * `sim = dot(x, y) / (sqrt(dot(x, x)) · sqrt(dot(y, y)))` — exactly
-    * `KnnExact.topKCosine`'s negsim. Ascending negsim ≡ descending
-    * similarity ≡ the normalized-L2 ranking the cosine index answers.
-    */
-  private def cosinePair(e: Expression): Option[(AttributeReference, AttributeReference)] = {
-    def sim(e: Expression): Option[(AttributeReference, AttributeReference)] =
-      stripCasts(e) match {
-        case Divide(num, den, _) =>
-          val pair = stripCasts(num) match {
-            case FloatVecDot(x: AttributeReference, y: AttributeReference)
-                if x.exprId != y.exprId => Some((x, y))
-            case _ => None
-          }
-          pair.filter { case (x, y) =>
-            stripCasts(den) match {
-              case Multiply(a, b, _) =>
-                val na = selfNormAttr(a); val nb = selfNormAttr(b)
-                na.isDefined && nb.isDefined && {
-                  val ids = Set(na.get.exprId, nb.get.exprId)
-                  ids == Set(x.exprId, y.exprId)
-                }
-              case _ => false
-            }
-          }
-        case _ => None
-      }
-    stripCasts(e) match {
-      case UnaryMinus(s, _) => sim(s)
-      case Subtract(c, s, _) if c.foldable => sim(s)
-      case _ => None
-    }
-  }
-
-  /** The (x, y) attribute pair of an attr-vs-attr INNER-PRODUCT sort
-    * key — the BATCH twin of [[matchIp]]: `−dot(x, y)` or `c − dot`
-    * (foldable c), exactly `KnnExact.topKDot`'s negip. Ascending negip
-    * ≡ descending inner product ≡ the augmented-L2 ranking the ip index
-    * answers (with the query side zero-augmented at plan time).
-    */
-  private def ipPair(e: Expression): Option[(AttributeReference, AttributeReference)] = {
-    def ip(e: Expression): Option[(AttributeReference, AttributeReference)] =
-      stripCasts(e) match {
-        case FloatVecDot(x: AttributeReference, y: AttributeReference)
-            if x.exprId != y.exprId => Some((x, y))
-        case _ => None
-      }
-    stripCasts(e) match {
-      case UnaryMinus(s, _) => ip(s)
-      case Subtract(c, s, _) if c.foldable => ip(s)
-      case _ => None
-    }
-  }
-
-  /** Strip attribute-only (column-pruning) Projects off a join side —
-    * plain attrs keep their exprIds through them, so anything resolved
-    * against the side's output stays bound below.
-    */
-  private def leafThroughProjects(p: LogicalPlan): LogicalPlan = p match {
-    case Project(cols, inner) if cols.forall(_.isInstanceOf[AttributeReference]) =>
-      leafThroughProjects(inner)
-    case other => other
-  }
-
-  /** Split a join side into (optional metadata Filter, scan leaf),
-    * looking through column-pruning Projects on both sides of the
-    * Filter — the batch-FILTERED shape.
-    */
-  private def splitFilter(p: LogicalPlan): (Option[Filter], LogicalPlan) =
-    leafThroughProjects(p) match {
-      case f @ Filter(_, c) => (Some(f), leafThroughProjects(c))
-      case other => (None, other)
-    }
-
-  /** Most query rows the batch rewrite will route at plan time — the
-    * reference workload is a handful of query vectors per run; a
-    * larger-than-this query side means the "small broadcast side"
-    * assumption is wrong and the exact plan is kept.
-    */
-  private val MaxBatchQueries = 1024
 
   /** BATCH (multi-query) ANN: the canonical batched exact-kNN plan is a
     * per-query ranking window over a broadcast cross join —
@@ -788,10 +778,9 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * query vectors per run, chromadb_speed_experiment.py:651-657).
     * When the scanned side carries a registered index AND clears the
     * [[BatchMinScanBytes]] cost gate (or the query embedding carries
-    * the [[batchOptIn]] mark), the rule executes the query side
-    * (bounded by [[MaxBatchQueries]]), probes the stored index ONCE for
-    * all queries, and reduces the scan side to the union of per-query
-    * candidates:
+    * the [[batchOptIn]] mark), the rule collects the query side once
+    * ([[queryVectors]]), probes the stored index ONCE for all queries,
+    * and reduces the scan side to the union of per-query candidates:
     *
     * {{{ … → Join(queries × Filter(id IN cands, scan)) }}}
     *
@@ -803,235 +792,74 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     *
     * BATCH × FILTERED composition: when a deterministic metadata Filter
     * sits between the join and the scan (5 queries × `where label = …`
-    * — the realest production shape), the rule probes with the
-    * filtered-enlarged candidate set (k · overfetch · filteredOverfetch
-    * per query), counts EACH query's filter survivors at plan time, and
-    * fires only when EVERY query keeps ≥ k survivors (one short query
-    * would silently lose neighbors — all-or-nothing is the recall-safe
-    * choice for a single shared plan). Requires `exhaustiveProbe`, like
-    * the single-query filtered rewrite, and for the same reason.
+    * — the realest production shape), the probe is filtered-enlarged
+    * and EVERY query must keep ≥ k survivors ([[candidates]]). Requires
+    * `exhaustiveProbe`, like the single-query filtered rewrite, and for
+    * the same reason.
     *
-    * Idempotence: the spliced Filter(id IN cands) sits between the Join
-    * and the previous top of the scan side; on re-entry `splitFilter`
-    * finds it, and `hasCandidateIn` marks it (also after CombineFilters
-    * merges it with the metadata predicate).
+    * Idempotence: the spliced `id IN cands` sits between the Join and
+    * the previous top of the scan side; on re-entry `splitFilter` finds
+    * it, and `hasCandidateIn` marks it (also after CombineFilters merges
+    * it with the metadata predicate).
     *
-    * METRICS: the window's sort key may be the L2 distance
-    * (`KnnExact.topK`), the negated attr-vs-attr cosine similarity
-    * (`KnnExact.topKCosine`'s negsim — ascending negsim ≡ descending
-    * similarity), or the negated attr-vs-attr inner product
-    * (`KnnExact.topKDot`'s negip). A cosine key probes the
-    * metric="cosine" index with the query side L2-NORMALIZED at plan
-    * time (same float rounding as the index build); any zero-norm query
-    * vector declines the whole rewrite (no cosine ranking exists for it
-    * — the exact plan keeps its own NaN semantics). An ip key probes
-    * the metric="ip" augmented index with the query side
-    * zero-augmented; any NaN query component declines. All three
-    * metrics compose with the FILTERED variant below.
+    * METRICS: any key [[distanceKey]] matches over two distinct
+    * attributes — `KnnExact.topK`'s L2, `topKCosine`'s negsim,
+    * `topKDot`'s negip — each composed with the filtered variant. Any
+    * query without a ranking under the metric ([[probeVector]]: a null
+    * vector, a zero-norm one under cosine, a NaN component under ip)
+    * declines the whole rewrite. For a zero-norm cosine query the exact
+    * plan then raises DIVIDE_BY_ZERO (the ANSI mode `GraftSession` pins)
+    * instead of ranking it NaN: the rule neither hides nor changes that.
     */
-  private def rewriteWindowTopK(f: Filter, cur: Option[SparkSession]): Option[Filter] =
-    try rewriteWindowTopKUnsafe(f, cur)
-    catch {
-      case e: Exception =>
-        logWarning(s"graft batch ANN rewrite failed; keeping the exact plan: ${e.getMessage}")
-        None
-    }
-
-  private def rewriteWindowTopKUnsafe(f: Filter,
-      cur: Option[SparkSession]): Option[Filter] = {
-    val rkK = f.condition match {
-      case LessThanOrEqual(a: AttributeReference, IntegerLiteral(kv)) if kv > 0 =>
-        Some((a, kv))
+  private def rewriteWindowTopK(f: Filter, cur: Option[SparkSession]): Option[Filter] = {
+    val window = f.child match {
+      case w: Window => Some(w)
+      case Project(ps, w: Window) if ps.forall(_.deterministic) => Some(w)
       case _ => None
     }
-    rkK.flatMap { case (rkAttr, k) =>
-      val winOpt = f.child match {
-        case w: Window => Some(w)
-        case Project(ps, w: Window) if ps.forall(_.deterministic) => Some(w)
+    for {
+      (rkAttr, k) <- f.condition match {
+        case LessThanOrEqual(a: AttributeReference, IntegerLiteral(kv)) if kv > 0 => Some((a, kv))
         case _ => None
       }
-      winOpt.flatMap { w =>
-        val headKey = w match {
-          case Window(Seq(al @ Alias(WindowExpression(RowNumber(),
-              WindowSpecDefinition(Seq(qid: AttributeReference), orderSpec, _)), _)),
-              _, _, _, _) if al.exprId == rkAttr.exprId && orderSpec.nonEmpty =>
-            orderSpec.head match {
-              case SortOrder(key, Ascending, _, _) => Some((qid, key))
-              case _ => None
-            }
-          case _ => None
-        }
-        headKey.flatMap { case (qid, key) =>
-          val belowWin = w.child match {
-            case wgl: WindowGroupLimit => wgl.child
-            case other => other
-          }
-          belowWin match {
-            case Project(projList2, join @ Join(l, r, jt, None, _))
-                if jt == org.apache.spark.sql.catalyst.plans.Cross ||
-                  jt == org.apache.spark.sql.catalyst.plans.Inner =>
-              val resolvedKey = key match {
-                case a: AttributeReference =>
-                  projList2.collectFirst { case al: Alias if al.exprId == a.exprId => al.child }
-                case e => Some(e)
-              }
-              val keyPair = resolvedKey.flatMap(k0 =>
-                l2Pair(k0).map((_, "l2"))
-                  .orElse(cosinePair(k0).map((_, "cosine")))
-                  .orElse(ipPair(k0).map((_, "ip"))))
-              keyPair.flatMap { case ((x, y), metric) =>
-                val cands = for {
-                  (scanSide, querySide) <- Seq((l, r), (r, l))
-                  (fltOpt, leaf) = splitFilter(scanSide)
-                  spec <- specOf(leaf, metric, cur).toSeq
-                  embAttr <- Seq(x, y).find(a =>
-                    scanSide.outputSet.contains(a) && a.name == spec.embCol).toSeq
-                  qembAttr = if (embAttr eq x) y else x
-                  if batchGateOpen(qembAttr.metadata, leaf)
-                  if querySide.outputSet.contains(qembAttr) &&
-                    querySide.outputSet.contains(qid)
-                  // the rule EXECUTES the query side several times at plan
-                  // time (bounds check, probe, qid set) and the runtime
-                  // executes it again — a nondeterministic side (limit over
-                  // multi-partition input, a sample) could differ between
-                  // those runs and break the candidate/runtime agreement
-                  if querySide.deterministic
-                  idAttr <- scanSide.output.find(_.name == spec.idCol).toSeq
-                  if fltOpt.forall(fl => fl.condition.deterministic &&
-                    !hasCandidateIn(fl.condition, idAttr))
-                  // batch-filtered exactness needs exhaustive candidates,
-                  // exactly like the single-query filtered rewrite
-                  if fltOpt.isEmpty || spec.exhaustiveProbe
-                } yield (scanSide, querySide, spec, qembAttr, idAttr, fltOpt)
-                cands.headOption.flatMap {
-                  case (scanSide, querySide, spec, qembAttr, idAttr, fltOpt) =>
-                    val spark = spec.index.sparkSession
-                    val filtered = fltOpt.isDefined
-                    val cacheKey = s"${specCacheKey(spec)}|batch|$metric|k=$k|" +
-                      s"q=${querySide.canonicalized}|" +
-                      s"cond=${fltOpt.map(_.condition.sql).getOrElse("")}"
-                    val decision = memoProbe(cacheKey)({
-                      val qdf = org.apache.spark.sql.graft.PlanOps
-                        .ofRows(spark, Project(Seq(qid, qembAttr), querySide))
-                        .toDF("qid", "qemb")
-                      // For the cosine metric the index stores L2-NORMALIZED
-                      // vectors, so the probe side must be normalized the
-                      // same way (identical float rounding to the index
-                      // build); a zero-norm query vector has no cosine
-                      // ranking at all — decline, keeping the exact plan's
-                      // own NaN semantics for that query.
-                      val F = org.apache.spark.sql.functions
-                      lazy val qdfProbe: org.apache.spark.sql.DataFrame =
-                        if (metric == "ip") {
-                          // the ip index stores AUGMENTED vectors; the probe
-                          // side gains the constant 0 as its extra dimension
-                          // (see matchIp). A NaN query component has no dot
-                          // ranking — decline, keeping the exact plan's own
-                          // NaN semantics for that query.
-                          if (qdf.where(F.exists(F.col("qemb"),
-                              x => F.isnan(x.cast("double")))).limit(1).count() > 0) null
-                          else qdf.select(F.col("qid"),
-                            F.concat(F.col("qemb").cast("array<double>"),
-                              F.array(F.lit(0.0))).cast("array<float>").as("qemb"))
-                        } else if (metric != "cosine") qdf
-                        else {
-                          graft.functions.VectorExpressions.ensureRegistered(spark)
-                          val withN = qdf.withColumn("__qn", F.sqrt(
-                            graft.functions.VectorExpressions.dot(
-                              F.col("qemb"), F.col("qemb"))))
-                          // === 0.0 misses NaN (NaN === 0.0 is false), and a
-                          // NaN-component vector has no cosine ranking either
-                          if (withN.where(F.col("__qn") === 0.0 ||
-                              F.isnan(F.col("__qn")) ||
-                              F.col("__qn").isNull).limit(1).count() > 0) null
-                          else withN.select(F.col("qid"),
-                            F.transform(F.col("qemb"),
-                              x => (x.cast("double") / F.col("__qn")).cast("float"))
-                              .as("qemb"))
-                        }
-                      if (qdf.limit(MaxBatchQueries + 1).count() > MaxBatchQueries) None
-                      else if (qdfProbe == null) {
-                        logInfo("graft batch ANN rewrite: a degenerate query vector " +
-                          s"(zero-norm cosine / NaN $metric) has no ranking; " +
-                          "keeping the exact plan")
-                        None
-                      } else {
-                        val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
-                          (if (filtered) math.max(spec.filteredOverfetch, 1) else 1)
-                        val hits = probe(spec, graft.search.Hnsw.collectQueries(qdfProbe), kp)
-                        // Collected once for BOTH branches: the per-query
-                        // guards below must run over the FULL query-side qid
-                        // set, not just qids present in the probe output — a
-                        // query whose probe returned nothing (null/NaN
-                        // embedding, degenerate routing) would otherwise be
-                        // uncounted, the rewrite would fire on the other
-                        // queries' candidates, and THAT query's top-k would
-                        // silently re-rank over neighbors that aren't its own.
-                        val allQids = qdf.select("qid")
-                          .collect().map(_.get(0)).toSet
-                        val pairs = hits.map(h => (h.qid: Any, h.id: Any))
-                        val byQid = pairs.groupBy(_._1)
-                        val distinctIds = pairs.map(_._2).distinct.toIndexedSeq
-                        fltOpt match {
-                          case None =>
-                            if (distinctIds.isEmpty) None
-                            else if (!allQids.forall(byQid.contains)) {
-                              logInfo("graft batch ANN rewrite: a query produced " +
-                                "zero probe candidates; keeping the exact plan")
-                              None
-                            } else Some(distinctIds)
-                          case Some(flt) =>
-                            // per-query survivor check: evaluate the metadata
-                            // filter once over the distinct candidates and
-                            // require EVERY query to keep >= k survivors
-                            if (distinctIds.isEmpty) None
-                            else if (!allQids.forall(byQid.contains)) {
-                              logInfo("graft batch ANN filtered rewrite: a query " +
-                                "produced zero probe candidates; keeping the exact plan")
-                              None
-                            } else flt.child.output.find(_.name == spec.idCol)
-                              .flatMap { belowId =>
-                                val survived = org.apache.spark.sql.graft.PlanOps
-                                  .ofRows(spark,
-                                    Project(Seq(belowId), Filter(
-                                      And(flt.condition, candidateIn(belowId, distinctIds)),
-                                      flt.child)))
-                                  .collect().map(_.get(0)).toSet
-                                val minSurvivors = byQid.values
-                                  .map(_.count(pr => survived.contains(pr._2))).min
-                                if (minSurvivors < k) {
-                                  logInfo(s"graft batch ANN filtered rewrite: a query " +
-                                    s"keeps only $minSurvivors filter survivors (< k=$k); " +
-                                    "keeping the exact plan")
-                                  None
-                                } else Some(distinctIds)
-                              }
-                        }
-                      }
-                    })
-                    decision match {
-                      case None =>
-                        if (filtered) batchFilteredFallbacks.incrementAndGet()
-                        None
-                      case Some(candIds) =>
-                        val candIn = candidateIn(idAttr, candIds)
-                        if (filtered) firedBatchFiltered.incrementAndGet()
-                        else firedBatch.incrementAndGet()
-                        logInfo(s"graft batch ANN rewrite" +
-                          s"${if (filtered) " (filtered)" else ""}: window top-$k over " +
-                          s"${spec.idCol}-indexed scan → one multi-query probe " +
-                          s"(${candIds.length} candidate ids)")
-                        Some(f.transformUp {
-                          case p if p eq scanSide => Filter(candIn, scanSide)
-                        }.asInstanceOf[Filter])
-                    }
-                }
-              }
-            case _ => None
-          }
-        }
+      w <- window
+      (qid, key) <- w match {
+        case Window(Seq(al @ Alias(WindowExpression(RowNumber(),
+            WindowSpecDefinition(Seq(qid: AttributeReference),
+              SortOrder(key, Ascending, _, _) +: _, _)), _)), _, _, _, _)
+            if al.exprId == rkAttr.exprId => Some((qid, key))
+        case _ => None
       }
-    }
+      (projList, l, r) <- (w.child match {
+        case wgl: WindowGroupLimit => wgl.child
+        case other => other
+      }) match {
+        case Project(ps, Join(l, r, Cross | Inner, None, _)) => Some((ps, l, r))
+        case _ => None
+      }
+      (metric, x: AttributeReference, y: AttributeReference) <-
+        aliased(key, projList).flatMap(distanceKey)
+      if x.exprId != y.exprId
+      (side, querySide, qemb) <- (for {
+        (plan, querySide) <- Seq((l, r), (r, l))
+        side <- scanSide(plan, metric, Seq(x, y), cur).toSeq
+        qemb = if (side.emb eq x) y else x
+        if batchGateOpen(qemb.metadata, side.leaf)
+        if querySide.outputSet.contains(qemb) && querySide.outputSet.contains(qid)
+        // the runtime executes the query side again after the rule's
+        // one plan-time collect: a nondeterministic side (limit over
+        // multi-partition input, a sample) could differ between the
+        // two runs and break the candidate/runtime agreement
+        if querySide.deterministic
+        if exhaustiveEnough(side, batch = true)
+      } yield (side, querySide, qemb)).headOption
+      ids <- counted(side, k, batch = true)(
+        memoProbe(memoKey(side.spec, k, querySide.canonicalized.toString, side.filter))(
+          queryVectors(side.spec, querySide, qemb)
+            .flatMap(candidates(side.spec, _, k, side.filter))))
+    } yield f.transformUp {
+      case p if p eq side.plan => splice(side, ids)
+    }.asInstanceOf[Filter]
   }
 
   /** The bare object remains a usable Rule (specs apply it directly;
@@ -1046,12 +874,20 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
 
   def applyWith(plan: LogicalPlan, cur: Option[SparkSession]): LogicalPlan = {
     if (!enabled || registry.isEmpty) return plan
+    // The planner contract: a failed ACCELERATION attempt (corrupt index
+    // files, a mid-flight dropped registration, an unexpected literal
+    // shape) must never fail the QUERY — log and keep the exact plan.
+    def orExact[T <: LogicalPlan](node: T)(rewrite: => Option[T]): T =
+      try rewrite.getOrElse(node)
+      catch {
+        case e: Exception =>
+          logWarning(s"graft ANN rewrite failed; keeping the exact plan: ${e.getMessage}")
+          node
+      }
     plan.transformDown {
       // the analyzed shape: Limit directly over the Sort
       case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, srt: Sort)) =>
-        rewriteSort(srt, k, cur)
-          .map(ns => gl.copy(child = ll.copy(child = ns)))
-          .getOrElse(gl)
+        orExact(gl)(rewriteSort(srt, k, cur).map(ns => gl.copy(child = ll.copy(child = ns))))
       // after projection pushdown the optimizer moves row-preserving
       // projections below the Limit: Limit → Project → Sort. The Limit
       // still takes the Sort's top rows (a deterministic Project drops
@@ -1059,14 +895,13 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       case gl @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, mid @ Project(midList, srt: Sort)))
           if midList.forall(_.deterministic) =>
-        rewriteSort(srt, k, cur)
-          .map(ns => gl.copy(child = ll.copy(child = mid.copy(child = ns))))
-          .getOrElse(gl)
+        orExact(gl)(rewriteSort(srt, k, cur)
+          .map(ns => gl.copy(child = ll.copy(child = mid.copy(child = ns)))))
       // the BATCH shape: rank-filtered row_number window over a
       // broadcast cross join (KnnExact.topK) — one probe for all
       // queries, cost-gated by scan size
       case f @ Filter(LessThanOrEqual(_: AttributeReference, IntegerLiteral(_)), _) =>
-        rewriteWindowTopK(f, cur).getOrElse(f)
+        orExact(f)(rewriteWindowTopK(f, cur))
     }
   }
 }

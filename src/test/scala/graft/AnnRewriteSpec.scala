@@ -365,12 +365,12 @@ class AnnRewriteSpec extends GraftSpec {
 
   // ---- cosine metric ---------------------------------------------------
 
-  private def cosinePattern(qv: Array[Float]): DataFrame = {
+  private def cosinePattern(qv: Array[Float], src: => DataFrame = emb): DataFrame = {
     val qn = math.sqrt(qv.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))
     val cdist = lit(1.0) -
       (VectorExpressions.dot(typedLit(qv), $"embedding") /
         (sqrt(VectorExpressions.dot($"embedding", $"embedding")) * lit(qn)))
-    emb.select($"vec_id", cdist.as("cdist"))
+    src.select($"vec_id", cdist.as("cdist"))
       .orderBy($"cdist", $"vec_id")
       .limit(10)
   }
@@ -550,9 +550,10 @@ class AnnRewriteSpec extends GraftSpec {
   }
 
   test("batch cosine: a zero-norm query vector declines the whole rewrite") {
-    // A zero query vector has no cosine ranking (the exact plan scores
-    // it NaN); splicing candidates for the other queries would change
-    // that query's rows, so the rule must keep the exact plan for ALL.
+    // A zero query vector has no cosine ranking (under ANSI the exact
+    // plan raises DIVIDE_BY_ZERO for it); splicing candidates for the
+    // other queries would change what that plan does, so the rule must
+    // keep the exact plan for ALL.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     registerCosine()
@@ -569,6 +570,28 @@ class AnnRewriteSpec extends GraftSpec {
       assert(AnnIndexRewrite.firedBatch.get() === before,
         "zero-norm query vector: the batch cosine rewrite must decline")
       assert(candidateIns(plan).isEmpty)
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      AnnIndexRewrite.clear()
+    }
+  }
+
+  test("batch: a null query vector declines the whole rewrite") {
+    // A null qemb has no ranking under any metric: the exact plan gives
+    // that query null distances, which candidates spliced for the other
+    // queries would not reproduce.
+    VectorExpressions.ensureRegistered(spark)
+    AnnIndexRewrite.clear()
+    registerExhaustive()
+    spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
+    try {
+      val q = AnnIndexRewrite.batchOptIn(plainQueries.select($"qid",
+        when($"qid" === 2L, lit(null).cast("array<float>")).otherwise($"qemb").as("qemb")))
+      val before = AnnIndexRewrite.firedBatch.get()
+      val df = graft.search.KnnExact.topK(q, emb, 10)
+      assert(candidateIns(df.queryExecution.optimizedPlan).isEmpty)
+      assert(AnnIndexRewrite.firedBatch.get() === before,
+        "null query vector: the batch rewrite must decline")
     } finally {
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()
@@ -742,8 +765,8 @@ class AnnRewriteSpec extends GraftSpec {
   /** `−dot(q, e)` ascending + limit — KnnExact.topKDot's single-query
     * shape, the declarative MIPS pattern the ip metric matches.
     */
-  private def ipPattern(qv: Array[Float]): DataFrame =
-    emb.select($"vec_id",
+  private def ipPattern(qv: Array[Float], src: => DataFrame = emb): DataFrame =
+    src.select($"vec_id",
         (-VectorExpressions.dot(typedLit(qv), $"embedding")).as("nip"))
       .orderBy($"nip", $"vec_id")
       .limit(10)
@@ -830,6 +853,78 @@ class AnnRewriteSpec extends GraftSpec {
         "the scan side carries the candidate-id predicate")
       assert(collectBatch(df) === expected,
         "batch ip acceleration must not change any query's exact top-k")
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      AnnIndexRewrite.clear()
+    }
+  }
+
+  test("filtered cells of the cosine and ip rows: the filtered counter fires, rows exact") {
+    // Three cells of the metric x (single, batch) x (filtered or not)
+    // matrix that no other case here reaches: the filtered single-query
+    // cosine and ip shapes and the filtered batch ip shape. Each goes
+    // through the same probe vector, candidate and survivor steps as its
+    // L2 sibling, so each must fire its filtered counter, splice a
+    // candidate-id predicate and keep the exact plan's rows.
+    VectorExpressions.ensureRegistered(spark)
+    def labelled = emb.filter($"label" === 3)
+    def single(df: DataFrame): Seq[Any] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val shapes = Seq[(String, () => Unit, () => DataFrame, DataFrame => Seq[Any],
+        java.util.concurrent.atomic.AtomicLong)](
+      ("single cosine filtered", () => registerCosine(),
+        () => cosinePattern(qv0, labelled), single, AnnIndexRewrite.firedFiltered),
+      ("single ip filtered", () => registerIp(),
+        () => ipPattern(qv0, labelled), single, AnnIndexRewrite.firedFiltered),
+      ("batch ip filtered", () => registerIp(),
+        () => graft.search.KnnExact.topKDot(batchQueries, labelled, 10), collectBatch,
+        AnnIndexRewrite.firedBatchFiltered))
+    shapes.foreach { case (name, register, pat, rows, counter) =>
+      AnnIndexRewrite.clear()
+      val expected = rows(pat())
+      assert(expected.nonEmpty && expected.size % 10 === 0, s"$name: fixture sanity")
+      register()
+      spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
+      try {
+        val before = counter.get()
+        val df = pat()
+        assert(candidateIns(df.queryExecution.optimizedPlan).nonEmpty,
+          s"$name: the filtered scan side carries the candidate-id predicate")
+        assert(counter.get() > before, s"$name: the filtered counter fired")
+        assert(rows(df) === expected, s"$name: acceleration must not change the exact rows")
+      } finally {
+        spark.experimental.extraOptimizations = Nil
+        AnnIndexRewrite.clear()
+      }
+    }
+  }
+
+  test("plan-time Spark jobs per shape, with the graphs resident and cold plan caches") {
+    // What the optimizer runs for one plan of each L2 shape: the single
+    // query probes in one job and the filtered one adds one survivor
+    // collect; the batch shapes collect their query side once (a
+    // bounded limit collect), probe in one job and, filtered, add one
+    // survivor collect. resetPlanCaches() before each plan, so every
+    // plan pays its probe instead of reading the memo.
+    VectorExpressions.ensureRegistered(spark)
+    AnnIndexRewrite.clear()
+    registerExhaustive()
+    spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
+    try {
+      val shapes = Seq[(String, () => DataFrame, Int)](
+        ("single", () => pattern(qv0), 1),
+        ("single filtered", () => filteredPattern(qv0), 2),
+        ("batch", () => batchPattern, 2),
+        ("batch filtered", () => batchFilteredPattern, 3))
+      // the first probe collects the centroids and makes the graphs resident
+      shapes.foreach { case (_, pat, _) => pat().queryExecution.optimizedPlan }
+      for (round <- 1 to 2; (name, pat, jobs) <- shapes) {
+        AnnIndexRewrite.resetPlanCaches()
+        val df = pat()
+        val planned = SparkWork.of(spark)(df.queryExecution.optimizedPlan)
+        assert(candidateIns(df.queryExecution.optimizedPlan).nonEmpty, s"$name: the rule fired")
+        assert(planned.jobs === jobs, s"round $round, $name: plan-time jobs $planned")
+      }
     } finally {
       spark.experimental.extraOptimizations = Nil
       AnnIndexRewrite.clear()

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.CheckpointDirs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -21,16 +25,10 @@ class MaterializeReliableSpec extends GraftSpec {
 
   private lazy val ckptDir = GraftSpec.tempDir("graft_reliable_spec").toString
 
-  private def checkpointDirs: Set[Path] =
-    spark.sparkContext.getCheckpointDir.map(new Path(_)).toSeq.flatMap { d =>
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).map(_.getPath).filter(_.getName.startsWith("rdd-")).toSeq
-    }.toSet
-
   /** Run `body` under the reliable strategy and `check` its result with
-    * the `rdd-*` dirs it wrote under the context checkpoint dir; then
-    * delete those dirs and restore the default strategy and the
+    * the `rdd-*` dirs it wrote under the context checkpoint dir — made
+    * while it ran, whether or not its own releases deleted them since;
+    * then delete those left and restore the default strategy and the
     * context's checkpoint dir (the first reliable use in a JVM sets it,
     * from `spark.graft.materialize.dir` when given).
     */
@@ -39,9 +37,7 @@ class MaterializeReliableSpec extends GraftSpec {
       spark.conf.set("spark.graft.materialize", "reliable")
       spark.conf.set("spark.graft.materialize.dir", ckptDir)
       try {
-        val before = checkpointDirs
-        val out = body
-        val written = checkpointDirs -- before
+        val (out, written) = RecordingLocalFs.recording(spark.sparkContext.hadoopConfiguration)(body)
         try check(out, written)
         finally written.foreach(p =>
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true))
@@ -55,6 +51,11 @@ class MaterializeReliableSpec extends GraftSpec {
     val leaves = df.queryExecution.analyzed.collectLeaves().collect { case lr: LogicalRDD => lr }
     leaves.nonEmpty && leaves.forall(_.rdd.getCheckpointFile.isDefined)
   }
+
+  private def checkpointDirOf(df: DataFrame): Path = new Path(
+    df.queryExecution.analyzed.collectLeaves().collectFirst {
+      case lr: LogicalRDD if lr.rdd.getCheckpointFile.isDefined => lr.rdd.getCheckpointFile.get
+    }.get)
 
   private def pairsOf(df: DataFrame): Seq[(Long, Long)] =
     df.select("id_a", "id_b").as[(Long, Long)].collect().toSeq.sorted
@@ -134,5 +135,63 @@ class MaterializeReliableSpec extends GraftSpec {
       assert(pairs === local)
     }
     Materialize.releaseTransients()
+  }
+
+  test("releaseOne, releaseTransients and releaseAll delete the released frame's checkpoint dir") {
+    // a reliable checkpoint is files, not cached blocks: releasing the
+    // frame must remove its rdd-* dir, whichever lifetime it had
+    val lifetimes = Seq[(String, DataFrame => DataFrame, DataFrame => Unit)](
+      ("releaseOne", df => Materialize.materializeOnly(df), df => Materialize.releaseOne(df)),
+      ("releaseTransients", df => Materialize(df), _ => Materialize.releaseTransients()),
+      // releaseAll through clearCaches, which also drops the shared-frame
+      // slots that read pinned frames
+      ("releaseAll", df => Materialize.pin(df), _ => SparkEntry.clearCaches()))
+    lifetimes.foreach { case (name, make, release) =>
+      reliably {
+        val df = make(spark.range(0, 64, 1, 2).toDF("id"))
+        val dir = checkpointDirOf(df)
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val written = fs.exists(dir)
+        release(df)
+        (dir, written, fs.exists(dir))
+      } { case ((dir, written, left), made) =>
+        assert(written && made === Set(dir), s"$name: the frame sits on a reliable checkpoint at $dir")
+        assert(!left, s"$name must delete $dir")
+      }
+    }
+  }
+}
+
+/** A local file system that records every `rdd-*` dir made through it:
+  * a release deletes its frame's reliable checkpoint, so the dirs an
+  * operator made and already released are only seen as they are made.
+  */
+class RecordingLocalFs extends LocalFileSystem {
+  private def record(f: Path): Unit =
+    if (f.getName.startsWith("rdd-")) RecordingLocalFs.made.add(makeQualified(f))
+  override def mkdirs(f: Path): Boolean = { record(f); super.mkdirs(f) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    record(f)
+    super.mkdirs(f, permission)
+  }
+}
+
+object RecordingLocalFs {
+  private val made = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** Run `body` with every `file:` file system `conf` hands out a new
+    * RecordingLocalFs, and return its result with the `rdd-*` dirs made
+    * meanwhile; `conf` is restored afterwards.
+    */
+  def recording[T](conf: Configuration)(body: => T): (T, Set[Path]) = {
+    val keys = Seq("fs.file.impl" -> classOf[RecordingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
+    made.clear()
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      val out = body
+      (out, made.asScala.toSet)
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 }

@@ -66,22 +66,26 @@ class MaterializeSpec extends GraftSpec {
       s"releaseTransients must unpersist minHash's checkpoint, left: ${persistedIds intersect mine}")
   }
 
-  test("reliable strategy checkpoints to the configured dir and survives release") {
+  test("reliable strategy checkpoints to the configured dir and release deletes them") {
     val dir = GraftSpec.tempDir("graft_mat_spec").toString
     spark.conf.set("spark.graft.materialize", "reliable")
     spark.conf.set("spark.graft.materialize.dir", dir)
+    def filesUnder: Boolean = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
+      var found = false
+      while (files.hasNext) { if (files.next().toFile.isFile) found = true }
+      found
+    }
     try {
       val df = Materialize(spark.range(300).toDF("id"))
       assert(df.count() === 300)
       assert(spark.sparkContext.getCheckpointDir.isDefined,
         "reliable strategy must set the context checkpoint dir")
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator()
-      var found = false
-      while (files.hasNext) { if (files.next().toFile.isFile) found = true }
-      assert(found, "reliable checkpoint must write files under the configured dir")
+      assert(filesUnder, "reliable checkpoint must write files under the configured dir")
       Materialize.releaseTransients() // must not throw on reliable frames
-      assert(df.count() === 300, "a reliable checkpoint survives block release")
+      // a released frame is not read again (the Materialize contract), so
+      // its checkpoint files go with it instead of outliving the session
+      assert(!filesUnder, "releasing a reliable checkpoint deletes its files")
     } finally {
       spark.conf.unset("spark.graft.materialize")
       spark.conf.unset("spark.graft.materialize.dir")

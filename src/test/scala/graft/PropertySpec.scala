@@ -549,6 +549,36 @@ class PropertySpec extends GraftSpec {
     assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
   }
 
+  test("property: a fpBp-shaped cast of an out-of-range discount raises, never returns null") {
+    // fpBp = (c cast decimal(6,4)) · 10⁴ cast long: a discount past
+    // decimal(6,4)'s 99.9999 would be NULL without ANSI and drop out of
+    // every sum silently; under ANSI the cast raises
+    val bp = (col("d").cast("decimal(6,4)") * lit(10000)).cast("long")
+    val ok = spark.range(0, 2, 1, 2).select((lit(BigDecimal("0.05")) + col("id")).as("d"))
+    assert(ok.select(bp).collect().map(_.getLong(0)).sorted.toSeq === Seq(500L, 10500L))
+    val wide = spark.range(0, 2, 1, 2).select((lit(BigDecimal("123.45")) + col("id")).as("d"))
+    val e = intercept[ArithmeticException](wide.select(bp).collect())
+    assert(e.getMessage.contains("NUMERIC_VALUE_OUT_OF_RANGE"), e.getMessage)
+  }
+
+  test("property: q1's hi/lo charge split raises on a hi sum past 2^63, never wraps") {
+    // q1's charge E·(1−D)·(1+T)·10¹⁰ near the largest value a long holds
+    // (price 898,000,000.00, discount 0.05, tax 0.08), split at 2³⁰: one
+    // row's hi part is ~8.6e9, so ~1.075e9 rows carry Σhi past 2⁶³
+    val priceC = (lit(BigDecimal("898000000.00")).cast("decimal(14,2)") * lit(100)).cast("long")
+    val discBp = (lit(BigDecimal("0.05")).cast("decimal(6,4)") * lit(10000)).cast("long")
+    val taxBp = (lit(BigDecimal("0.08")).cast("decimal(6,4)") * lit(10000)).cast("long")
+    val chargeE10 = priceC * (lit(10000L) - discBp) * (lit(10000L) + taxBp)
+    val hi = shiftright(chargeE10, 30)
+    val lo = chargeE10.bitwiseAND(lit(1073741823L))
+    val one = spark.range(0, 1).select(chargeE10, hi, lo).head()
+    assert(one.getLong(0) === 9213480000000000000L, "one row's charge fits a long")
+    assert(one.getLong(1) * 1073741824L + one.getLong(2) === one.getLong(0))
+    val rows = spark.range(0, 1100000000L, 1, 4).select(hi.as("hi"), lo.as("lo"))
+    val e = intercept[ArithmeticException](rows.agg(sum(col("hi")), sum(col("lo"))).collect())
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
+  }
+
   test("property: q1's fixed-point reconstructs equal the decimal-sum doubles bit-for-bit") {
     // the r22 revenue-family sweep: every graded q1 column from LONG
     // sums must be BIT identical to the decimal-sum form per group —
